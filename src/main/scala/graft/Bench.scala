@@ -184,63 +184,33 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Generated-class cache sized for the surface (round 15). The default
-    // (spark.sql.codegen.cache.maxEntries = 100) holds ~15 queries' worth
-    // of whole-stage/expression classes, so by the time sweep 2 reaches a
-    // query, the 364 queries in between have evicted every class it
-    // compiled in sweep 1 and "min of two" still measures a Janino
-    // compile per query (~1-2 s on the heavy plans — the A/B probe
-    // measured q310 at 3.2 s bench-steady vs 1.5 s codegen-warm with
-    // IDENTICAL execution). A resident engine serving this surface keeps
-    // its compiled operators; the cache holds CODE keyed by generated
-    // source, never data or results — every invocation still computes
-    // from the parquet inputs (catalog cache is cleared between queries).
-    // Scale-independent (a cluster driver compiles the same classes), and
-    // parameterised: SPARK_GRAFT_CODEGEN_CACHE overrides, 0 disables.
-    val codegenCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "32768")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the generated-class cache is sized for the whole surface
+    // (Session.CodegenCacheEntries): with Spark's default of 100 entries the
+    // 364 queries between two runs of a query evict every class it
+    // compiled, and "min of two" would still measure a Janino compile per
+    // query (~1-2 s on the heavy plans). Every invocation still computes
+    // from the parquet inputs; the catalog cache is cleared between queries.
+    val spark = Session()
     // warm the session so the first query of the first sweep doesn't absorb
     // FileIndex/parquet-reader startup cost on top of its own codegen
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     catch { case _: Throwable => }
     // JIT/codegen warm-up (untimed), on the smallest sibling fixture when
-    // present. Until round 15 this was ~15 representatives — with the
-    // 100-entry default codegen cache, pre-compiling the full surface
-    // would have evicted itself. With the cache sized for the surface
-    // (above), the warm-up runs EVERY query once at sf0.001: each query's
-    // generated classes are compiled and C2-JIT'd here, so both timed
-    // sweeps measure a codegen-warm resident engine and the sweep1/sweep2
-    // wall ratio keeps meaning host contention, not "sweep 1 paid every
-    // Janino compile" (round-15 measurement: a cold sweep 1 runs ~1.35×
-    // the warm sweep 2 — right at the 1.4 contention threshold on an
-    // idle host). Generated source is scale-independent for all but the
-    // few corpus-parameter-derived plans (banded LSH tables), so sf0.001
-    // warming covers the sf0.1/sf1 sweeps. A small cache (env override
-    // < 4096) falls back to the old representative list — full-surface
-    // warming would thrash such a cache.
+    // present: EVERY query runs once at sf0.001, so its generated classes
+    // are compiled and C2-JIT'd here and both timed sweeps measure a
+    // codegen-warm resident engine; the sweep1/sweep2 wall ratio keeps
+    // meaning host contention, not "sweep 1 paid every Janino compile"
+    // (round-15 measurement: a cold sweep 1 runs ~1.35× the warm sweep 2 —
+    // right at the 1.4 contention threshold on an idle host). Generated
+    // source is scale-independent for all but the few
+    // corpus-parameter-derived plans (banded LSH tables), so sf0.001
+    // warming covers the sf0.1/sf1 sweeps.
     val warmDir = {
       val sib = java.nio.file.Paths.get(sfDir).toAbsolutePath.resolveSibling("sf0.001")
       if (java.nio.file.Files.isDirectory(sib)) sib.toString else sfDir
     }
-    val warmNames =
-      if (scala.util.Try(codegenCache.toInt).getOrElse(0) >= 4096)
-        SparkEntry.queries.keys.toSeq.sorted
-      else Seq(
-        "q01_pricing_summary", "q06_dim_join_left", "q09_topk_peak",
-        "q10_minute_counts", "q16_topn_per_group", "q19_json_props",
-        "q21_token_stats", "q25_minhash_pairs", "q27_knn_cosine",
-        "q31_binary_meta", "q38_approx_sketches", "q50_seq_packing",
-        "q83_bpe_vocab", "q94_pii_redact", "q113_funnel")
-        .filter(SparkEntry.queries.contains)
     val warmStart = System.nanoTime()
-    sweep(spark, warmDir, warmNames)
+    sweep(spark, warmDir)
     // Warm the PERSISTED derivation stores for the bench corpus itself
     // (cluster table, PCA model, k-means model): each is a pure
     // once-per-corpus derivation that every later query/session loads,
@@ -357,7 +327,7 @@ object Bench {
         s""""total_cold":$totalCold,"queries_cold":${toJson(first)},""" +
         s""""contended":$contendedOut,"warmup_wall_sec":$warmWallSec,""" +
         s""""stores":${toJson(storeSecs.toSeq)},""" +
-        s""""codegen_cache":"$codegenCache",""" +
+        s""""codegen_cache":"${Session.CodegenCacheEntries}",""" +
         s""""sweep1_wall_sec":$firstWallSec,""" +
         s""""sweep2_wall_sec":$secondWallSec,"sweep2_queries":${second.size},""" +
         s""""steady_state_n":${steady.size},""" +

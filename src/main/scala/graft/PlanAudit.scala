@@ -1,22 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted physical plans for representative queries so
   * pushdown / broadcast / codegen can be audited (`sbt "runMain
   * graft.PlanAudit [query...]"`). */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    // bench-condition overrides (round 15): plan shape depends on the data
-    // scale (file sizes drive broadcast estimates and the FanOut split
-    // heuristic) and the core count, so committed plan artifacts must be
-    // captured at the same sfDir/cpus the bench runs — the old hardcoded
-    // local[4]/sf0.01 stays the default for quick interactive audits
+    // plan shape depends on the data scale (file sizes drive broadcast
+    // estimates and the FanOut split heuristic) and the core count, so
+    // committed plan artifacts must be captured at the sfDir and core
+    // count the bench runs
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     // flags are stripped BEFORE the empty-check so `-executed` alone
     // still audits the default queries
     val (flags, given) = args.toSeq.partition(_.startsWith("-"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: standalone steady-state timing of individual queries at
   * bench settings (two runs each — the first absorbs JIT/codegen, the
   * second is the steady-state figure PERF.md quotes).
@@ -9,19 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // honors the bench's core-count contract so scaling probes (8 vs 32
-    // cores at sf1, round-16 verdict item 6) use the same harness
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // measurement parity with Bench: a resident engine's codegen cache
-      // (the default 100 entries can evict a single heavy query's own
-      // classes between two back-to-back runs)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "32768"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // warmup scan (JIT/codegen); docs-only slices have no lineitem
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     catch { case _: Throwable =>

@@ -28,70 +28,35 @@ object SparkEntry {
       .orderBy($"entity_id", $"minute_start")
   }
 
+  /** Every query file, in one list. */
+  private val querySets: Seq[graft.queries.QuerySet] = {
+    import graft.queries._
+    Seq(
+      CoreQueries, ExtQueries, AdvQueries, CurateQueries, ExtraQueries, Wave3Queries,
+      Wave4Queries, Wave6Queries, Wave7Queries, Wave8Queries, Wave9Queries, Wave10Queries,
+      Wave11Queries, Wave12Queries, Wave13Queries, Wave14Queries, Wave15Queries, Wave16Queries,
+      Wave17Queries, Wave18Queries, Wave19Queries, Wave20Queries, Wave21Queries, Wave22Queries,
+      Wave23Queries, Wave24Queries, Wave25Queries, Wave26Queries, Wave27Queries, Wave28Queries,
+      Wave29Queries, Wave30Queries, Wave31Queries, Wave32Queries, Wave33Queries, Wave34Queries,
+      Wave35Queries, Wave36Queries, Wave37Queries, Wave38Queries, Wave39Queries, Wave40Queries,
+      Wave41Queries, Wave42Queries, Wave43Queries, Wave44Queries, Wave45Queries, Wave46Queries,
+      Wave47Queries, Wave48Queries, Wave49Queries, Wave50Queries, Wave51Queries, Wave52Queries,
+      Wave53Queries, Wave54Queries, Wave55Queries, Wave56Queries, Wave57Queries, Wave58Queries)
+  }
+
+  /** `entries` as a map; throws if a name repeats, so no query file can
+    * silently replace another's query. */
+  private[graft] def registry[V](entries: Seq[(String, V)]): Map[String, V] = {
+    val repeated = entries.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+    require(repeated.isEmpty, s"query names defined twice: ${repeated.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.CoreQueries.queries ++ graft.queries.ExtQueries.queries ++
-      graft.queries.AdvQueries.queries ++ graft.queries.CurateQueries.queries ++
-      graft.queries.ExtraQueries.queries ++ graft.queries.Wave3Queries.queries ++
-      graft.queries.Wave4Queries.queries ++ graft.queries.Wave6Queries.queries ++
-      graft.queries.Wave7Queries.queries ++ graft.queries.Wave8Queries.queries ++
-      graft.queries.Wave9Queries.queries ++ graft.queries.Wave10Queries.queries ++
-      graft.queries.Wave11Queries.queries ++ graft.queries.Wave12Queries.queries ++
-      graft.queries.Wave13Queries.queries ++ graft.queries.Wave14Queries.queries ++
-      graft.queries.Wave15Queries.queries ++ graft.queries.Wave16Queries.queries ++
-      graft.queries.Wave17Queries.queries ++ graft.queries.Wave18Queries.queries ++
-      graft.queries.Wave19Queries.queries ++ graft.queries.Wave20Queries.queries ++
-      graft.queries.Wave21Queries.queries ++ graft.queries.Wave22Queries.queries ++
-      graft.queries.Wave23Queries.queries ++ graft.queries.Wave24Queries.queries ++
-      graft.queries.Wave25Queries.queries ++ graft.queries.Wave26Queries.queries ++
-      graft.queries.Wave27Queries.queries ++ graft.queries.Wave28Queries.queries ++
-      graft.queries.Wave29Queries.queries ++ graft.queries.Wave30Queries.queries ++
-      graft.queries.Wave31Queries.queries ++ graft.queries.Wave32Queries.queries ++
-      graft.queries.Wave33Queries.queries ++ graft.queries.Wave34Queries.queries ++
-      graft.queries.Wave35Queries.queries ++ graft.queries.Wave36Queries.queries ++
-      graft.queries.Wave37Queries.queries ++ graft.queries.Wave38Queries.queries ++
-      graft.queries.Wave39Queries.queries ++ graft.queries.Wave40Queries.queries ++
-      graft.queries.Wave41Queries.queries ++ graft.queries.Wave42Queries.queries ++
-      graft.queries.Wave43Queries.queries ++ graft.queries.Wave44Queries.queries ++
-      graft.queries.Wave45Queries.queries ++ graft.queries.Wave46Queries.queries ++
-      graft.queries.Wave47Queries.queries ++ graft.queries.Wave48Queries.queries ++
-      graft.queries.Wave49Queries.queries ++ graft.queries.Wave50Queries.queries ++
-      graft.queries.Wave51Queries.queries ++ graft.queries.Wave52Queries.queries ++
-      graft.queries.Wave53Queries.queries ++ graft.queries.Wave54Queries.queries ++
-      graft.queries.Wave55Queries.queries ++ graft.queries.Wave56Queries.queries ++
-      graft.queries.Wave57Queries.queries ++ graft.queries.Wave58Queries.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry(querySets.flatMap(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.CoreQueries.oracle ++ graft.queries.ExtQueries.oracle ++
-      graft.queries.AdvQueries.oracle ++ graft.queries.CurateQueries.oracle ++
-      graft.queries.ExtraQueries.oracle ++ graft.queries.Wave3Queries.oracle ++
-      graft.queries.Wave4Queries.oracle ++ graft.queries.Wave6Queries.oracle ++
-      graft.queries.Wave7Queries.oracle ++ graft.queries.Wave8Queries.oracle ++
-      graft.queries.Wave9Queries.oracle ++ graft.queries.Wave10Queries.oracle ++
-      graft.queries.Wave11Queries.oracle ++ graft.queries.Wave12Queries.oracle ++
-      graft.queries.Wave13Queries.oracle ++ graft.queries.Wave14Queries.oracle ++
-      graft.queries.Wave15Queries.oracle ++ graft.queries.Wave16Queries.oracle ++
-      graft.queries.Wave17Queries.oracle ++ graft.queries.Wave18Queries.oracle ++
-      graft.queries.Wave19Queries.oracle ++ graft.queries.Wave20Queries.oracle ++
-      graft.queries.Wave21Queries.oracle ++ graft.queries.Wave22Queries.oracle ++
-      graft.queries.Wave23Queries.oracle ++ graft.queries.Wave24Queries.oracle ++
-      graft.queries.Wave25Queries.oracle ++ graft.queries.Wave26Queries.oracle ++
-      graft.queries.Wave27Queries.oracle ++ graft.queries.Wave28Queries.oracle ++
-      graft.queries.Wave29Queries.oracle ++ graft.queries.Wave30Queries.oracle ++
-      graft.queries.Wave31Queries.oracle ++ graft.queries.Wave32Queries.oracle ++
-      graft.queries.Wave33Queries.oracle ++ graft.queries.Wave34Queries.oracle ++
-      graft.queries.Wave35Queries.oracle ++ graft.queries.Wave36Queries.oracle ++
-      graft.queries.Wave37Queries.oracle ++ graft.queries.Wave38Queries.oracle ++
-      graft.queries.Wave39Queries.oracle ++ graft.queries.Wave40Queries.oracle ++
-      graft.queries.Wave41Queries.oracle ++ graft.queries.Wave42Queries.oracle ++
-      graft.queries.Wave43Queries.oracle ++ graft.queries.Wave44Queries.oracle ++
-      graft.queries.Wave45Queries.oracle ++ graft.queries.Wave46Queries.oracle ++
-      graft.queries.Wave47Queries.oracle ++ graft.queries.Wave48Queries.oracle ++
-      graft.queries.Wave49Queries.oracle ++ graft.queries.Wave50Queries.oracle ++
-      graft.queries.Wave51Queries.oracle ++ graft.queries.Wave52Queries.oracle ++
-      graft.queries.Wave53Queries.oracle ++ graft.queries.Wave54Queries.oracle ++
-      graft.queries.Wave55Queries.oracle ++ graft.queries.Wave56Queries.oracle ++
-      graft.queries.Wave57Queries.oracle ++ graft.queries.Wave58Queries.oracle
+  val oracleSql: Map[String, String] = registry(querySets.flatMap(_.oracle))
 }

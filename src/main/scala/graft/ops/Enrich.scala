@@ -19,10 +19,6 @@ object Enrich {
   def withDim(fact: DataFrame, dim: DataFrame, keys: Seq[String]): DataFrame =
     fact.join(broadcast(dim), keys, "left")
 
-  /** Inner variant for mandatory dimensions. */
-  def withDimInner(fact: DataFrame, dim: DataFrame, keys: Seq[String]): DataFrame =
-    fact.join(broadcast(dim), keys, "inner")
-
   /** Left-semi "EXISTS" join — big-side rows with at least one match.
     * Semi joins shuffle only keys on the probe side and never duplicate
     * rows, so they beat `inner + distinct` at scale. */

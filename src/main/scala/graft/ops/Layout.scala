@@ -6,8 +6,6 @@ import org.apache.spark.sql.functions._
 /** Physical-layout operators — the storage-side levers that decide whether
   * a 100 TB join shuffles or not.
   *
-  *  - date/key partitioned writes → partition pruning for every downstream
-  *    read with a matching predicate;
   *  - bucketed tables (hash-clustered by join key, sorted within buckets)
   *    → repeated equi-joins and aggregations on the bucket key plan with
   *    NO Exchange at all: both sides arrive pre-partitioned, so the join
@@ -16,11 +14,6 @@ import org.apache.spark.sql.functions._
   *    lever for a fact table joined daily on the same key.
   */
 object Layout {
-
-  /** Hive-style partitioned parquet write (append-friendly, prunable). */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String],
-                       mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
 
   /** Bucketed + sorted table registered in the session catalog (bucketing
     * metadata lives in the metastore, so this is saveAsTable, not a bare

@@ -10,15 +10,6 @@ import org.apache.spark.sql.functions._
   */
 object Windows {
 
-  /** A1/A2/A4 batch analog — tumbling 1-minute aggregation keyed by an
-    * entity column (ref `gold_aggregation.py:52-86` computes avg/max per
-    * (bridge_id, 1-min window)). The groupBy keys hash-partition the
-    * shuffle; partial aggregation runs map-side, so at 100 TB the exchange
-    * carries only (key → partial state), not rows. */
-  def minuteAgg(df: DataFrame, entity: String, tsCol: String, aggs: Seq[Column]): DataFrame =
-    df.groupBy(col(entity), date_trunc("minute", col(tsCol)).as("minute_start"))
-      .agg(aggs.head, aggs.tail: _*)
-
   /** Gaps-and-islands sessionization: a new session starts after `gapMin`
     * minutes of inactivity. Two narrow window functions over one
     * hash-partition by user — a single shuffle, no self-join. */

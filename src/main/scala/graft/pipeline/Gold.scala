@@ -74,7 +74,8 @@ object Pipelines {
   /** Continuous mode: all 7 queries live at once on micro-batch triggers.
     * Unlike the reference (which blocks on only its *first* query and so
     * never notices the other queries failing, `bronze_ingest.py:105`),
-    * this surfaces the first failure from any query. */
+    * a caller blocking on `spark.streams.awaitAnyTermination()` sees the
+    * first failure from any query. */
   def startContinuous(spark: SparkSession, cfg: PipelineConfig,
                       trigger: Trigger): Seq[StreamingQuery] = {
     cfg.applySessionConf(spark)
@@ -82,7 +83,4 @@ object Pipelines {
       Silver.startAll(spark, cfg, trigger) :+
       Gold.start(spark, cfg, trigger)
   }
-
-  def awaitAny(spark: SparkSession): Unit =
-    spark.streams.awaitAnyTermination()
 }

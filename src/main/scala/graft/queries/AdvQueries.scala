@@ -9,8 +9,7 @@ import graft.ops.{AsOf, Bpe, Classify, Dedup, Exact, Layout, Normalize, RangeJoi
 /** Advanced relational surface: as-of join, rollup, conditional pivot,
   * exact distinct counts, exact-arithmetic correlation. All oracle-backed.
   */
-object AdvQueries {
-  type Q = (SparkSession, String) => DataFrame
+object AdvQueries extends QuerySet {
 
   /** As-of join: each purchase enriched with the user's most recent view
     * value at-or-before the purchase time (oracle: DuckDB ASOF LEFT JOIN).
@@ -578,7 +577,7 @@ object AdvQueries {
       .orderBy($"event_type", $"grid_ts")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q40_bpeish_tokens"   -> q40,
     "q41_knn_ivf"         -> q41,
     "q60_interval_join"   -> q60,
@@ -619,7 +618,7 @@ object AdvQueries {
   private val ddGamma: Double = Sketches.gammaFor(0.01)
   private val ddLnGamma: Double = math.log(ddGamma)
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q70_sketch_day_rollup" ->
       s"""WITH b AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,

@@ -12,9 +12,7 @@ import graft.ops.{Derive, Enrich, Exact, Quality, Windows}
   * [[graft.ops.Exact]] (decimal-exact, engine-order-independent); integer
   * results are cast so Spark and DuckDB agree on width.
   */
-object CoreQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CoreQueries extends QuerySet {
 
   /** TPC-H Q1-shaped pricing summary — grouped sum/avg/count over lineitem
     * (A-family aggregates, P4 aliasing; ref agg shape
@@ -237,7 +235,7 @@ object CoreQueries {
       .orderBy($"event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q01_pricing_summary"   -> q01,
     "q02_event_filter"      -> q02,
     "q03_dq_split_valid"    -> q03,
@@ -265,7 +263,7 @@ object CoreQueries {
   private def dsumS(x: String) = s"sum(CAST(round(($x) * 10000, 0) AS BIGINT)) / 10000.0"
   private def davgS(x: String) = s"${dsumS(x)} / count($x)"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q01_pricing_summary" ->
       s"""SELECT l_returnflag, l_linestatus,
          |  ${dsumS("l_quantity")} AS sum_qty,

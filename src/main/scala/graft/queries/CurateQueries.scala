@@ -10,8 +10,7 @@ import graft.ops.{Curate, Sampling, Text}
   * bucketing. Every entry is fully oracle-checkable — the operators are
   * built from engine-portable expressions (shared regex subset, md5
   * thresholds, decimal rounding) precisely so DuckDB can replay them. */
-object CurateQueries {
-  type Q = (SparkSession, String) => DataFrame
+object CurateQueries extends QuerySet {
 
   /** PII redaction ([[Curate.redactPii]]). The synthetic corpus carries
     * no PII, so the query plants deterministic email/phone/IPv4 strings
@@ -164,7 +163,7 @@ object CurateQueries {
       .orderBy($"lang")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q100_data_card"      -> q100,
     "q94_pii_redact"      -> q94,
     "q95_temperature_mix" -> q95,
@@ -173,7 +172,7 @@ object CurateQueries {
     "q98_ppl_buckets_scaled" -> q98,
     "q99_leakage_free_split" -> q99)
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q100_data_card" ->
       """WITH m AS (SELECT doc_id,
         |    len(string_split(text, ' ')) AS n_words,

@@ -11,8 +11,7 @@ import graft.ops.{Dedup, Exact, Multimodal, Packing, Quality, Sampling, Similari
   * operators (minhash, simhash, LSH kNN, winnowing) are rows-only checked
   * and covered by ScalaTest instead.
   */
-object ExtQueries {
-  type Q = (SparkSession, String) => DataFrame
+object ExtQueries extends QuerySet {
 
   /** Exact dedup groups by content hash (survivor id + copy count). */
   private val q20: Q = (s, d) => {
@@ -616,7 +615,7 @@ object ExtQueries {
       .orderBy($"lang", $"rnk")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q66_top_tokens"        -> q66,
     "q62_source_contam"     -> q62,
     "q61_token_entropy"     -> q61,
@@ -709,7 +708,7 @@ object ExtQueries {
   // last ulp and the hex thresholds must match bit-for-bit)
   private val splitThresholds: Seq[Double] = Seq(0.8, 0.1, 0.1).scanLeft(0.0)(_ + _).tail
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q66_top_tokens" ->
       """WITH t AS (SELECT lang, unnest(string_split(text, ' ')) AS token FROM documents),
         |c AS (SELECT lang, token, count(*) AS cnt FROM t GROUP BY lang, token),

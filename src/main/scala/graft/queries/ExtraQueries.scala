@@ -11,8 +11,7 @@ import graft.ops.{Bpe, Dedup, Similarity, Sketches, Text}
   * per-language tokenizer fertility. All but fertility (iterative BPE —
   * not SQL-expressible, golden-pinned) are DuckDB-oracle-checked via the
   * repo's engine-portable md5/decimal discipline. */
-object ExtraQueries {
-  type Q = (SparkSession, String) => DataFrame
+object ExtraQueries extends QuerySet {
 
   /** The synthetic corpus has zero exact duplicates at small SF, so the
     * duplication queries plant them deterministically (q94's precedent for
@@ -261,7 +260,7 @@ object ExtraQueries {
       .orderBy($"shard")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q112_shard_manifest" -> q112,
     "q110_mad_outliers" -> q110,
     "q111_ann_recall"  -> q111,
@@ -283,7 +282,7 @@ object ExtraQueries {
       |  UNION ALL SELECT doc_id + 2000000, text, 'mirror' FROM documents
       |    WHERE doc_id % 5 = 0)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q101_countmin" ->
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         |tf AS (SELECT token, count(*) AS true_cnt FROM tok GROUP BY token),

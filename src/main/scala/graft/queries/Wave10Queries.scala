@@ -9,8 +9,7 @@ import graft.ops.{Dedup, Similarity, Windows}
   * top session paths, contrastive triplet mining, a Jaccard-threshold
   * sweep, and time-to-conversion survival summaries. All five are
   * DuckDB-oracle-checked. */
-object Wave10Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave10Queries extends QuerySet {
 
   /** q151/q155/q159's planted corpus — shared so the graph family reads
     * one structure. */
@@ -114,7 +113,7 @@ object Wave10Queries {
       .orderBy($"cohort_week")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q164_degree_dist" -> q164,
     "q165_session_paths" -> q165,
     "q166_triplets" -> q166,
@@ -123,7 +122,7 @@ object Wave10Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q164_degree_dist" ->
       s"""WITH ${Wave8Queries.dupEdgeSql},
          |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS degree

@@ -8,8 +8,7 @@ import graft.ops.{Dedup, Text}
 /** Round-9 eleventh-wave queries: a per-column null/distinct profiler,
   * cross-language duplication detection, and the dedup token-gain
   * report. All DuckDB-oracle-checked. */
-object Wave11Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave11Queries extends QuerySet {
 
   private val profileCols = Seq("event_id", "ts", "user_id", "event_type",
     "value", "props")
@@ -86,14 +85,14 @@ object Wave11Queries {
       .orderBy($"lang")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q169_null_profile" -> q169,
     "q170_cross_lang_dup" -> q170,
     "q171_dedup_gain" -> q171)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q169_null_profile" -> {
       val per = profileCols.map { c =>
         s"""SELECT '$c' AS "column", CAST(count(*) AS BIGINT) AS n_rows,

@@ -8,8 +8,7 @@ import graft.ops.{Dedup, Graph}
 /** Round-9 wave-14 queries: triangle/clustering structure of the
   * duplication graph, an A/B lift report with Welch statistics, and
   * seasonal-baseline anomaly detection. All DuckDB-oracle-checked. */
-object Wave12Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave12Queries extends QuerySet {
 
   /** Triangle census of the rare-tile duplication graph
     * ([[Graph.triangles]] over [[Dedup.rareTilePairs]], q155's planted
@@ -96,14 +95,14 @@ object Wave12Queries {
       .limit(30)
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q172_triangles" -> q172,
     "q173_ab_lift" -> q173,
     "q174_seasonal_anomaly" -> q174)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     // Orientation note: the Spark side enumerates each triangle once via
     // the degree-oriented join; the oracle uses the simpler a<b<c
     // canonical orientation — the triangle SET (and so every per-node

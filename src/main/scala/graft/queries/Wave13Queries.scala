@@ -8,8 +8,7 @@ import graft.ops.{Dedup, Graph}
 /** Round-9 wave-15 queries: behavioral segment overlap, k-core of the
   * duplication graph, and the corpus novelty curve over ingestion
   * batches. All DuckDB-oracle-checked. */
-object Wave13Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave13Queries extends QuerySet {
 
   /** Segment overlap matrix: exact user-set Jaccard between every pair
     * of event types — the audience-overlap read behind mixture and
@@ -90,7 +89,7 @@ object Wave13Queries {
       .orderBy($"batch")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q175_segment_overlap" -> q175,
     "q176_kcore" -> q176,
     "q177_novelty" -> q177)
@@ -105,7 +104,7 @@ object Wave13Queries {
        |  JOIN d$i USING (src)
        |  JOIN (SELECT src AS dst FROM d$i) dd$i USING (dst))""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q175_segment_overlap" ->
       """WITH ut AS (SELECT DISTINCT event_type, user_id FROM events),
         |s AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n

@@ -8,8 +8,7 @@ import graft.ops.{Dedup, Graph, Text}
 /** Round-9 wave-16 queries: link prediction over the duplication graph,
   * token burst detection across ingestion batches, and hub-removal
   * ablation of the dedup cluster structure. All DuckDB-oracle-checked. */
-object Wave14Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave14Queries extends QuerySet {
 
   private def plantedDocs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -100,14 +99,14 @@ object Wave14Queries {
       .orderBy($"variant")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q178_link_prediction" -> q178,
     "q179_token_bursts" -> q179,
     "q180_hub_ablation" -> q180)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q178_link_prediction" ->
       s"""WITH ${Wave8Queries.dupEdgeSql},
          |und AS (SELECT src AS a, dst AS b FROM e WHERE src < dst),

@@ -9,8 +9,7 @@ import graft.ops.Text
 /** Round-9 wave-17 queries: exact Kolmogorov–Smirnov length drift per
   * source and bigram conditional entropy per language. Both
   * DuckDB-oracle-checked. */
-object Wave15Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave15Queries extends QuerySet {
 
   private val d189 = org.apache.spark.sql.types.DecimalType(18, 9)
 
@@ -79,13 +78,13 @@ object Wave15Queries {
       .orderBy($"lang")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q181_ks_drift" -> q181,
     "q182_bigram_entropy" -> q182)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q181_ks_drift" ->
       """WITH cnt AS (SELECT source, n_chars, CAST(count(*) AS BIGINT) AS c
         |  FROM documents GROUP BY 1, 2),

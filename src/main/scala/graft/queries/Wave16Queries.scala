@@ -9,8 +9,7 @@ import graft.ops.{Ranking, Text}
 /** Round-9 wave-18 query: reciprocal-rank fusion of two lexical
   * retrieval runs — the hybrid-search combiner. DuckDB-oracle-checked
   * end-to-end (both input rankings replayed, then the fusion). */
-object Wave16Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave16Queries extends QuerySet {
 
   /** RRF fusion ([[Ranking.rrfFuse]]) of q154's BM25 top-10 with a
     * plain term-frequency top-10 over the SAME query set — the exact
@@ -38,11 +37,11 @@ object Wave16Queries {
       .orderBy($"query_id", $"rnk")
   }
 
-  val queries: Map[String, Q] = Map("q183_rrf_fusion" -> q183)
+  val queries: Seq[(String, Q)] = Seq("q183_rrf_fusion" -> q183)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q183_rrf_fusion" ->
       s"""WITH ${Wave8Queries.bm25RunSql},
          |tfp AS (SELECT q.query_id, p.doc, CAST(count(*) AS BIGINT) AS tf

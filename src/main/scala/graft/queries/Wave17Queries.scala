@@ -10,8 +10,7 @@ import graft.ops.{Dedup, Funnel, Text}
   * Dirichlet prior), duplicate-cluster composition/purity, and the
   * stationary distribution of the event-type Markov chain. All
   * DuckDB-oracle-checked. */
-object Wave17Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave17Queries extends QuerySet {
 
   private val D2812 = "decimal(28,12)"
 
@@ -122,7 +121,7 @@ object Wave17Queries {
     pi.select($"state", round($"pi", 9).as("pi")).orderBy($"state")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q184_log_odds_terms" -> q184,
     "q185_cluster_purity" -> q185,
     "q186_markov_stationary" -> q186)
@@ -163,7 +162,7 @@ object Wave17Queries {
        |    round(coalesce(s$i.sw, 0.0), 12) AS pi
        |  FROM sn LEFT JOIN s$i ON sn.state = s$i.to_type)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q184_log_odds_terms" ->
       """WITH cws AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS n_ws
         |  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok

@@ -9,8 +9,7 @@ import graft.ops.Text
 /** Round-9 wave-20 queries: token-mass concentration (Gini) across
   * sources and a Benford first-digit conformance check. Both
   * DuckDB-oracle-checked. */
-object Wave18Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave18Queries extends QuerySet {
 
   /** Token-mass concentration per language: the Gini coefficient of
     * token counts across that language's sources — the one-number
@@ -79,7 +78,7 @@ object Wave18Queries {
       .orderBy($"event_type", $"digit")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q187_gini_sources" -> q187,
     "q188_benford" -> q188)
 
@@ -89,7 +88,7 @@ object Wave18Queries {
     .map { case (dg, p) => s"WHEN digit = $dg THEN CAST($p AS DOUBLE)" }
     .mkString("CASE ", " ", " END")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q187_gini_sources" ->
       """WITH tc AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS x
         |  FROM (SELECT lang, source,

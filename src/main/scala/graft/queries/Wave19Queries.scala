@@ -9,8 +9,7 @@ import graft.ops.Exact
 /** Round-9 wave-21 queries: inter-event gap (think-time) histogram on
   * log2 buckets and the top-decile value-concentration (Pareto) report.
   * Both DuckDB-oracle-checked. */
-object Wave19Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave19Queries extends QuerySet {
 
   /** Log2 bucket boundaries for gaps up to ~2^26 s (~2 years); the
     * CASE ladder is generated from the SAME literals in both engines —
@@ -78,7 +77,7 @@ object Wave19Queries {
       .orderBy($"event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q189_gap_histogram" -> q189,
     "q190_pareto_share" -> q190)
 
@@ -88,7 +87,7 @@ object Wave19Queries {
     s"WHEN g >= $lo THEN CAST($lo AS BIGINT)") :+
     "ELSE CAST(0 AS BIGINT)").mkString("CASE ", " ", " END")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q189_gap_histogram" ->
       s"""WITH g0 AS (SELECT (epoch_us(ts) - epoch_us(lag(ts, 1) OVER (
          |    PARTITION BY user_id ORDER BY ts, event_id))) // 1000000 AS g

@@ -28,8 +28,7 @@ import graft.Tables
   * iterative fit (25 jobs / 10 scans at sf1) to a few-KB parquet read.
   * Golden-pinned (iterative fits have no SQL form; loaded and fitted
   * models are bit-identical, so the goldens pin BOTH paths). */
-object Wave20Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave20Queries extends QuerySet {
 
   /** Cluster-size histogram: how much of the corpus sits in pairs vs
     * deep template families — the first chart of any dedup review (a
@@ -138,7 +137,7 @@ object Wave20Queries {
       .orderBy($"cluster", $"label")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q191_cluster_size_hist" -> q191,
     "q192_dedup_drop_by_source" -> q192,
     "q193_largest_cluster" -> q193,
@@ -150,7 +149,7 @@ object Wave20Queries {
 
   private val ccSql = Wave17Queries.ccSql
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q191_cluster_size_hist" ->
       s"""WITH RECURSIVE
          |$ccSql,

@@ -14,8 +14,7 @@ import graft.ops.{Curate, Packing, Sampling, Text}
   * matrix (which Gopher rule is load-bearing vs redundant), and the
   * split-representativeness check (is val/test distributionally like
   * train AFTER leakage-free splitting). All DuckDB-oracle-checked. */
-object Wave21Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave21Queries extends QuerySet {
 
   /** Context-length truncation loss ([[Packing.truncationReport]]):
     * for each candidate max_seq_len, documents truncated and corpus
@@ -93,7 +92,7 @@ object Wave21Queries {
       .orderBy($"pair")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q197_truncation_loss" -> q197,
     "q198_gate_ablation" -> q198,
     "q199_split_divergence" -> q199)
@@ -123,7 +122,7 @@ object Wave21Queries {
       |    CAST(f_top AS INT) AS n_fails
       |  FROM f)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q197_truncation_loss" ->
       """WITH t AS (SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS tok
         |  FROM documents),

@@ -14,8 +14,7 @@ import graft.ops.Text
   * containment matrix (who syndicates from whom), the quality impact of
   * survivor-policy dedup per source, and the language-ID confusion
   * matrix against the labeled corpus. All DuckDB-oracle-checked. */
-object Wave22Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave22Queries extends QuerySet {
 
   /** Directional source→source content containment: for every ordered
     * source pair, |shingles(A) ∩ shingles(B)| / |shingles(A)| over
@@ -105,7 +104,7 @@ object Wave22Queries {
       .orderBy($"lang", $"predicted_lang")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q200_source_containment" -> q200,
     "q201_dedup_quality_shift" -> q201,
     "q202_langid_confusion" -> q202)
@@ -127,7 +126,7 @@ object Wave22Queries {
        |    ELSE 'zh' END AS predicted_lang FROM s)""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q200_source_containment" ->
       """WITH t AS (SELECT source, string_split(text, ' ') AS w FROM documents),
         |g AS (SELECT DISTINCT source,

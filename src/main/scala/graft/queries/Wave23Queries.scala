@@ -15,8 +15,7 @@ import graft.ops.{Dedup, Graph, Similarity}
   * regularity (the bot-traffic screen), and kNN hubness (the embedding
   * pathology that silently degrades ANN retrieval). All
   * DuckDB-oracle-checked. */
-object Wave23Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave23Queries extends QuerySet {
 
   /** Newman modularity of q159's label-propagation communities over the
     * same duplication graph: per community — nodes, internal directed
@@ -137,14 +136,14 @@ object Wave23Queries {
       .orderBy($"k_occ")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q203_lpa_modularity" -> q203,
     "q204_bot_regularity" -> q204,
     "q205_knn_hubness" -> q205)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q203_lpa_modularity" ->
       s"""WITH ${Wave8Queries.dupEdgeSql},
          |nd AS (SELECT DISTINCT node FROM (

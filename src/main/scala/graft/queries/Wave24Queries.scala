@@ -15,8 +15,7 @@ import graft.ops.{Dedup, Similarity}
   * against exact Jaccard truth, and PQ quantization distortion per
   * subspace. q206 is DuckDB-oracle-checked; q207/q208 are golden-pinned
   * (seeded xxhash64 signatures / Lloyd codebooks have no SQL form). */
-object Wave24Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave24Queries extends QuerySet {
 
   /** Latest-wins upsert compaction over the events log, keyed by
     * (user_id, event_type) with (ts, event_id) as the version order —
@@ -114,14 +113,14 @@ object Wave24Queries {
       .orderBy($"subspace")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q206_latest_compaction" -> q206,
     "q207_lsh_eval" -> q207,
     "q208_pq_distortion" -> q208)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q206_latest_compaction" ->
       """WITH r AS (SELECT event_type, value,
         |    row_number() OVER (PARTITION BY user_id, event_type

@@ -14,8 +14,7 @@ import graft.ops.Similarity
   * uniformity check), a per-source charset/noise profile, and RFM
   * customer segmentation. q210/q211 are DuckDB-oracle-checked; q209 is
   * golden-pinned (Lloyd centroids have no SQL form). */
-object Wave25Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave25Queries extends QuerySet {
 
   /** IVF cell-balance report: vectors per cell and the load factor vs a
     * uniform split — the check an ANN deployment runs before trusting
@@ -138,14 +137,14 @@ object Wave25Queries {
       .orderBy($"r_bucket", $"f_bucket")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q209_ivf_cell_balance" -> q209,
     "q210_charset_profile" -> q210,
     "q211_rfm_segments" -> q211)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q210_charset_profile" ->
       """WITH c AS (SELECT source,
         |    CAST(length(text) AS BIGINT) AS n,

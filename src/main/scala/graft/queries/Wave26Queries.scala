@@ -14,8 +14,7 @@ import graft.Tables
   * broadcast/partial-agg plan a 100 TB fact table needs: shipping
   * priority (TPC-H Q3's shape), per-brand supplier concentration, and
   * market-segment seasonality. All DuckDB-oracle-checked. */
-object Wave26Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave26Queries extends QuerySet {
 
   private val D = "decimal(28,12)"
   private val cutoff = "1998-06-01"
@@ -91,14 +90,14 @@ object Wave26Queries {
       .orderBy($"month", $"c_mktsegment")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q212_ship_priority" -> q212,
     "q213_supplier_share" -> q213,
     "q214_segment_seasonality" -> q214)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q212_ship_priority" ->
       s"""SELECT l.l_orderkey,
          |  round(CAST(sum(CAST(round(l.l_extendedprice * (1.0 - l.l_discount), 9)

@@ -14,8 +14,7 @@ import graft.Tables
   * nation×nation trade-flow matrix (TPC-H Q7's shape), and CUBE
   * multi-dimensional rollups with grouping ids. All
   * DuckDB-oracle-checked. */
-object Wave27Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave27Queries extends QuerySet {
 
   private val D = "decimal(28,12)"
 
@@ -106,14 +105,14 @@ object Wave27Queries {
       .orderBy($"gid", $"discount_pct", $"returnflag")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q215_fulfillment_latency" -> q215,
     "q216_trade_flow" -> q216,
     "q217_discount_cube" -> q217)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q215_fulfillment_latency" ->
       """WITH h AS (SELECT o.o_orderpriority,
         |    CAST(CAST(l.l_shipdate AS DATE) - CAST(o.o_orderdate AS DATE)

@@ -14,8 +14,7 @@ import graft.ops.Exact
   * Q10's shape), the small-quantity correlated-aggregate filter (Q17's
   * decorrelation shape), and year-over-year revenue growth per nation.
   * All DuckDB-oracle-checked. */
-object Wave28Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave28Queries extends QuerySet {
 
   /** Returned-item revenue top-20 customers (TPC-H Q10's shape): which
     * accounts drive the most returned value. The fact side filters on
@@ -106,7 +105,7 @@ object Wave28Queries {
       .orderBy($"n_name", $"yr")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q218_returned_revenue" -> q218,
     "q219_small_qty_orders" -> q219,
     "q220_yoy_growth" -> q220)
@@ -116,7 +115,7 @@ object Wave28Queries {
   private val revS =
     "sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000, 0) AS BIGINT)) / 10000.0"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q218_returned_revenue" ->
       s"""SELECT c.c_custkey, c.c_name, n.n_name,
          |  CAST(count(*) AS BIGINT) AS n_returned,

@@ -18,8 +18,7 @@ import graft.ops.{Dedup, Exact, Text}
   * leakage, and training-sequence packing stats extend the LLM
   * data-pipeline family. All DuckDB-oracle-checked except q228
   * (seeded-xxhash64 MinHash → golden-pinned). */
-object Wave29Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave29Queries extends QuerySet {
 
   private val Dec = "decimal(28,12)"
 
@@ -283,7 +282,7 @@ object Wave29Queries {
       .orderBy($"source")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q221_pair_band_profile" -> q221,
     "q222_local_supplier_volume" -> q222,
     "q223_promo_share" -> q223,
@@ -318,7 +317,7 @@ object Wave29Queries {
   private val revS =
     "sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000, 0) AS BIGINT)) / 10000.0"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q221_pair_band_profile" -> (pairs03Cte +
       """
         |SELECT CAST(floor(jaccard * 20) AS INTEGER) AS band,

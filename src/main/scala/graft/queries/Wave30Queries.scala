@@ -16,8 +16,7 @@ import graft.ops.Exact
   * diversity) plus a rolling-window revenue trend and a deterministic
   * stratified-sampling audit for the curation family. All
   * DuckDB-oracle-checked. */
-object Wave30Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave30Queries extends QuerySet {
 
   /** Top-5 parts per supplier nation by shipped revenue (TPC-H Q11's
     * "important stock" question, rank-based so the cut is scale-stable —
@@ -217,7 +216,7 @@ object Wave30Queries {
       .orderBy($"lang")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q230_important_parts" -> q230,
     "q231_top_supplier" -> q231,
     "q232_large_orders" -> q232,
@@ -231,7 +230,7 @@ object Wave30Queries {
   private val revScaled =
     "sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000, 0) AS BIGINT))"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q230_important_parts" ->
       s"""WITH v AS (SELECT n.n_name, l.l_partkey,
          |    $revScaled AS v

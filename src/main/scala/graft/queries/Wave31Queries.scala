@@ -17,8 +17,7 @@ import graft.ops.Dedup
   * truth, and sequence-packing language diversity (the shuffling-
   * quality signal for LLM training batches). q240 is golden-pinned
   * (seeded xxhash64); the rest are DuckDB-oracle-checked. */
-object Wave31Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave31Queries extends QuerySet {
 
   /** Day-of-week seasonal decomposition of 1997 daily revenue: each
     * day's residual against its weekday mean, headlined by the top-10
@@ -175,7 +174,7 @@ object Wave31Queries {
       .orderBy($"source", $"n_langs")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q237_dow_seasonality" -> q237,
     "q238_reorder_intervals" -> q238,
     "q239_revenue_waterfall" -> q239,
@@ -184,7 +183,7 @@ object Wave31Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q237_dow_seasonality" ->
       """WITH daily AS (SELECT CAST(o.o_orderdate AS DATE) AS day,
         |    sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 10000, 0)

@@ -15,8 +15,7 @@ import graft.ops.{Dedup, Text}
   * directional source-flow matrix (who kills whom), and the end-to-end
   * curation-funnel observability table (survivors per pipeline stage).
   * All DuckDB-oracle-checked. */
-object Wave32Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave32Queries extends QuerySet {
 
   private val sweep = Seq(0.3, 0.5, 0.7, 0.9)
 
@@ -109,7 +108,7 @@ object Wave32Queries {
       .orderBy($"stage")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q242_dedup_whatif" -> q242,
     "q243_dedup_flow_matrix" -> q243,
     "q244_curation_funnel" -> q244)
@@ -136,7 +135,7 @@ object Wave32Queries {
   private val stopList =
     Text.stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q242_dedup_whatif" -> (pairsCte +
       """,
         |n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),

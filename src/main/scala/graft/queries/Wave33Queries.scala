@@ -17,8 +17,7 @@ import graft.ops.Dedup
   * consumer of the media store's frame table, and the confusion matrix
   * over the persisted centroid-score store. All eight are
   * DuckDB-oracle-checked. */
-object Wave33Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave33Queries extends QuerySet {
 
   /** TPC-H Q6 analog: forecast-revenue-change — the discount revenue of
     * 1997 shipments in the 0.05–0.07 band below quantity 24. One
@@ -173,7 +172,7 @@ object Wave33Queries {
       .orderBy($"label", $"predicted")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q245_tpch_q6_forecast" -> q245,
     "q246_tpch_q8_share" -> q246,
     "q247_tpch_q13_custdist" -> q247,
@@ -185,7 +184,7 @@ object Wave33Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q245_tpch_q6_forecast" ->
       """SELECT CAST(count(*) AS BIGINT) AS n_items,
         |  round(sum(CAST(round(l_extendedprice * l_discount * 10000, 0)

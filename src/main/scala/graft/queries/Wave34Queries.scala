@@ -17,8 +17,7 @@ import graft.ops.{Sampling, Text}
   * mass Jaccard can't see. Every query is a filter/join over a store
   * scan plus a bounded rollup — no pair machinery re-runs. All five are
   * DuckDB-oracle-checked. */
-object Wave34Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave34Queries extends QuerySet {
 
   /** Containment drop policy: a doc is dropped when ≥ 0.9 of its
     * 3-gram set lives inside a LARGER doc (by distinct-shingle count;
@@ -162,7 +161,7 @@ object Wave34Queries {
       .orderBy($"source")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q253_containment_policy" -> q253,
     "q254_dedup_length_bias" -> q254,
     "q255_transitivity_audit" -> q255,
@@ -199,7 +198,7 @@ object Wave34Queries {
       |        JOIN sz so ON cd.outer_id = so.doc_id
       |      WHERE round(cd.inter / CAST(si.n AS DOUBLE), 9) >= 0.9)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q253_containment_policy" -> (storesCte +
       """,
         |v AS (SELECT DISTINCT inner_id FROM cont

@@ -21,8 +21,7 @@ import graft.Tables
   * this surface. Revenue/profit sums ride the scaled-long
   * exact-aggregation discipline ([[graft.ops.Exact]] rationale); every
   * query ends in a total ORDER BY. All seven are DuckDB-oracle-checked. */
-object Wave35Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave35Queries extends QuerySet {
 
   /** TPC-H Q2 analog: cheapest EUROPE supplier per mid-size STANDARD
     * part. No partsupp table in this fixture, so supply cost is the
@@ -242,7 +241,7 @@ object Wave35Queries {
       .orderBy($"s_name")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q258_tpch_q2_mincost" -> q258,
     "q259_tpch_q4_late_exists" -> q259,
     "q260_tpch_q7_volume" -> q260,
@@ -253,7 +252,7 @@ object Wave35Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q258_tpch_q2_mincost" ->
       """WITH es AS (SELECT s_suppkey, s_name, n_name FROM supplier
         |    JOIN nation ON s_nationkey = n_nationkey

@@ -18,8 +18,7 @@ import graft.ops.{Curate, Sampling, Text}
   * front-loaded?), and the dedup-victim quality-bias audit (does
   * near-dup dedup preferentially remove low-quality docs?). All five
   * are DuckDB-oracle-checked. */
-object Wave36Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave36Queries extends QuerySet {
 
   private val splitDefs = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
 
@@ -179,7 +178,7 @@ object Wave36Queries {
       .orderBy($"is_victim", $"passes")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q265_decontam_ngram_sweep" -> q265,
     "q266_gate_combo_histogram" -> q266,
     "q267_embed_norm_by_lang" -> q267,
@@ -212,7 +211,7 @@ object Wave36Queries {
       |    top_word_frac <= 0.2 AS top_ok
       |  FROM m)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q265_decontam_ngram_sweep" -> {
       val t1 = Sampling.hexThreshold(0.8)
       val t2 = Sampling.hexThreshold(0.9)

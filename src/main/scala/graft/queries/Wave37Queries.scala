@@ -22,8 +22,7 @@ import graft.ops.{Curate, Ranking, Sampling, Text}
   * docs also the high-quality ones — the question that decides whether
   * decontamination costs eval difficulty). All five are
   * DuckDB-oracle-checked. */
-object Wave37Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave37Queries extends QuerySet {
 
   private val splitDefs = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
 
@@ -188,7 +187,7 @@ object Wave37Queries {
       .orderBy($"contaminated", $"passes")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q270_temperature_sweep" -> q270,
     "q271_context_length_sweep" -> q271,
     "q272_retrieval_overlap" -> q272,
@@ -215,7 +214,7 @@ object Wave37Queries {
        |      AND (stop_frac >= 0.02) AND (top_word_frac <= 0.2) AS passes
        |  FROM gm)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q270_temperature_sweep" -> {
       val alphas = Seq(0.3, 0.5, 1.0)
       val totCtes = alphas.zipWithIndex.map { case (a, i) =>

@@ -18,8 +18,7 @@ import graft.Tables
   * business key or runs over a bounded histogram/dimension frame —
   * never an unpartitioned per-row sort. All five are
   * DuckDB-oracle-checked. */
-object Wave38Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave38Queries extends QuerySet {
 
   /** Gaps-and-islands: the longest streak of consecutive calendar
     * months with ≥1 order, per customer, rolled up to a streak-length
@@ -142,7 +141,7 @@ object Wave38Queries {
       .orderBy($"r_name", $"region_rank")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q275_order_streaks" -> q275,
     "q276_customer_trajectory" -> q276,
     "q277_running_distinct_users" -> q277,
@@ -151,7 +150,7 @@ object Wave38Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q275_order_streaks" ->
       """WITH cm AS (SELECT DISTINCT o_custkey,
         |    year(o_orderdate) * 12 + month(o_orderdate) AS m FROM orders),

@@ -16,8 +16,7 @@ import graft.Tables
   * vocabulary-concentration table a tokenizer budget is chosen from),
   * and the cross-table engagement↔spend correlation over the shared
   * user/customer key space. All five are DuckDB-oracle-checked. */
-object Wave39Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave39Queries extends QuerySet {
 
   /** l-diversity audit: within each (lang, source) quasi-identifier
     * cell, how many DISTINCT sensitive values (the embedding label via
@@ -147,7 +146,7 @@ object Wave39Queries {
       .orderBy($"from_priority", $"to_priority")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q280_l_diversity" -> q280,
     "q281_conversion_deadline_sweep" -> q281,
     "q282_token_coverage_curve" -> q282,
@@ -156,7 +155,7 @@ object Wave39Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q280_l_diversity" ->
       """SELECT d.lang, d.source,
         |  CAST(count(*) AS BIGINT) AS n_docs,

@@ -9,8 +9,7 @@ import graft.ops.{Curate, Dedup, Funnel, Incremental, Similarity, Text}
   * retention), PMI collocations, int8 quantization planning, and
   * incremental delta-vs-base dedup. All five are DuckDB-oracle-checked —
   * the md5/decimal/floor discipline keeps every expression engine-exact. */
-object Wave3Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave3Queries extends QuerySet {
 
   /** Ordered funnel over the event stream ([[Funnel.funnel]]):
     * view → click → purchase, strictly increasing timestamps per user.
@@ -387,7 +386,7 @@ object Wave3Queries {
       .orderBy($"fk_edge")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q129_fk_health" -> q129,
     "q127_cusum" -> q127,
     "q128_heavy_hitters" -> q128,
@@ -440,7 +439,7 @@ object Wave3Queries {
       |  FROM (SELECT doc_id, md5(text) AS fp FROM delta) d
       |  LEFT JOIN bfp b USING (fp))""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q129_fk_health" ->
       """WITH ed AS (
         |  SELECT 'lineitem->orders' AS fk_edge,

@@ -19,8 +19,7 @@ import graft.ops.{Sampling, Text}
   * split churn under re-salting (how much of the corpus changes split
   * when the assignment key rotates). All four are
   * DuckDB-oracle-checked. */
-object Wave40Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave40Queries extends QuerySet {
 
   /** Shingle document-frequency profile: 3-gram postings bucketed by
     * ⌊log₂ df⌋ — n_shingles, posting mass, and mass share per bucket.
@@ -136,7 +135,7 @@ object Wave40Queries {
       .orderBy($"split_v1", $"split_v2")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q285_shingle_df_profile" -> q285,
     "q286_curation_order_sensitivity" -> q286,
     "q287_bigram_coverage_gap" -> q287,
@@ -163,7 +162,7 @@ object Wave40Queries {
        |      + least(1.0, (sum_len / word_count) / 8.0) * 0.3 >= 0.6 AS pass_q
        |  FROM gm)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q285_shingle_df_profile" ->
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         |g AS (SELECT DISTINCT doc_id,

@@ -17,8 +17,7 @@ import graft.ops.Text
   * week-over-week active-user retention, and the least-squares
   * quantity-on-discount slope per return flag (the elasticity
   * read). All four are DuckDB-oracle-checked. */
-object Wave41Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave41Queries extends QuerySet {
 
   /** Representative-selection policy comparison: for the θ=0.5
     * near-dup clusters (singletons = their own cluster), the corpus
@@ -146,7 +145,7 @@ object Wave41Queries {
       .orderBy($"l_returnflag")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q289_rep_policy_comparison" -> q289,
     "q290_supplier_brand_lift" -> q290,
     "q291_weekly_retention" -> q291,
@@ -196,7 +195,7 @@ object Wave41Queries {
        |    AS component_id, sc.n_tok, sc.qq
        |  FROM sc LEFT JOIN cc USING (doc_id))""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q289_rep_policy_comparison" -> {
       val strategies = Seq(
         ("best_quality", "ORDER BY qq DESC, doc_id"),

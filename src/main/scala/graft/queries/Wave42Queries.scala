@@ -13,8 +13,7 @@ import graft.Tables
   * salted ≡ plain, unsafe-join-type rejection) but no oracle-checked
   * query — and result-identity to the plain join is precisely the
   * property a DuckDB oracle can hash-check end-to-end. */
-object Wave42Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave42Queries extends QuerySet {
 
   /** Segment revenue through the SALTED join: the events fact side
     * (user_id is this fixture's measured hot key — q135) joins the
@@ -38,12 +37,12 @@ object Wave42Queries {
       .orderBy($"c_mktsegment", $"event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q293_salted_join_rollup" -> q293)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q293_salted_join_rollup" ->
       """SELECT c.c_mktsegment, e.event_type,
         |  CAST(count(*) AS BIGINT) AS n_events,

@@ -21,8 +21,7 @@ import graft.ops.{Exact, Windows}
   * how 30 is CHOSEN), and the minute-resolution peak-concurrency read
   * (capacity planning over session intervals without an interval
   * self-join). All five are DuckDB-oracle-checked. */
-object Wave43Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave43Queries extends QuerySet {
 
   /** Edit-distance verification of near-dup candidates: the exact
     * character-level stage a production dedup cascade runs AFTER the
@@ -215,7 +214,7 @@ object Wave43Queries {
       .orderBy($"day")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q294_pair_edit_verify" -> q294,
     "q295_zonemap_pruning" -> q295,
     "q296_chi2_lang_source" -> q296,
@@ -241,7 +240,7 @@ object Wave43Queries {
       |        JOIN sz sb ON doc_b = sb.doc_id
       |      WHERE inter / (sa.n + sb.n - inter) >= 0.3)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q294_pair_edit_verify" -> (pairsCte +
       """,
         |p AS (SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= 0.5),

@@ -20,8 +20,7 @@ import graft.ops.{Curate, Exact, Similarity, Text}
   * cosine null model that calibrates every similarity threshold, and
   * daily-revenue autocorrelation at the business lags. All five are
   * DuckDB-oracle-checked. */
-object Wave44Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave44Queries extends QuerySet {
 
   /** Exact ROC-AUC of the continuous quality score (q120/q22's formula)
     * as a predictor of the gopher-gate verdict (q96's label) — the
@@ -233,7 +232,7 @@ object Wave44Queries {
       .orderBy($"lag")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q299_roc_auc" -> q299,
     "q300_t_closeness" -> q300,
     "q301_price_moments" -> q301,
@@ -242,7 +241,7 @@ object Wave44Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q299_roc_auc" ->
       """WITH m AS (SELECT doc_id,
         |    len(string_split(text, ' ')) AS n_words,

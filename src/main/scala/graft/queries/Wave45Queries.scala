@@ -22,8 +22,7 @@ import graft.ops.Text
   * PMI over-ranks rare pairs, G² does not), and per-type arrival-rate
   * quantiles (the capacity input behind q298's concurrency peak).
   * All five are DuckDB-oracle-checked. */
-object Wave45Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave45Queries extends QuerySet {
 
   /** Degree assortativity of the θ≥0.3 near-dup graph: exact Pearson
     * correlation of endpoint degrees over the directed edge list (each
@@ -174,7 +173,7 @@ object Wave45Queries {
       .orderBy($"event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q304_degree_assortativity" -> q304,
     "q305_chao1_richness" -> q305,
     "q306_conversion_latency_quantiles" -> q306,
@@ -200,7 +199,7 @@ object Wave45Queries {
       |        JOIN sz sb ON doc_b = sb.doc_id
       |      WHERE inter / (sa.n + sb.n - inter) >= 0.3)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q304_degree_assortativity" -> (pairsCte +
       """,
         |dir AS (SELECT doc_a AS src, doc_b AS dst FROM pairs

@@ -19,8 +19,7 @@ import graft.Tables
   * years (do the top sellers stay the top sellers), and the cohort
   * LTV curve (q114 counts retained users; this accumulates their
   * value). All five are DuckDB-oracle-checked. */
-object Wave46Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave46Queries extends QuerySet {
 
   /** One-way ANOVA of order value across day-of-week groups: the
     * F-statistic that says whether q237's day-of-week revenue table
@@ -242,7 +241,7 @@ object Wave46Queries {
       .orderBy($"cohort_month_idx", $"k")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q309_anova_dow_revenue" -> q309,
     "q310_theilsen_trend" -> q310,
     "q311_runs_test" -> q311,
@@ -251,7 +250,7 @@ object Wave46Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q309_anova_dow_revenue" ->
       """WITH g AS (SELECT date_part('dow', o_orderdate) AS dow,
         |    CAST(count(*) AS BIGINT) AS ng,

@@ -17,8 +17,7 @@ import graft.Tables
   * encoding audit (per-column cardinality → bits-per-value estimate —
   * the storage-planning read behind parquet encoding choices). All
   * three are DuckDB-oracle-checked. */
-object Wave47Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave47Queries extends QuerySet {
 
   /** Generalization ladder: re-identification risk of the
     * (lang, source, n_chars) quasi-identifier at three n_chars
@@ -102,14 +101,14 @@ object Wave47Queries {
       .orderBy($"column_name")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q314_generalization_ladder" -> q314,
     "q315_ht_estimator" -> q315,
     "q316_encoding_audit" -> q316)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q314_generalization_ladder" ->
       """WITH g AS (SELECT unnest([10, 100, 1000]) AS granularity),
         |cells AS (SELECT g.granularity, lang, source,

@@ -17,8 +17,7 @@ import graft.Tables
   * q295's zone-map prune rates), and the join fan-out audit (the
   * pre-join skew read that says whether q293's salting is needed).
   * All three are DuckDB-oracle-checked. */
-object Wave48Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave48Queries extends QuerySet {
 
   /** CBO estimation-error audit: the textbook equi-join cardinality
     * estimate — per key-range bucket, |L|·|R| / max(d_L, d_R) under
@@ -126,14 +125,14 @@ object Wave48Queries {
         $"p50_fanout", $"p99_fanout", $"max_fanout")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q317_join_estimate_audit" -> q317,
     "q318_sortedness_audit" -> q318,
     "q319_join_fanout_audit" -> q319)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q317_join_estimate_audit" ->
       """WITH l AS (SELECT CAST(floor(l_orderkey / 1024) AS BIGINT) AS b,
         |    CAST(count(*) AS BIGINT) AS nl,

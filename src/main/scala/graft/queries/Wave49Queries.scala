@@ -17,8 +17,7 @@ import graft.Tables
   * schema profile (which JSON keys actually occur, per event type —
   * the schema a `props` column implies but never declares). All three
   * are DuckDB-oracle-checked. */
-object Wave49Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave49Queries extends QuerySet {
 
   /** Approximate functional-dependency discovery: for each directed
     * column pair A→B, the strength Σ_a max_b n(a,b) / N — the share of
@@ -114,14 +113,14 @@ object Wave49Queries {
       .orderBy($"event_type", $"key")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q320_fd_discovery" -> q320,
     "q321_source_vocab_overlap" -> q321,
     "q322_props_schema_profile" -> q322)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q320_fd_discovery" ->
       """WITH dc AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS cnt
         |  FROM documents GROUP BY 1, 2),

@@ -10,8 +10,7 @@ import graft.ops.{Classify, Diagnostics, Funnel, Linkage, Similarity, Text}
   * evaluation (per-class P/R/F1), code-switch detection, mutual top-1
   * neighbor mining, join-key skew diagnostics, and Cohen's kappa
   * inter-annotator agreement. All seven are DuckDB-oracle-checked. */
-object Wave4Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave4Queries extends QuerySet {
 
   /** The deterministic dirty-record drop q130 links back to the part
     * master: token swaps (normal form absorbs), case noise (normal form
@@ -225,7 +224,7 @@ object Wave4Queries {
       .orderBy($"component")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q140_anisotropy_removal" -> q140,
     "q137_pca_components" -> q137,
     "q138_lang_sample" -> q138,
@@ -264,7 +263,7 @@ object Wave4Queries {
        |    ELSE 'zh'
        |  END""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     // q137_pca_components: golden-pinned — iterative power iteration has
     // no SQL form (Bpe/quality-classifier precedent)
     "q138_lang_sample" ->

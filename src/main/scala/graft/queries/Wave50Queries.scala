@@ -36,8 +36,7 @@ import graft.Tables
   * Quantization is floor-on-scaled (never round(): Spark HALF_UP on
   * the shortest decimal form vs DuckDB exact-binary — the q299/q309
   * hazard class). All five are DuckDB-oracle-checked. */
-object Wave50Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave50Queries extends QuerySet {
 
   /** Tie-aware value histogram of the two-sample event slice: per
     * distinct value, total count, group-1 count, and the cumulative
@@ -217,7 +216,7 @@ object Wave50Queries {
       .orderBy($"nation")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q323_mann_whitney" -> q323,
     "q324_kruskal_wallis" -> q324,
     "q325_kendall_tau" -> q325,
@@ -233,7 +232,7 @@ object Wave50Queries {
       |  FROM events WHERE event_type IN ('purchase', 'view')
       |  GROUP BY value""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q323_mann_whitney" ->
       s"""WITH h AS ($twoSampleHistSql),
         |c AS (SELECT nv, n1v, COALESCE(CAST(sum(nv) OVER (ORDER BY value

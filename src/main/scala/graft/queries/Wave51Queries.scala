@@ -34,8 +34,7 @@ import graft.Tables
   * collapsed histogram frames, no order-dependent float reduction
   * (q330's pseudo-values quantize to micro-units BEFORE the
   * cross-month moments). All five are DuckDB-oracle-checked. */
-object Wave51Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave51Queries extends QuerySet {
 
   /** Equi-depth 16-bucket histogram of l_extendedprice with per-bucket
     * NDV — the optimizer statistic. Buckets assign on the exact
@@ -242,7 +241,7 @@ object Wave51Queries {
       .orderBy($"month")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q328_equidepth_hist" -> q328,
     "q329_randomization_test" -> q329,
     "q330_jackknife_ratio" -> q330,
@@ -251,7 +250,7 @@ object Wave51Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q328_equidepth_hist" ->
       """WITH hist AS (SELECT CAST(round(l_extendedprice*100, 0) AS BIGINT)
         |    AS pc, CAST(count(*) AS BIGINT) AS nv

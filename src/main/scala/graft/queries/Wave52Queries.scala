@@ -35,8 +35,7 @@ import graft.Tables
   * correctly-rounded in both engines where pow() is not — and
   * floor-on-scaled quantization everywhere. All five
   * DuckDB-oracle-checked. */
-object Wave52Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave52Queries extends QuerySet {
 
   /** Simpson's-paradox audit: sign of the discount↔quantity covariance
     * overall vs within each l_returnflag stratum. Covariance assembles
@@ -203,7 +202,7 @@ object Wave52Queries {
       .orderBy($"event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q333_simpson_audit" -> q333,
     "q334_changepoint" -> q334,
     "q335_srm_audit" -> q335,
@@ -212,7 +211,7 @@ object Wave52Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q333_simpson_audit" ->
       """WITH li AS (SELECT l_returnflag AS stratum,
         |    CAST(round(l_discount*100, 0) AS BIGINT) AS x,

@@ -32,8 +32,7 @@ import graft.Tables
   * floor-to-long BEFORE any cross-row float reduction (residuals,
   * log-order-stats, squared deviations), DECIMAL(38,0) for the
   * integer-valued big squares. All five DuckDB-oracle-checked. */
-object Wave53Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave53Queries extends QuerySet {
 
   /** Seasonal strength of daily revenue: 1 − Var(residual)/Var(total)
     * after removing day-of-week means. Residuals floor-quantize to
@@ -199,7 +198,7 @@ object Wave53Queries {
           .as("chapman"))
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q338_seasonal_strength" -> q338,
     "q339_morisita_overlap" -> q339,
     "q340_hill_tail_index" -> q340,
@@ -208,7 +207,7 @@ object Wave53Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q338_seasonal_strength" ->
       """WITH day AS (SELECT CAST(o_orderdate AS DATE) AS day,
         |    CAST(sum(CAST(round(o_totalprice*100, 0) AS BIGINT))

@@ -32,8 +32,7 @@ import graft.Tables
   * 1e-12, ln() at 1e-9, z-gaps at 1e-9, ratios at 1e-6), DECIMAL(38,0)
   * for integer-valued big squares, floor-on-scaled output grids. All
   * five DuckDB-oracle-checked. */
-object Wave54Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave54Queries extends QuerySet {
 
   /** Good–Turing mass estimates from the frequency-of-frequencies
     * table of word TRIGRAMS (the fixtures' unigram vocabulary is a
@@ -223,7 +222,7 @@ object Wave54Queries {
       .orderBy($"hapax_share".desc, $"doc_id").limit(10)
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q343_good_turing" -> q343,
     "q344_burrows_delta" -> q344,
     "q345_price_elasticity" -> q345,
@@ -232,7 +231,7 @@ object Wave54Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q343_good_turing" ->
       """WITH t AS (SELECT string_split(text, ' ') AS w FROM documents),
         |counts AS (SELECT tok, CAST(count(*) AS BIGINT) AS c

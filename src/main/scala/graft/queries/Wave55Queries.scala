@@ -32,8 +32,7 @@ import graft.Tables
   * longs, logprobs to 1e-9), explicit pivot sums for tiny cross-group
   * reductions, one deterministic double formula per output row. All
   * five DuckDB-oracle-checked. */
-object Wave55Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave55Queries extends QuerySet {
 
   /** Friedman blocked rank test: months are blocks, day-of-week the
     * treatment, mean daily revenue the response. Within-block average
@@ -230,7 +229,7 @@ object Wave55Queries {
       .orderBy($"n_shards")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q348_friedman_test" -> q348,
     "q349_sprt_boundary" -> q349,
     "q350_theil_decomposition" -> q350,
@@ -239,7 +238,7 @@ object Wave55Queries {
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q348_friedman_test" ->
       """WITH cell AS (SELECT strftime(o_orderdate, '%Y-%m') AS m,
         |    dayofweek(o_orderdate) AS dow,

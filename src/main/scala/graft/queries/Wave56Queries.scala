@@ -27,8 +27,7 @@ import graft.Tables
   * cross-row reductions (absolute forecast errors are integer cents
   * by construction), floor-on-scaled output grids. All three
   * DuckDB-oracle-checked. */
-object Wave56Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave56Queries extends QuerySet {
 
   /** Cohen's d (pooled SD) and Hedges' g (small-sample corrected,
     * J ≈ 1 − 3/(4·df − 1)) for purchase vs view event values. All
@@ -118,14 +117,14 @@ object Wave56Queries {
       .orderBy($"source")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q353_effect_size" -> q353,
     "q354_forecast_backtest" -> q354,
     "q355_neyman_allocation" -> q355)
 
   // ---- oracle SQL -------------------------------------------------------
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q353_effect_size" ->
       """WITH m AS (SELECT event_type = 'purchase' AS grp,
         |    CAST(count(*) AS BIGINT) AS n,

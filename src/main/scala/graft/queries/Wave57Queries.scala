@@ -28,8 +28,7 @@ import graft.ops.Text
   * divisions (`(2·s·10^k + d) div (2·d)`) unscaled from grids that are
   * exactly representable in double — no wide-decimal→double cast
   * anywhere, so Spark and DuckDB agree to the bit at any scale. */
-object Wave57Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave57Queries extends QuerySet {
 
   /** Exact integer HALF_UP division num/den at 10^k fractional digits,
     * computed entirely on decimals, unscaled by an exact double cast of
@@ -232,7 +231,7 @@ object Wave57Queries {
       .orderBy($"lang", $"source")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q356_token_gini" -> q356,
     "q357_token_pmi" -> q357,
     "q358_quality_length_tau" -> q358,
@@ -244,7 +243,7 @@ object Wave57Queries {
   private val tokLen = "len(string_split(text, ' '))"
   private val stopList = Text.stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q356_token_gini" ->
       s"""WITH h AS (SELECT source,
          |    CAST($tokLen AS BIGINT) AS v,

@@ -27,8 +27,7 @@ import graft.ops.{Similarity, Text}
   * formulas over exactly-representable integer operands; percentiles
   * use the engine-matched percentile ↔ quantile_cont pair (q54's
   * precedent). */
-object Wave58Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave58Queries extends QuerySet {
 
   /** Stopword-profile cosine between source pairs: per source, the
     * 10-dimensional raw count vector of [[Text.stopwords]] occurrences
@@ -166,7 +165,7 @@ object Wave58Queries {
       .orderBy($"query_id")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q361_source_style_cosine" -> q361,
     "q362_code_switching" -> q362,
     "q363_dup_quality_quadrant" -> q363,
@@ -177,7 +176,7 @@ object Wave58Queries {
 
   private val stopList = Text.stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q361_source_style_cosine" ->
       s"""WITH tok AS (SELECT source, unnest(string_split(text, ' ')) AS tok
          |  FROM documents),

@@ -13,8 +13,7 @@ import graft.ops.{Classify, Dedup, Kmeans, Ranking, Similarity, Text}
   * boilerplate measurement. All DuckDB-oracle-checked except the
   * iterative k-means fit (golden-pinned, [[graft.ops.Pca]]'s
   * precedent). */
-object Wave6Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave6Queries extends QuerySet {
 
   /** The deterministic 3-annotator frame q143/q145 share: annotator `a`
     * is the corpus lang label; `b` disagrees on every 6th doc (q136's
@@ -119,7 +118,7 @@ object Wave6Queries {
       .orderBy($"doc_id")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q141_retrieval_eval" -> q141,
     "q142_kmeans" -> q142,
     "q143_krippendorff" -> q143,
@@ -154,7 +153,7 @@ object Wave6Queries {
       |  UNION ALL SELECT doc_id, 'c', c FROM ann WHERE c IS NOT NULL)"""
       .stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     // q142_kmeans: golden-pinned — iterative Lloyd fit has no SQL form
     "q141_retrieval_eval" -> {
       val disc = dlist(Ranking.discounts(10))

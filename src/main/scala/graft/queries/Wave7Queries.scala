@@ -10,8 +10,7 @@ import graft.ops.{Classify, Dedup, Funnel, Kmeans, Ranking, Sampling, Similarity
   * first-/last-touch conversion attribution, stride-scheduled
   * curriculum ordering, and duplication-hub diagnostics. All
   * DuckDB-oracle-checked except q148 (golden-pinned k-means fit). */
-object Wave7Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave7Queries extends QuerySet {
 
   /** Accuracy-weighted re-vote ([[Classify.weightedVoteReport]]) over
     * the shared 3-annotator frame: per label, units won under plain
@@ -143,7 +142,7 @@ object Wave7Queries {
       .orderBy($"label")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q147_weighted_vote" -> q147,
     "q148_kmeans_margin" -> q148,
     "q149_attribution" -> q149,
@@ -173,7 +172,7 @@ object Wave7Queries {
       |  UNION ALL SELECT doc_id, 'c', c FROM ann WHERE c IS NOT NULL)"""
       .stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     // q148_kmeans_margin: golden-pinned — centroids come from the
     // iterative Lloyd fit (q142's precedent)
     "q147_weighted_vote" ->

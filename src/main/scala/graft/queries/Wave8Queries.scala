@@ -9,8 +9,7 @@ import graft.ops.{Curate, Dedup, Graph, Ranking, Similarity, Text}
   * authority over the duplication graph, Flesch readability gating,
   * hard-negative mining for contrastive training, and winsorized
   * robust means. All five are DuckDB-oracle-checked. */
-object Wave8Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave8Queries extends QuerySet {
 
   private val bm25K1 = 1.2
   private val bm25B = 0.75
@@ -99,7 +98,7 @@ object Wave8Queries {
       .orderBy($"event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q154_bm25" -> q154,
     "q155_pagerank" -> q155,
     "q156_readability" -> q156,
@@ -185,7 +184,7 @@ object Wave8Queries {
          |  FROM agg)""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q154_bm25" ->
       s"""WITH $bm25RunSql
          |SELECT query_id, doc_id, score, rnk FROM r

@@ -9,8 +9,7 @@ import graft.ops.{Dedup, Graph, Sampling, Text, Windows}
   * the duplication graph, exponentially time-decayed means, suffix→
   * prefix stitch detection, dedup-discounted effective token yield, and
   * UniMax mixture allocation. All five are DuckDB-oracle-checked. */
-object Wave9Queries {
-  type Q = (SparkSession, String) => DataFrame
+object Wave9Queries extends QuerySet {
 
   /** Label propagation ([[Graph.labelPropagate]]) over q155's planted
     * duplication graph: docs with `doc_id % 7 = 0` seed their `lang`
@@ -102,7 +101,7 @@ object Wave9Queries {
       .orderBy($"lang")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Seq[(String, Q)] = Seq(
     "q159_label_propagation" -> q159,
     "q160_time_decay" -> q160,
     "q161_stitch_pairs" -> q161,
@@ -134,7 +133,7 @@ object Wave9Queries {
        |  FROM r$joinPrev WHERE r.rn = $i))""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Seq[(String, String)] = Seq(
     "q159_label_propagation" ->
       s"""WITH ${Wave8Queries.dupEdgeSql},
          |nd AS (SELECT DISTINCT node FROM (

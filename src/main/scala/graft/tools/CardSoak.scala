@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -29,15 +28,8 @@ object CardSoak {
     val nBatches = if (args.length > 2) args(2).toInt else 100
     val cfg = CardConfig(windowDur = "1 hour", watermark = "2 hours",
       keyCol = "user_id", tsCol = "ts", lgK = 12)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.numRecentProgressUpdates", nBatches + 10)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", nBatches + 10)
     import spark.implicits._
 
     new java.io.File(work).mkdirs()

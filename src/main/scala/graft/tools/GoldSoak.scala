@@ -31,27 +31,13 @@ object GoldSoak {
 
   private def fmtD(v: Double): String = f"$v%.2f"
 
-  /** The standard soak/gate session (shared with [[StreamingGate]]). */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse(sys.error(
       "usage: GoldSoak <workDir> [rate] [durationSec] [filesPerTrigger]"))
     val rate = args.lift(1).map(_.toInt).getOrElse(200)
     val duration = args.lift(2).map(_.toInt).getOrElse(5000)
     val fpt = args.lift(3).map(_.toInt).getOrElse(40)
-    val spark = session()
+    val spark = graft.Session()
     val (equal, _) = run(spark, work, rate, duration, fpt)
     spark.stop()
     // the standalone soak still fails loudly on divergence — but only
@@ -69,6 +55,8 @@ object GoldSoak {
     * check exists to catch must still produce an artifact. */
   def run(spark: SparkSession, work: String, rate: Int, duration: Int,
           fpt: Int): (Boolean, String) = {
+    // keep every tier's progress for the throughput and state readings
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", 4096L)
     new java.io.File(work).mkdirs()
     val landing = s"$work/landing"
     val bridgesCsv = s"$work/bridges.csv"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.ops.{Dedup, Staged}
 
 /** Big-sf measurement of the exact-Jaccard family's SCALE PATH: prints
@@ -16,12 +15,7 @@ object HeavyScale {
     val sfDir = args(0)
     val threshold = if (args.length > 1) args(1).toDouble else 0.5
     val maxDf = if (args.length > 2) args(2).toInt else 256
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     println(s"[heavy] corpus: ${docs.count()} docs at $sfDir")
 

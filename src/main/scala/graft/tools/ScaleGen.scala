@@ -128,13 +128,7 @@ object ScaleGen {
     // heavy-family-only slice at big sf skips the 6M-row/decade lineitem
     val only   = if (args.length > 2) args(2).split(",").map(_.trim).toSet
                  else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scalegen")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     generate(spark, outDir, sf, only)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline.{CurationStream, SignatureStore}
 
@@ -44,16 +43,9 @@ object Soak {
     val nBatches = if (args.length > 2) args(2).toInt else 50
     val compactEvery = if (args.length > 3) args(3).toInt else 10
     val maxGens = if (args.length > 4) args(4).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // keep every batch's progress: default retention is 100
-      .config("spark.sql.streaming.numRecentProgressUpdates", nBatches + 10)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
+    // keep every batch's progress: default retention is 100
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", nBatches + 10)
     import spark.implicits._
 
     new java.io.File(work).mkdirs()

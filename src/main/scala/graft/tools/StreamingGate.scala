@@ -187,7 +187,7 @@ object StreamingGate {
     val rate = args.lift(1).map(_.toInt).getOrElse(100)
     val duration = args.lift(2).map(_.toInt).getOrElse(1200)
     val maxStateRows = 100000L
-    val spark = GoldSoak.session()
+    val spark = graft.Session()
     val work = java.nio.file.Files.createTempDirectory("graft-streaming-gate")
       .toString
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical._
 
 /** Dev tool (round-16 verdict item 7): enumerate every UNPARTITIONED
@@ -17,12 +16,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 object WindowAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
 
     /** The nearest operator below `p` that bounds cardinality to group
       * grain (Aggregate/Distinct collapse to key-cardinality, limits are
@@ -36,8 +30,8 @@ object WindowAudit {
       case l: LocalRelation => s"LocalRelation(${l.data.size})"
       case _: Range => "Range"
       case j: Join =>
-        // a join re-expands only if BOTH sides are unbounded; report
-        // the weaker side
+        // a join is unbounded if EITHER side is: one corpus-grain side
+        // can multiply the other, so report the weaker side
         val l = bound(j.left); val r = bound(j.right)
         if (l == "NONE" || r == "NONE") "NONE" else s"Join($l,$r)"
       case g: Generate => // explode multiplies: bounded iff child bounded

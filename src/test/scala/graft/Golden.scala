@@ -10,12 +10,7 @@ object GoldenGen {
     val outDir = java.nio.file.Paths.get(
       if (args.nonEmpty) args(0) else "src/test/resources/golden")
     java.nio.file.Files.createDirectories(outDir)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cores = SparkSuite.Cores)
     Golden.queries.foreach { name =>
       val lines = Golden.canon(SparkEntry.queries(name)(spark, Golden.sfDir))
       java.nio.file.Files.write(outDir.resolve(s"$name.tsv"),

@@ -96,8 +96,7 @@ class Round11OpsSpec extends SparkSuite {
   }
 
   test("q239 output satisfies the identity on real data") {
-    val rows = graft.queries.Wave31Queries
-      .queries("q239_revenue_waterfall")(spark, "/root/testdata/sf0.001")
+    val rows = SparkEntry.queries("q239_revenue_waterfall")(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -291,7 +291,7 @@ class Wave3Spec extends SparkSuite {
     // drive the REAL registered query against a fixture table dir
     val dir = tmpDir("zipf")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val row = graft.queries.Wave3Queries.queries("q124_zipf_fit")(spark, dir)
+    val row = SparkEntry.queries("q124_zipf_fit")(spark, dir)
       .collect().head
     val slope = row.getAs[Double]("zipf_slope")
     assert(row.getAs[Long]("n_points") == 50L)
