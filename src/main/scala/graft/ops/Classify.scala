@@ -402,14 +402,13 @@ object Classify {
   // surface's single most expensive repeated computation — engine-exact
   // decimal dot products, N·d·|labels| arithmetic, ~12 s of every sf1
   // sweep — yet a pure function of the embeddings corpus, read by an
-  // evaluation that never changes them. Same operational pattern as the
-  // pair/cluster/model stores ([[Dedup.pairsPersisted]]): derive once
-  // per corpus fingerprint, publish atomically, serve parquet scans.
+  // evaluation that never changes them: derive once per corpus
+  // fingerprint, publish atomically, serve parquet scans.
   //
   // Layout under `path`:
   //   path/predictions — (vec_id bigint, label, predicted) — label and
   //                      predicted keep the corpus's own label type
-  //   path/meta        — ONE row (corpus_fp, plan_fp, algo_version)
+  //   path/meta        — the StoreIO key
 
   /** Bump on any change to [[centroidPredictions]]' arithmetic: a store
     * published by older code must re-derive, never serve stale scores. */
@@ -451,47 +450,23 @@ object Classify {
     emb.select($"vec_id", $"label").join(pred, Seq("vec_id"))
   }
 
-  /** Publish a prediction table: data + one-row staleness meta, via
-    * [[StoreIO.publish]] (atomic rename, race-safe). */
-  def savePredictions(pred: DataFrame, path: String,
-                      corpusFp: Long, planFp: Long,
-                      replaceExisting: Boolean = true): Boolean = {
-    val spark = pred.sparkSession
-    import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    StoreIO.publish(spark, path, replaceExisting) { tmp =>
+  /** The checked read-through for the prediction store: load if the key
+    * matches `emb`'s corpus/plan fingerprints and [[PredictionsAlgoVersion]];
+    * else derive ([[centroidPredictions]]), publish atomically, and
+    * return a READ of the published parquet. */
+  def predictionsPersisted(emb: DataFrame, path: String): DataFrame = {
+    val spark = emb.sparkSession
+    StoreIO.readThrough(spark, path, "predictions",
+      StoreIO.key(emb, PredictionsAlgoVersion), "predictionsPersisted") { tmp =>
+      predictionsComputeCount.incrementAndGet()
       // label/predicted keep the corpus's own label type (int for the
       // synthetic embeddings; a cast here would change the consumers'
       // surface schema)
-      pred.select($"vec_id".cast("long"), $"label", $"predicted")
+      centroidPredictions(emb)
+        .select($"vec_id".cast("long"), $"label", $"predicted")
         .write.mode("overwrite").parquet(s"$tmp/predictions")
-      Seq((corpusFp, planFp, PredictionsAlgoVersion))
-        .toDF("corpus_fp", "plan_fp", "algo_version")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-    }
-  }
-
-  /** Load a published prediction table (no staleness check — the caller
-    * owns provenance; [[predictionsPersisted]] is the checked path). */
-  def loadPredictions(spark: org.apache.spark.sql.SparkSession,
-                      path: String): DataFrame =
-    spark.read.parquet(s"$path/predictions")
-
-  /** The checked read-through for the prediction store: load if the meta
-    * matches `emb`'s corpus/plan fingerprints and [[PredictionsAlgoVersion]];
-    * else derive ([[centroidPredictions]]), publish atomically
-    * (race-safe: strict no-replace on the cold branch), and return a
-    * READ of the published parquet. */
-  def predictionsPersisted(emb: DataFrame, path: String): DataFrame = {
-    val spark = emb.sparkSession
-    val want = (Similarity.fileFingerprint(emb),
-      StoreIO.fp64(emb.queryExecution.analyzed.canonicalized.toString),
-      PredictionsAlgoVersion)
-    StoreIO.readThrough(spark, path, "predictions", want,
-      "predictionsPersisted") { replaceStale =>
-      predictionsComputeCount.incrementAndGet()
-      savePredictions(centroidPredictions(emb), path, want._1, want._2,
-        replaceExisting = replaceStale)
-    } { () => loadPredictions(spark, path) }
+      Nil
+    } { _ => spark.read.parquet(s"$path/predictions") }
   }
 
   // ---- persisted quality-classifier score store (q79) -----------------
@@ -505,31 +480,6 @@ object Classify {
   private[graft] val qualityScoresComputeCount =
     new java.util.concurrent.atomic.AtomicLong()
 
-  /** Publish a quality-score table: data + one-row staleness meta, via
-    * [[StoreIO.publish]] (atomic rename, race-safe). Stores the RAW
-    * (unrounded) calibrated score: σ over literal weights is
-    * bit-deterministic and doubles round-trip parquet exactly, so a
-    * loaded table is indistinguishable from a fresh derivation and
-    * consumers choose their own display rounding. */
-  def saveQualityScores(scores: DataFrame, idCol: String, path: String,
-                        corpusFp: Long, planFp: Long,
-                        replaceExisting: Boolean = true): Boolean = {
-    val spark = scores.sparkSession
-    StoreIO.publish(spark, path, replaceExisting) { tmp =>
-      scores.select(col(idCol).cast("long"), col("label"), col("score"),
-          col("predicted"))
-        .write.mode("overwrite").parquet(s"$tmp/scores")
-      StoreIO.writeMeta(spark, tmp, (corpusFp, planFp, QualityScoresAlgoVersion))
-    }
-  }
-
-  /** Load a published quality-score table (no staleness check — the
-    * caller owns provenance; [[qualityScoresPersisted]] is the checked
-    * path). */
-  def loadQualityScores(spark: org.apache.spark.sql.SparkSession,
-                        path: String): DataFrame =
-    spark.read.parquet(s"$path/scores")
-
   /** The checked read-through for the quality-classifier score store:
     * load if the meta matches `df`'s corpus/plan fingerprints (the plan
     * fingerprint folds in the training hyperparameters) and
@@ -537,7 +487,7 @@ object Classify {
     * ([[qualityClassifier]]), publish atomically, and return a READ of
     * the published parquet.
     *
-    * Scale rationale (the q132/LM-score pattern): the trained weights
+    * Scale rationale: the trained weights
     * are a pure function of (corpus, hyperparams), so training-GD —
     * `iters` full passes over the sample — belongs in a
     * once-per-corpus-fingerprint derivation, not in every session's
@@ -547,17 +497,20 @@ object Classify {
                              path: String, samplePermille: Int = 300,
                              iters: Int = 30, lr: Double = 2.0): DataFrame = {
     val spark = df.sparkSession
-    val want = (Similarity.fileFingerprint(df),
-      StoreIO.fp64(df.queryExecution.analyzed.canonicalized.toString +
-        s" sample=$samplePermille iters=$iters lr=$lr" +
-        s" idCol=$idCol textCol=$textCol"),
-      QualityScoresAlgoVersion)
-    StoreIO.readThrough(spark, path, "scores", want,
-      "qualityScoresPersisted") { replaceStale =>
+    StoreIO.readThrough(spark, path, "scores",
+      StoreIO.key(df, QualityScoresAlgoVersion, "sample" -> samplePermille,
+        "iters" -> iters, "lr" -> lr, "idCol" -> idCol, "textCol" -> textCol),
+      "qualityScoresPersisted") { tmp =>
       qualityScoresComputeCount.incrementAndGet()
-      saveQualityScores(
-        qualityClassifier(df, idCol, textCol, samplePermille, iters, lr),
-        idCol, path, want._1, want._2, replaceExisting = replaceStale)
-    } { () => loadQualityScores(spark, path) }
+      // the RAW (unrounded) calibrated score: σ over literal weights is
+      // bit-deterministic and doubles round-trip parquet exactly, so a
+      // loaded table is indistinguishable from a fresh derivation and
+      // consumers choose their own display rounding
+      qualityClassifier(df, idCol, textCol, samplePermille, iters, lr)
+        .select(col(idCol).cast("long"), col("label"), col("score"),
+          col("predicted"))
+        .write.mode("overwrite").parquet(s"$tmp/scores")
+      Nil
+    } { _ => spark.read.parquet(s"$path/scores") }
   }
 }

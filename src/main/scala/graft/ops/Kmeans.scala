@@ -37,8 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object Kmeans {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Observable fit count — lets specs assert the persisted store's
     * derive-once contract ([[graft.ops.Dedup.clusterComputeCount]]'s
     * pattern). */
@@ -71,7 +69,7 @@ object Kmeans {
     // frame to the caller; the fingerprint additionally catches
     // same-plan reads over rewritten parquet files
     val key = (df.queryExecution.analyzed.canonicalized,
-      Similarity.fileFingerprint(df), embCol, idCol, k, iters, seed)
+      StoreIO.fileFingerprint(df), embCol, idCol, k, iters, seed)
     if (modelMemo.size() > MemoMax) modelMemo.clear()
     if (memo) modelMemo.computeIfAbsent(key, _ =>
       run(df, embCol, idCol, k, iters, seed))
@@ -136,18 +134,16 @@ object Kmeans {
   // The Lloyd fit is a pure function of (corpus, embCol, idCol, k,
   // iters, seed) — `iters`+2 aggregation jobs, each a full corpus scan:
   // seconds at sf1, HOURS at 100 TB — and the model is k×d doubles + k
-  // longs. Publish/load mirror [[Pca.savePcaModel]] /
-  // [[Similarity.saveIvfIndex]]: train ONCE per corpus, every later
-  // session/cluster loads. Cluster ids are positional, so save/load
-  // round-trips centroid ORDER bit-exactly (the saveIvfIndex lesson —
-  // a reordering load would silently re-label every assignment).
+  // longs: train ONCE per corpus, every later session/cluster loads.
+  // Cluster ids are positional, so the store round-trips centroid ORDER
+  // bit-exactly (a reordering load would silently re-label every
+  // assignment).
   //
   // Layout under `path`:
   //   path/centroids — (cluster, centroid array<double>, size), one row
   //                    per cluster, order = cluster id
-  //   path/meta      — ONE row (corpus_fp, plan_fp, emb_col, id_col, k,
-  //                    iters, seed, inertia, n) — the staleness key plus
-  //                    the model's scalars.
+  //   path/meta      — the StoreIO key (embCol, idCol, k, iters, seed in
+  //                    plan_fp) + the model's `inertia` and `n`
 
   /** Bumpable fit-algorithm version — part of the store staleness key,
     * so a semantics change to the fit (the round-10 Lloyd n-vs-n−1 fix
@@ -155,91 +151,35 @@ object Kmeans {
     * fingerprints and params all still match. */
   val KmeansAlgoVersion = 1
 
-  /** Publish a fitted model: centroid rows + one-row staleness meta, via
-    * [[StoreIO.publish]] (atomic rename — readers never observe partial
-    * state; a concurrent second writer is a no-op). Doubles round-trip
-    * parquet losslessly → loads are bit-exact. */
-  def saveKmeansModel(m: KmeansModel, spark: org.apache.spark.sql.SparkSession,
-                      path: String, corpusFp: Long, planFp: Long,
-                      embCol: String, idCol: String, iters: Int,
-                      seed: String, replaceExisting: Boolean = true): Unit = {
+  /** The checked read-through path: load the model published at `path`
+    * if its key matches `df` and the parameters; else fit (via the
+    * in-JVM memo), publish, and return the published model. A stale
+    * store is re-fitted and republished loudly, never silently served.
+    * Doubles round-trip parquet losslessly → loads are bit-exact. */
+  def fitPersisted(df: DataFrame, embCol: String, idCol: String, k: Int,
+                   iters: Int, seed: String, path: String): KmeansModel = {
+    val spark = df.sparkSession
     import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    StoreIO.publish(spark, path, replaceExisting) { tmp =>
+    StoreIO.readThrough(spark, path, "centroids",
+      StoreIO.key(df, KmeansAlgoVersion, "embCol" -> embCol, "idCol" -> idCol,
+        "k" -> k, "iters" -> iters, "seed" -> seed),
+      "fitPersisted") { tmp =>
+      val m = fit(df, embCol, idCol, k, iters, seed)
       m.centroids.indices
         .map(c => (c, m.centroids(c).toSeq, m.sizes(c)))
         .toDF("cluster", "centroid", "size")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
-      Seq((corpusFp, planFp, embCol, idCol, m.centroids.length, iters, seed,
-          m.inertia, m.n, KmeansAlgoVersion))
-        .toDF("corpus_fp", "plan_fp", "emb_col", "id_col", "k", "iters",
-          "seed", "inertia", "n", "algo_version")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-    }
-  }
-
-  /** Load a published model; inverse of [[saveKmeansModel]] (cluster
-    * order restored by id, contiguity validated loudly). */
-  def loadKmeansModel(spark: org.apache.spark.sql.SparkSession,
-                      path: String): KmeansModel = {
-    import spark.implicits.newProductEncoder
-    val meta = spark.read.parquet(s"$path/meta")
-      .select(col("inertia").cast("double"), col("n").cast("long"))
-      .as[(Double, Long)].head()
-    val rows = spark.read.parquet(s"$path/centroids")
-      .select(col("cluster").cast("int"), col("centroid"),
-        col("size").cast("long"))
-      .as[(Int, Seq[Double], Long)].collect().sortBy(_._1)
-    require(rows.nonEmpty, s"no centroids at $path")
-    require(rows.map(_._1).toSeq == rows.indices.toSeq,
-      s"cluster ids at $path are not contiguous from 0 — corrupt model")
-    KmeansModel(rows.map(_._2.toArray), rows.map(_._3), meta._1, meta._2)
-  }
-
-  /** The checked read-through path: load the model published at `path`
-    * if its fingerprints match `df` and the parameters; else fit (via
-    * the in-JVM memo), publish, and return the fitted model. A stale
-    * store is re-fitted and republished loudly, never silently served. */
-  def fitPersisted(df: DataFrame, embCol: String, idCol: String, k: Int,
-                   iters: Int, seed: String, path: String): KmeansModel = {
-    val spark = df.sparkSession
-    import spark.implicits.newProductEncoder
-    val corpusFp = Similarity.fileFingerprint(df)
-    val planFp = Dedup.planFingerprint(df)
-    val want = (corpusFp, planFp, embCol, idCol, k, iters, seed,
-      KmeansAlgoVersion)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // Try-guarded meta read: a missing/partial/older-schema meta row
-    // (e.g. a store written before algo_version existed) reads as stale,
-    // never as a crash or a silent match
-    def haveMeta(): Option[(Long, Long, String, String, Int, Int, String, Int)] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")) ||
-          !fs.exists(new org.apache.hadoop.fs.Path(s"$path/centroids"))) None
-      else scala.util.Try(spark.read.parquet(s"$path/meta")
-        .select(col("corpus_fp").cast("long"), col("plan_fp").cast("long"),
-          col("emb_col"), col("id_col"), col("k").cast("int"),
-          col("iters").cast("int"), col("seed"),
-          col("algo_version").cast("int"))
-        .as[(Long, Long, String, String, Int, Int, String, Int)].head()).toOption
-    def fitAndPublish(replaceStale: Boolean): KmeansModel = {
-      val m = fit(df, embCol, idCol, k, iters, seed)
-      saveKmeansModel(m, spark, path, corpusFp, planFp, embCol, idCol,
-        iters, seed, replaceExisting = replaceStale)
-      m
-    }
-    haveMeta() match {
-      case Some(have) if have == want =>
-        log.info(s"fitPersisted: loading published k-means model at $path")
-        loadKmeansModel(spark, path)
-      case Some(have) =>
-        log.warn(s"fitPersisted: store at $path is stale (have $have) — " +
-          "re-fitting and republishing")
-        fitAndPublish(replaceStale = true)
-      case None =>
-        // an occupied-but-unreadable store must be REPLACED, not
-        // treated as a cold slot (see Dedup.pairsPersisted)
-        fitAndPublish(replaceStale =
-          fs.exists(new org.apache.hadoop.fs.Path(path)))
+      Seq(lit(m.inertia).as("inertia"), lit(m.n).as("n"))
+    } { meta =>
+      val rows = spark.read.parquet(s"$path/centroids")
+        .select(col("cluster").cast("int"), col("centroid"),
+          col("size").cast("long"))
+        .as[(Int, Seq[Double], Long)].collect().sortBy(_._1)
+      require(rows.nonEmpty, s"no centroids at $path")
+      require(rows.map(_._1).toSeq == rows.indices.toSeq,
+        s"cluster ids at $path are not contiguous from 0 — corrupt model")
+      KmeansModel(rows.map(_._2.toArray), rows.map(_._3),
+        meta.getAs[Double]("inertia"), meta.getAs[Long]("n"))
     }
   }
 

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Persisted MEDIA-FEATURES store — the pair-store pattern
-  * ([[Dedup.pairsPersisted]]) applied to the codec family.
+/** Persisted MEDIA-FEATURES store — a [[StoreIO.readThrough]] store for
+  * the codec family.
   *
   * Every media feature this library serves (decoded metadata, image
   * dHash, audio fingerprint, per-frame video hashes, resized-image
@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * re-encoded and re-decoded the whole corpus through the real JVM
   * codecs (~8.5 s of every sf1 sweep; at 100 TB the decode pass is the
   * kind of job measured in cluster-days). So: derive ONCE per corpus
-  * fingerprint, publish atomically ([[StoreIO.publish]]), and let every
+  * fingerprint, publish atomically, and let every
   * query/session/JVM read parquet. Steady-state cost is a columnar scan
   * of 8-byte signatures — flat across corpus decades, like the pair
   * store's.
@@ -32,25 +32,22 @@ import org.apache.spark.storage.StorageLevel
   *   path/frame_features   — (doc_id, frame_idx, width, height,
   *                           channels), every sampled frame decoded
   *                           (everyN = 1; consumers sample by filter)
-  *   path/meta             — ONE row (corpus_fp, plan_fp, resize_w,
-  *                           resize_h, algo_version)
+  *   path/meta             — the StoreIO key (resize target in plan_fp)
   *
   * Frame tables are stored at everyN = 1 (every frame) so ANY sampling
   * cadence downstream is a `frame_idx % N = 0` filter over the store —
   * the store never needs re-deriving when a consumer changes its
   * cadence. The resize target IS a store parameter (the resized
-  * metadata depends on it), carried in the meta row: a consumer with a
+  * metadata depends on it), folded into the key: a consumer with a
   * different target is a stale-store re-derive, loudly logged.
   *
   * The derivation encodes the corpus once ([[Multimodal.attachMedia]],
   * staged MEMORY_AND_DISK for its six consumers), runs each codec pass
   * map-side exactly as the direct operators do, and publishes. Bumping
   * [[AlgoVersion]] on ANY codec/feature change invalidates every
-  * published store (same contract as the pair/cluster/model stores).
+  * published store.
   */
 object MediaStore {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Bump on any change to [[Codecs]]/[[Multimodal]] feature semantics:
     * a store published by older code must re-derive, never silently
@@ -73,26 +70,19 @@ object MediaStore {
     def frameFeatures: DataFrame   = spark.read.parquet(s"$path/frame_features")
   }
 
-  private def readMeta(spark: SparkSession, path: String)
-      : Option[(Long, Long, Int, Int, Int)] = {
-    import spark.implicits.newProductEncoder
-    scala.util.Try(
-      spark.read.parquet(s"$path/meta")
-        .select(col("corpus_fp").cast("long"), col("plan_fp").cast("long"),
-          col("resize_w").cast("int"), col("resize_h").cast("int"),
-          col("algo_version").cast("int"))
-        .as[(Long, Long, Int, Int, Int)].head()).toOption
-  }
-
-  /** Derive every feature table from one staged encode of the corpus and
-    * publish atomically. Exposed for pipelines that own provenance;
-    * [[persisted]] is the checked read-through. */
-  def save(docs: DataFrame, path: String, corpusFp: Long, planFp: Long,
-           resizeW: Int, resizeH: Int,
-           replaceExisting: Boolean = true): Boolean = {
+  /** The checked read-through: return a [[Handle]] over the store at
+    * `path` if its key matches `docs`' corpus/plan fingerprints, the
+    * resize target, and [[AlgoVersion]]; else derive every feature table
+    * from one staged encode of the corpus, publish atomically, and return
+    * a handle over the published store. Either way every downstream plan
+    * scans parquet. */
+  def persisted(docs: DataFrame, path: String,
+                resizeW: Int = 10, resizeH: Int = 10): Handle = {
     val spark = docs.sparkSession
-    import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    StoreIO.publish(spark, path, replaceExisting) { tmp =>
+    StoreIO.readThrough(spark, path, "features",
+      StoreIO.key(docs, AlgoVersion, "resizeW" -> resizeW, "resizeH" -> resizeH),
+      "MediaStore") { tmp =>
+      computeCount.incrementAndGet()
       // ONE encode of the corpus feeds all six passes; MEMORY_AND_DISK so
       // payload volume spills instead of evicting (binary never shuffles —
       // each pass is a map over the staged partitions)
@@ -114,55 +104,8 @@ object MediaStore {
           .toDF().write.mode("overwrite").parquet(s"$tmp/resized_features")
         Multimodal.frameFeatures(media, everyN = 1).toDF()
           .write.mode("overwrite").parquet(s"$tmp/frame_features")
-        Seq((corpusFp, planFp, resizeW, resizeH, AlgoVersion))
-          .toDF("corpus_fp", "plan_fp", "resize_w", "resize_h", "algo_version")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
       } finally { media.unpersist(); () }
-    }
-  }
-
-  /** The checked read-through: return a [[Handle]] over the store at
-    * `path` if its meta matches `docs`' corpus/plan fingerprints, the
-    * resize target, and [[AlgoVersion]]; else derive + publish (atomic,
-    * race-safe: strict no-replace on the cold branch — see
-    * [[StoreIO.publish]]) and return a handle over the published store.
-    * Either way every downstream plan scans parquet. */
-  def persisted(docs: DataFrame, path: String,
-                resizeW: Int = 10, resizeH: Int = 10): Handle = {
-    val spark = docs.sparkSession
-    val want = (Similarity.fileFingerprint(docs),
-      StoreIO.fp64(docs.queryExecution.analyzed.canonicalized.toString),
-      resizeW, resizeH, AlgoVersion)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def haveMeta(): Option[(Long, Long, Int, Int, Int)] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")) ||
-          !fs.exists(new org.apache.hadoop.fs.Path(s"$path/features"))) None
-      else readMeta(spark, path)
-    def computeAndPublish(replaceStale: Boolean): Handle = {
-      computeCount.incrementAndGet()
-      save(docs, path, want._1, want._2, resizeW, resizeH,
-        replaceExisting = replaceStale)
-      // whether this writer won or lost the publish race, the live store
-      // must now hold the same pure function of the same inputs
-      if (!haveMeta().contains(want)) sys.error(
-        s"MediaStore: store at $path does not match its own publish " +
-          s"(want $want) — concurrent writer with different inputs?")
-      Handle(spark, path)
-    }
-    haveMeta() match {
-      case Some(have) if have == want =>
-        log.info(s"MediaStore: loading published media features at $path")
-        Handle(spark, path)
-      case Some(have) =>
-        log.warn(s"MediaStore: store at $path is stale " +
-          s"(have $have, want $want) — re-deriving and republishing")
-        computeAndPublish(replaceStale = true)
-      case None =>
-        // None covers BOTH a truly cold slot AND an occupied-but-
-        // unreadable store — only the former may use no-replace publish
-        computeAndPublish(replaceStale =
-          fs.exists(new org.apache.hadoop.fs.Path(path)))
-    }
+      Nil
+    } { _ => Handle(spark, path) }
   }
 }

@@ -33,8 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Pca {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Observable fit count — lets specs assert the persisted store's
     * derive-once contract ([[graft.ops.Dedup.clusterComputeCount]]'s
     * pattern). */
@@ -64,7 +62,7 @@ object Pca {
     // on a different frame to the caller; the fingerprint additionally
     // catches same-plan reads over rewritten parquet files
     val key = (df.queryExecution.analyzed.canonicalized,
-      Similarity.fileFingerprint(df), embCol, k, iters)
+      StoreIO.fileFingerprint(df), embCol, k, iters)
     if (modelMemo.size() > MemoMax) modelMemo.clear()
     if (memo) modelMemo.computeIfAbsent(key, _ => fit(df, embCol, k, iters))
     else fit(df, embCol, k, iters)
@@ -183,108 +181,51 @@ object Pca {
   // The fit is a pure function of (corpus, embCol, k, iters) — 25
   // bounded aggregation jobs at k=2/iters=12, tens of seconds at sf1,
   // HOURS at 100 TB — and the model itself is a few KB of doubles. The
-  // in-JVM memo (above) only helps the session that paid; these
-  // publish/load halves are the cross-JVM version ([[Similarity.saveIvfIndex]]
-  // / [[graft.ops.Dedup.clustersPersisted]]'s pattern): train ONCE,
-  // publish with a staleness fingerprint, and every later session,
+  // in-JVM memo (above) only helps the session that paid; the store is
+  // the cross-JVM version: train ONCE, publish, and every later session,
   // cluster, or bench sweep loads the parquet instead of re-iterating.
   //
   // Layout under `path`:
   //   path/components — (component, loading array<double>, eigenvalue),
   //                     one row per component, order = component id
-  //   path/meta       — ONE row (corpus_fp, plan_fp, emb_col, k, iters,
-  //                     n, mean array<double>): corpus_fp hashes every
-  //                     file behind the input frame; plan_fp hashes the
-  //                     canonicalized plan so two different frames over
-  //                     the same files cannot silently share a model.
+  //   path/meta       — the StoreIO key (embCol, k, iters in plan_fp)
+  //                     + the model's `n` and `mean array<double>`
+  // Doubles round-trip parquet losslessly, so a load returns the model
+  // BIT-EXACTLY — loaded-vs-fitted outputs are hash-identical.
 
-  /** Publish a fitted model: component rows + one-row staleness meta.
-    * Doubles round-trip parquet losslessly, so a load returns the model
-    * BIT-EXACTLY — loaded-vs-fitted outputs are hash-identical. */
   /** Bumpable fit-algorithm version — part of the store staleness key
     * (see [[Kmeans.KmeansAlgoVersion]] for the rationale). */
   val PcaAlgoVersion = 1
 
-  def savePcaModel(m: PcaModel, spark: org.apache.spark.sql.SparkSession,
-                   path: String, corpusFp: Long, planFp: Long,
-                   embCol: String, iters: Int,
-                   replaceExisting: Boolean = true): Unit = {
+  /** The checked read-through path: load the model published at `path`
+    * if its key matches `df` and the parameters; else fit (via the
+    * in-JVM memo), publish, and return the published model. A stale
+    * store (corpus files rewritten, different input plan, or different
+    * embCol/k/iters) is re-fitted and republished loudly, never silently
+    * served. Component order is restored by id and validated loudly. */
+  def topComponentsPersisted(df: DataFrame, embCol: String, k: Int,
+                             iters: Int, path: String): PcaModel = {
+    val spark = df.sparkSession
     import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    StoreIO.publish(spark, path, replaceExisting) { tmp =>
+    StoreIO.readThrough(spark, path, "components",
+      StoreIO.key(df, PcaAlgoVersion, "embCol" -> embCol, "k" -> k, "iters" -> iters),
+      "topComponentsPersisted") { tmp =>
+      val m = topComponents(df, embCol, k, iters)
       m.components.indices
         .map(c => (c, m.components(c).toSeq, m.eigenvalues(c)))
         .toDF("component", "loading", "eigenvalue")
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/components")
-      Seq((corpusFp, planFp, embCol, m.components.length, iters, m.n,
-          m.mean.toSeq, PcaAlgoVersion))
-        .toDF("corpus_fp", "plan_fp", "emb_col", "k", "iters", "n", "mean",
-          "algo_version")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-    }
-  }
-
-  /** Load a published model; inverse of [[savePcaModel]] (component
-    * order restored by id, contiguity validated loudly). */
-  def loadPcaModel(spark: org.apache.spark.sql.SparkSession,
-                   path: String): PcaModel = {
-    import spark.implicits.newProductEncoder
-    val meta = spark.read.parquet(s"$path/meta")
-      .select(col("n").cast("long"), col("mean"))
-      .as[(Long, Seq[Double])].head()
-    val rows = spark.read.parquet(s"$path/components")
-      .select(col("component").cast("int"), col("loading"),
-        col("eigenvalue").cast("double"))
-      .as[(Int, Seq[Double], Double)].collect().sortBy(_._1)
-    require(rows.nonEmpty, s"no components at $path")
-    require(rows.map(_._1).toSeq == rows.indices.toSeq,
-      s"component ids at $path are not contiguous from 0 — corrupt model")
-    PcaModel(rows.map(_._2.toArray), rows.map(_._3), meta._1,
-      meta._2.toArray)
-  }
-
-  /** The checked read-through path: load the model published at `path`
-    * if its fingerprints match `df` and the parameters; else fit (via
-    * the in-JVM memo), publish, and return the fitted model — which a
-    * later load reproduces bit-exactly. A stale store (corpus files
-    * rewritten, different input plan, or different embCol/k/iters) is
-    * re-fitted and republished loudly, never silently served. */
-  def topComponentsPersisted(df: DataFrame, embCol: String, k: Int,
-                             iters: Int, path: String): PcaModel = {
-    val spark = df.sparkSession
-    import spark.implicits.newProductEncoder
-    val corpusFp = Similarity.fileFingerprint(df)
-    val planFp = Dedup.planFingerprint(df)
-    val want = (corpusFp, planFp, embCol, k, iters, PcaAlgoVersion)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // Try-guarded meta read: missing/partial/older-schema meta = stale
-    def haveMeta(): Option[(Long, Long, String, Int, Int, Int)] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")) ||
-          !fs.exists(new org.apache.hadoop.fs.Path(s"$path/components"))) None
-      else scala.util.Try(spark.read.parquet(s"$path/meta")
-        .select(col("corpus_fp").cast("long"), col("plan_fp").cast("long"),
-          col("emb_col"), col("k").cast("int"), col("iters").cast("int"),
-          col("algo_version").cast("int"))
-        .as[(Long, Long, String, Int, Int, Int)].head()).toOption
-    def fitAndPublish(replaceStale: Boolean): PcaModel = {
-      val m = topComponents(df, embCol, k, iters)
-      savePcaModel(m, spark, path, corpusFp, planFp, embCol, iters,
-        replaceExisting = replaceStale)
-      m
-    }
-    haveMeta() match {
-      case Some(have) if have == want =>
-        log.info(s"topComponentsPersisted: loading published model at $path")
-        loadPcaModel(spark, path)
-      case Some(have) =>
-        log.warn(s"topComponentsPersisted: store at $path is stale " +
-          s"(have $have) — re-fitting and republishing")
-        fitAndPublish(replaceStale = true)
-      case None =>
-        // an occupied-but-unreadable store must be REPLACED, not
-        // treated as a cold slot (see Dedup.pairsPersisted)
-        fitAndPublish(replaceStale =
-          fs.exists(new org.apache.hadoop.fs.Path(path)))
+      Seq(lit(m.n).as("n"), typedLit(m.mean.toSeq).as("mean"))
+    } { meta =>
+      val rows = spark.read.parquet(s"$path/components")
+        .select(col("component").cast("int"), col("loading"),
+          col("eigenvalue").cast("double"))
+        .as[(Int, Seq[Double], Double)].collect().sortBy(_._1)
+      require(rows.nonEmpty, s"no components at $path")
+      require(rows.map(_._1).toSeq == rows.indices.toSeq,
+        s"component ids at $path are not contiguous from 0 — corrupt model")
+      PcaModel(rows.map(_._2.toArray), rows.map(_._3), meta.getAs[Long]("n"),
+        meta.getAs[Seq[Double]]("mean").toArray)
     }
   }
 

@@ -372,7 +372,7 @@ object Similarity {
   def estimatedNeighborP(candidates: DataFrame, k: Int,
                          sampleCap: Int = 512): Double = {
     val key = (candidates.queryExecution.analyzed.canonicalized,
-      fileFingerprint(candidates), k)
+      StoreIO.fileFingerprint(candidates), k)
     if (pHatCache.size() > IvfCacheMax) pHatCache.clear()
     pHatCache.computeIfAbsent(key, _ => {
       val s = unitSample(candidates, sampleCap)
@@ -486,7 +486,7 @@ object Similarity {
     * plan; it is never recomputed in a query's hot path).
     *
     * `corpusFp` is the fingerprint of the corpus the index was trained
-    * for (see `fileFingerprint`): None for ad-hoc/in-memory training,
+    * for (see `StoreIO.fileFingerprint`): None for ad-hoc/in-memory training,
     * set by [[knnIvfPersisted]] before publishing so ANY later loader
     * can detect that the files behind the corpus were rewritten since
     * training — staleness detection at the index layer, not a
@@ -725,7 +725,7 @@ object Similarity {
     // keys m/kSub as distinct tuple components (no packed-int collisions)
     val ivf = trainedIvf(candidates, nCells)
     val pqKey = (candidates.queryExecution.analyzed.canonicalized,
-      fileFingerprint(candidates), m, kSub)
+      StoreIO.fileFingerprint(candidates), m, kSub)
     if (pqCache.size() > IvfCacheMax) pqCache.clear()
     val pq = pqCache.computeIfAbsent(pqKey, _ => buildPqIndex(candidates, m, kSub))
     val assigned = encodePq(assignCells(candidates, ivf), pq)
@@ -781,32 +781,6 @@ object Similarity {
   private val pqCache =
     new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long, Int, Int), PqIndex]()
 
-  /** (path, len, mtime)-hash over every file-backed scan in the plan.
-    * Shared with [[Dedup.jaccardRouteDecision]]'s memo — one staleness
-    * discipline for every decide-once-per-corpus cache in the library.
-    * Honest 64-bit ([[StoreIO.fpOrdered64]]): the persisted stores trust
-    * this value across sessions, where a 32-bit key's birthday bound
-    * (~77 k corpora to even odds) is not acceptable. */
-  private[ops] def fileFingerprint(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
-    val perScan = df.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location match {
-          case p: PartitioningAwareFileIndex =>
-            StoreIO.fpOrdered64(
-              p.allFiles().sortBy(_.getPath.toString)
-                .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)))
-          // exotic FileIndex impls expose only paths — still catches
-          // listing-membership changes, not same-name rewrites
-          case other => StoreIO.fpOrdered64(other.inputFiles.sorted.toSeq)
-        }
-        case _ => 0L
-      }
-    }
-    StoreIO.fpOrdered64(perScan)
-  }
-
   /** Observable training count — lets specs assert cache hits/misses. */
   private[graft] val ivfTrainCount = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -821,7 +795,7 @@ object Similarity {
     * fitted centroids per (canonicalized plan, file listing, nCells). */
   private def trainedIvf(candidates: DataFrame, nCells: Int): IvfIndex = {
     val key = (candidates.queryExecution.analyzed.canonicalized,
-      fileFingerprint(candidates), nCells, 4096)
+      StoreIO.fileFingerprint(candidates), nCells, 4096)
     if (ivfCache.size() > IvfCacheMax) ivfCache.clear()
     ivfCache.computeIfAbsent(key, _ => {
       ivfTrainCount.incrementAndGet()
@@ -850,11 +824,15 @@ object Similarity {
     val spark = candidates.sparkSession
     val p = new org.apache.hadoop.fs.Path(indexPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val fp = fileFingerprint(candidates)
-    def trainAndPublish(): IvfIndex = {
+    val fp = StoreIO.fileFingerprint(candidates)
+    // atomic publish with readThrough's replace rule: a cold slot never
+    // displaces a concurrent winner (which then serves this probe), a
+    // stale index is renamed aside
+    def trainAndPublish(stale: Boolean): IvfIndex = {
       val trained = trainedIvf(candidates, nCells).copy(corpusFp = Some(fp))
-      saveIvfIndex(trained, spark, indexPath)
-      trained
+      val won = StoreIO.publish(spark, indexPath, replaceExisting = stale) {
+        tmp => saveIvfIndex(trained, spark, tmp) }
+      if (won) trained else loadIvfIndex(spark, indexPath)
     }
     val index =
       if (fs.exists(p)) {
@@ -865,14 +843,14 @@ object Similarity {
           // published — a stale index, not a caller error: retrain
           log.warn(s"index at $indexPath has ${loaded.nCells} cells, caller " +
             s"asked $nCells — retraining and republishing")
-          trainAndPublish()
+          trainAndPublish(stale = true)
         } else if (loaded.corpusFp.forall(_ == fp)) loaded
         else {
           log.warn(s"index at $indexPath was trained for a different corpus " +
             s"(fingerprint ${loaded.corpusFp.get} != $fp) — retraining and republishing")
-          trainAndPublish()
+          trainAndPublish(stale = true)
         }
-      } else trainAndPublish()
+      } else trainAndPublish(stale = false)
     probeIvf(index, queries, candidates, k, nProbe)
   }
 
@@ -953,26 +931,22 @@ object Similarity {
     * derivation is a pure function of (corpus, θ, band params), every
     * embedding-cluster analytic reads the same logical pair table, and
     * at the recall-holding table counts the derivation is the expensive
-    * part — exactly the docPairs/clusters pattern. Derivation params ride
-    * the plan fingerprint so a θ or recall change re-derives. */
+    * part. Derivation params ride the plan fingerprint so a θ or recall
+    * change re-derives. */
   def nearDupPairsPersisted(vecs: DataFrame, path: String, minCosine: Double,
                             targetRecall: Double = 0.7,
                             maxTables: Int = 64): DataFrame = {
     val spark = vecs.sparkSession
-    val planFp = StoreIO.fpOrdered64(Seq(
-      vecs.queryExecution.analyzed.canonicalized.toString,
-      minCosine.toString, targetRecall.toString, maxTables.toString))
-    val want = (fileFingerprint(vecs), planFp, EmbedPairsAlgoVersion)
-    StoreIO.readThrough(spark, path, "pairs", want, "nearDupPairsPersisted") {
-      replaceStale =>
-        embedPairComputeCount.incrementAndGet()
-        StoreIO.publish(spark, path, replaceStale) { tmp =>
-          nearDupPairsBanded(vecs, minCosine, targetRecall, maxTables)
-            .select($"id_a".cast("long"), $"id_b".cast("long"), $"cosine")
-            .write.mode("overwrite").parquet(s"$tmp/pairs")
-          StoreIO.writeMeta(spark, tmp, want)
-        }
-    } { () =>
+    StoreIO.readThrough(spark, path, "pairs",
+      StoreIO.key(vecs, EmbedPairsAlgoVersion, "minCosine" -> minCosine,
+        "targetRecall" -> targetRecall, "maxTables" -> maxTables),
+      "nearDupPairsPersisted") { tmp =>
+      embedPairComputeCount.incrementAndGet()
+      nearDupPairsBanded(vecs, minCosine, targetRecall, maxTables)
+        .select($"id_a".cast("long"), $"id_b".cast("long"), $"cosine")
+        .write.mode("overwrite").parquet(s"$tmp/pairs")
+      Nil
+    } { _ =>
       spark.read.parquet(s"$path/pairs")
         .select($"id_a", $"id_b", $"cosine")
     }

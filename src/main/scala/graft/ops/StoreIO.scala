@@ -1,11 +1,26 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.lit
 
-/** Shared plumbing for the persisted-derivation stores (near-dup pair
-  * table, cluster table, PCA / k-means models, IVF index): honest
-  * fingerprints and atomic publish.
+/** The one protocol of the persisted-derivation stores (pair, cluster,
+  * containment, PCA, k-means, media, prediction, quality-score,
+  * LM-score and embedding-pair tables; the IVF index uses [[publish]]):
+  *
+  *  - KEY. Every store is keyed by [[StoreKey]] = (corpus_fp, plan_fp,
+  *    algo_version). `corpus_fp` ([[fileFingerprint]]) hashes the files
+  *    behind the input frame; `plan_fp` ([[planFingerprint]]) hashes
+  *    its canonicalized plan with the store's parameters folded in, so
+  *    two different frames over the same files, or one frame under two
+  *    parameter sets, never share a store.
+  *  - READ-THROUGH. [[readThrough]] owns the key check, the cold/stale
+  *    branch, the atomic publish, the meta write, the post-publish
+  *    check and the reload. A store supplies its key, a writer for the
+  *    temp directory and a loader.
+  *  - META. `path/meta` is one row: the key, then the store's non-key
+  *    payload (e.g. the pair store's route, the PCA mean). Only this
+  *    module reads or writes it.
   *
   * Two defects this module exists to close (round-10 advice):
   *
@@ -152,64 +167,110 @@ object StoreIO {
     }
   }
 
-  /** Checked read-through shared by the (data + one-row meta) stores
-    * (centroid predictions, LM scores, quality-classifier scores): load
-    * the published table when the store's meta row matches `want` =
-    * (corpus fingerprint, plan fingerprint, algorithm version); on a
-    * stale or cold store run `publishStore` (which must write data AND
-    * meta through [[publish]] — `replaceStale` forwards publish's
-    * replaceExisting) and re-load, failing loudly if the meta it finds
-    * afterwards is not its own (a concurrent writer with different
-    * inputs).
-    *
-    * Cold-vs-stale distinction matters for race safety: a truly cold
-    * slot publishes with strict no-replace semantics (a cold-race loser
-    * must defer to the winner, not swap it out), while an
-    * occupied-but-stale/unreadable store is replaced. */
-  def readThrough(spark: SparkSession, path: String, dataDir: String,
-                  want: (Long, Long, Int), label: String)
-                 (publishStore: Boolean => Unit)
-                 (load: () => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    def haveMeta(): Option[(Long, Long, Int)] = {
-      import spark.implicits.newProductEncoder
-      if (!fs.exists(new Path(s"$path/meta")) ||
-          !fs.exists(new Path(s"$path/$dataDir"))) None
-      else scala.util.Try(
-        spark.read.parquet(s"$path/meta")
-          .select(col("corpus_fp").cast("long"), col("plan_fp").cast("long"),
-            col("algo_version").cast("int"))
-          .as[(Long, Long, Int)].head()).toOption
+  /** A store's staleness key: the first three columns of its meta row. */
+  final case class StoreKey(corpusFp: Long, planFp: Long, algoVersion: Int)
+
+  /** The key of a store derived from `df` under `params` (name → value,
+    * folded into `plan_fp`) by algorithm version `algoVersion`. */
+  def key(df: DataFrame, algoVersion: Int, params: (String, Any)*): StoreKey =
+    StoreKey(fileFingerprint(df), planFingerprint(df, params: _*), algoVersion)
+
+  /** (path, len, mtime)-hash over every file-backed scan in the plan,
+    * pulled from the relation's ALREADY-MATERIALIZED FileIndex — the
+    * listing the scan itself will read, so no extra filesystem RPCs.
+    * Non-file relations (in-memory test frames) contribute nothing and
+    * fall back to plan-only keying. Also the file-listing half of every
+    * decide-once-per-corpus memo in the library (IVF/PQ training, the
+    * Jaccard route, the PCA/k-means fits). */
+  private[graft] def fileFingerprint(df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
+    val perScan = df.queryExecution.analyzed.collect {
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation => fs.location match {
+          case p: PartitioningAwareFileIndex =>
+            fpOrdered64(
+              p.allFiles().sortBy(_.getPath.toString)
+                .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)))
+          // exotic FileIndex impls expose only paths — still catches
+          // listing-membership changes, not same-name rewrites
+          case other => fpOrdered64(other.inputFiles.sorted.toSeq)
+        }
+        case _ => 0L
+      }
     }
-    def computeAndPublish(replaceStale: Boolean): org.apache.spark.sql.DataFrame = {
-      publishStore(replaceStale)
-      if (!haveMeta().contains(want)) sys.error(
-        s"$label: store at $path does not match its own publish " +
-          s"(want $want) — concurrent writer with different inputs?")
-      load()
-    }
-    haveMeta() match {
-      case Some(have) if have == want => load()
-      case Some(have) =>
-        log.warn(s"$label: store at $path is stale (have $have, " +
-          s"want $want) — re-deriving and republishing")
-        computeAndPublish(replaceStale = true)
-      case None =>
-        // a truly cold slot gets the strict no-replace publish; an
-        // occupied-but-unreadable store must be REPLACED
-        computeAndPublish(replaceStale = fs.exists(new Path(path)))
-    }
+    fpOrdered64(perScan)
   }
 
-  /** The standard one-row staleness meta of a [[readThrough]] store,
-    * written into the temp dir during [[publish]]. */
-  def writeMeta(spark: SparkSession, tmp: String,
-                want: (Long, Long, Int)): Unit = {
-    import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    Seq(want).toDF("corpus_fp", "plan_fp", "algo_version")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
+  /** Hash of the canonicalized logical plan plus ` name=value` for each
+    * parameter — the "which frame, under which settings" half of the
+    * key. Canonicalization normalizes expression ids, so the hash is
+    * stable across sessions for the same query over the same tables. */
+  private[graft] def planFingerprint(df: DataFrame, params: (String, Any)*): Long =
+    fp64(df.queryExecution.analyzed.canonicalized.toString +
+      params.map { case (k, v) => s" $k=$v" }.mkString)
+
+  /** The one-row meta of the store at `path`; None when it is missing or
+    * unreadable. */
+  def readMeta(spark: SparkSession, path: String): Option[Row] = {
+    val meta = new Path(s"$path/meta")
+    if (!meta.getFileSystem(spark.sessionState.newHadoopConf()).exists(meta)) None
+    else scala.util.Try(spark.read.parquet(meta.toString).head()).toOption
+  }
+
+  private def keyOf(meta: Row): Option[StoreKey] = scala.util.Try(StoreKey(
+    meta.getAs[Number]("corpus_fp").longValue,
+    meta.getAs[Number]("plan_fp").longValue,
+    meta.getAs[Number]("algo_version").intValue)).toOption
+
+  /** The checked read-through of every store: when `path/dataDir` exists
+    * and the meta row's key equals `key`, return `load(meta)`. Otherwise
+    * derive: [[publish]] a temp directory that `write` fills with the
+    * store's data and whose meta row this method writes (the key, then
+    * the payload columns `write` returns — literals, each aliased), then
+    * re-read the live meta, fail loudly if it is not this key (a
+    * concurrent writer with different inputs), and return `load(meta)`.
+    * A hit reads the meta once.
+    *
+    * Cold-vs-stale decides the publish's `replaceExisting`: a truly cold
+    * slot publishes with strict no-replace semantics (a cold-race loser
+    * must defer to the winner, not swap it out), while an occupied store
+    * — stale key, or no readable meta — is replaced, with a log line. */
+  def readThrough[T](spark: SparkSession, path: String, dataDir: String,
+                     key: StoreKey, label: String)
+                    (write: String => Seq[Column])
+                    (load: Row => T): T = {
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    def live(): Option[Row] =
+      if (!fs.exists(new Path(s"$path/$dataDir"))) None else readMeta(spark, path)
+    def derive(replaceStale: Boolean): T = {
+      publish(spark, path, replaceStale) { tmp =>
+        val payload = write(tmp)
+        spark.range(1).select(Seq(lit(key.corpusFp).as("corpus_fp"),
+            lit(key.planFp).as("plan_fp"),
+            lit(key.algoVersion).as("algo_version")) ++ payload: _*)
+          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
+      }
+      // whether this writer won or lost the publish race, the live store
+      // must now hold the same pure function of the same inputs
+      live().filter(keyOf(_).contains(key)).map(load).getOrElse(sys.error(
+        s"$label: store at $path does not match its own publish " +
+          s"(want $key) — concurrent writer with different inputs?"))
+    }
+    live() match {
+      case Some(meta) if keyOf(meta).contains(key) =>
+        log.info(s"$label: loading published store at $path")
+        load(meta)
+      case Some(meta) =>
+        log.warn(s"$label: store at $path is stale (have " +
+          s"${keyOf(meta).getOrElse(meta)}, want $key) — re-deriving and republishing")
+        derive(replaceStale = true)
+      case None if fs.exists(new Path(path)) =>
+        log.warn(s"$label: store at $path has no readable meta or data — " +
+          "re-deriving and replacing it")
+        derive(replaceStale = true)
+      case None => derive(replaceStale = false)
+    }
   }
 
   /** Directory rename with FAIL-if-destination-exists semantics on every

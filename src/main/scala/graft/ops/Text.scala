@@ -648,12 +648,11 @@ object Text {
   // --- persisted LM-score store ------------------------------------------
   // Store layout (graft.queries.Stores.lmStorePath):
   //   path/scores — (idCol, n_tokens, logprob, bigram_logprob)
-  //   path/meta   — ONE row (corpus_fp, plan_fp, algo_version)
+  //   path/meta   — the StoreIO key (lambda in plan_fp)
   // Rationale: the per-document LM scores are a pure function of the
   // corpus (decimal-exact sums, 6-dp rounded means), re-derived by every
   // perplexity consumer each sweep (q71/q92/q97/q98 — ~20 s of every sf1
-  // sweep before the store). Same derive-once / read-ever-after pattern
-  // as the pair/cluster/media/prediction stores.
+  // sweep before the store).
 
   /** Bump on any change to [[unigramLogProb]]/[[bigramLogProb]]
     * arithmetic: a store published by older code must re-derive, never
@@ -674,30 +673,6 @@ object Text {
       .join(bigramLogProb(df, idCol, textCol, lambda)
         .select(col(idCol), col("bigram_logprob")), Seq(idCol))
 
-  /** Publish an LM-score table: data + one-row staleness meta, via
-    * [[StoreIO.publish]] (atomic rename, race-safe). */
-  def saveLmScores(scores: DataFrame, idCol: String, path: String,
-                   corpusFp: Long, planFp: Long,
-                   replaceExisting: Boolean = true): Boolean = {
-    val spark = scores.sparkSession
-    import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    StoreIO.publish(spark, path, replaceExisting) { tmp =>
-      scores.select(col(idCol).cast("long").as(idCol),
-          col("n_tokens").cast("long").as("n_tokens"),
-          col("logprob").cast("double"), col("bigram_logprob").cast("double"))
-        .write.mode("overwrite").parquet(s"$tmp/scores")
-      Seq((corpusFp, planFp, LmScoresAlgoVersion))
-        .toDF("corpus_fp", "plan_fp", "algo_version")
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-    }
-  }
-
-  /** Load a published LM-score table (no staleness check — the caller
-    * owns provenance; [[lmScoresPersisted]] is the checked path). */
-  def loadLmScores(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame =
-    spark.read.parquet(s"$path/scores")
-
   /** The checked read-through for the LM-score store: load if the meta
     * matches `df`'s corpus/plan fingerprints and [[LmScoresAlgoVersion]];
     * else derive ([[lmScores]]), publish atomically (race-safe: strict
@@ -706,15 +681,16 @@ object Text {
   def lmScoresPersisted(df: DataFrame, idCol: String, textCol: String,
                         path: String, lambda: Double = 0.75): DataFrame = {
     val spark = df.sparkSession
-    val want = (Similarity.fileFingerprint(df),
-      StoreIO.fp64(df.queryExecution.analyzed.canonicalized.toString +
-        s" lambda=$lambda"),
-      LmScoresAlgoVersion)
-    StoreIO.readThrough(spark, path, "scores", want,
-      "lmScoresPersisted") { replaceStale =>
+    StoreIO.readThrough(spark, path, "scores",
+      StoreIO.key(df, LmScoresAlgoVersion, "lambda" -> lambda),
+      "lmScoresPersisted") { tmp =>
       lmScoresComputeCount.incrementAndGet()
-      saveLmScores(lmScores(df, idCol, textCol, lambda), idCol, path,
-        want._1, want._2, replaceExisting = replaceStale)
-    } { () => loadLmScores(spark, path) }
+      lmScores(df, idCol, textCol, lambda)
+        .select(col(idCol).cast("long").as(idCol),
+          col("n_tokens").cast("long").as("n_tokens"),
+          col("logprob").cast("double"), col("bigram_logprob").cast("double"))
+        .write.mode("overwrite").parquet(s"$tmp/scores")
+      Nil
+    } { _ => spark.read.parquet(s"$path/scores") }
   }
 }

@@ -4,31 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
 import graft.ops.Dedup
 
-/** Shared persisted-derivation stores for the query surface.
+/** The query surface's persisted-derivation stores: one path per store
+  * and corpus, each served by its operator's [[graft.ops.StoreIO.readThrough]]
+  * (derive and publish on first touch, a parquet scan ever after).
   *
-  * The θ-scored exact-Jaccard PAIR table (3-gram Jaccard ≥ 0.3 over the
-  * full `documents` corpus) is the shared upstream of the whole
-  * near-dup family: the raw pair listings (q24/q76), the curation
-  * anti-join (q42), the threshold sweep (q167), the decontamination
-  * split (q72), LSH ground truth (q207), and — via connected components
-  * at θ=0.5 — the cluster table every cluster analytic reads (q43,
-  * q185, q191–q193, …). Jaccard is pairwise (independent of the rest of
-  * the corpus), so one θ=0.3 store serves every tighter-θ, sub-corpus,
-  * and split consumer as a parquet-scan + filter. Deriving it costs a
-  * minute at sf1 (hours at 100 TB); reading it back is a scan. So the
-  * family shares ONE [[Dedup.pairsPersisted]] store: the first query of
-  * a session (or the first session ever, for a cold store root) derives
-  * + publishes, everything after loads. The CLUSTER store is derived
-  * FROM the pair store ([[Dedup.clustersPersisted]]'s `pairSource`), so
-  * the two can never disagree on pair scores.
+  * The θ=0.3 PAIR table is the shared upstream of the near-dup family:
+  * Jaccard is pairwise, so every tighter-θ, sub-corpus and split
+  * consumer filters this one table, and the CLUSTER table is derived
+  * FROM it, so the two never disagree on pair scores.
   *
   * Store paths are keyed by a walk of the corpus files (name, length,
   * mtime) — the q74_knn_ivf_saved convention — so a regenerated corpus
   * under the same directory gets a FRESH path and re-derives instead of
-  * probing a stale table; each read-through additionally verifies the
-  * corpus/plan fingerprints and algorithm version in the store's meta
-  * row before trusting it, and publishes atomically
-  * ([[graft.ops.StoreIO.publish]]).
+  * probing a stale table.
   *
   * SECURITY/ISOLATION: everything lives under ONE per-user 0700 root
   * (override: `SPARK_GRAFT_STORE_DIR`), not bare world-shared tmpdir
@@ -128,11 +116,9 @@ object Stores {
     storePath(d, "quality", "documents.parquet")
 
   /** The canonical θ-scored pair table of `d`'s documents —
-    * (doc_a, doc_b, jaccard) at the loosest surface threshold θ=0.3,
-    * loaded from the published store or derived (routed exact Jaccard)
-    * + published on first touch. Deterministic: exact integer
-    * intersections over distinct shingle sets, one double division —
-    * identical whether a caller hit the store or paid the derivation. */
+    * (doc_a, doc_b, jaccard) at the loosest surface threshold θ=0.3
+    * (routed exact Jaccard). Deterministic: exact integer intersections
+    * over distinct shingle sets, one double division. */
   def docPairs(s: SparkSession, d: String): DataFrame =
     Dedup.pairsPersisted(Tables.documents(s, d), "doc_id", "text",
       pairStorePath(d), n = 3, threshold = 0.3)
@@ -164,29 +150,25 @@ object Stores {
     }
   }
 
-  /** The canonical top-2 PCA model of `d`'s embeddings (the q137 fit) —
-    * loaded from the published store or fitted + published on first
-    * touch. Deterministic: decimal-exact power iteration, so loaded and
-    * fitted models are bit-identical ([[graft.ops.Pca.savePcaModel]]). */
+  /** The canonical top-2 PCA model of `d`'s embeddings (the q137 fit).
+    * Deterministic: decimal-exact power iteration, so loaded and fitted
+    * models are bit-identical. */
   def pcaModel(s: SparkSession, d: String): graft.ops.Pca.PcaModel =
     graft.ops.Pca.topComponentsPersisted(Tables.embeddings(s, d),
       "embedding", k = 2, iters = 12, pcaStorePath(d))
 
   /** The canonical k=4 k-means model of `d`'s embeddings (the q142
-    * fit) — loaded from the published store or fitted + published on
-    * first touch. */
+    * fit). */
   def kmeansModel(s: SparkSession, d: String): graft.ops.Kmeans.KmeansModel =
     graft.ops.Kmeans.fitPersisted(Tables.embeddings(s, d), "embedding",
       "vec_id", k = 4, iters = 8, seed = "kmeans", kmeansStorePath(d))
 
   /** The canonical near-dup cluster table of `d`'s documents —
-    * (doc_id, component_id), loaded from the published store or derived
-    * + published on first touch. Derived FROM [[docPairs]] (θ=0.3 store
+    * (doc_id, component_id). Derived FROM [[docPairs]] (θ=0.3 store
     * filtered to the clustering threshold 0.5), so pair analytics and
     * cluster analytics always agree. Deterministic: min-label components
-    * over exact routed Jaccard pairs, so every caller (and the DuckDB
-    * oracle's recursive walk) sees identical rows whether it hit the
-    * store or paid the derivation. */
+    * over exact routed Jaccard pairs (the DuckDB oracle's recursive walk
+    * sees the same rows). */
   def docClusters(s: SparkSession, d: String): DataFrame =
     Dedup.clustersPersisted(Tables.documents(s, d), "doc_id", "text",
       clusterStorePath(d), n = 3, threshold = 0.5,
@@ -198,8 +180,7 @@ object Stores {
     * at targetRecall 0.7 — band rows/tables derive from N and the
     * threshold's exact collision probability, the round-15 fix for the
     * fixed-bucket pass whose recall collapsed 16× over one corpus
-    * decade), loaded from the published store or derived + published on
-    * first touch. Precision is exact by construction (every reported
+    * decade). Precision is exact by construction (every reported
     * pair is cosine-verified); recall is the collision-model floor the
     * sf1 golden gate enforces. */
   def embedPairs(s: SparkSession, d: String): DataFrame =
@@ -209,56 +190,37 @@ object Stores {
 
   /** The canonical media-features store of `d`'s documents (decoded
     * metadata, image dHash, audio fingerprints, per-frame video hashes,
-    * 10×10-resized metadata, per-frame decoded metadata) — loaded from
-    * the published store or derived (one staged encode, six codec
-    * passes) + published on first touch. Deterministic: every feature is
-    * a pure function of the payload bytes through the real JVM codecs,
-    * so loaded and derived tables are identical
-    * ([[graft.ops.MediaStore]]). */
+    * 10×10-resized metadata, per-frame decoded metadata), derived by one
+    * staged encode and six codec passes ([[graft.ops.MediaStore]]). */
   def media(s: SparkSession, d: String): graft.ops.MediaStore.Handle =
     graft.ops.MediaStore.persisted(Tables.documents(s, d),
       mediaStorePath(d), resizeW = 10, resizeH = 10)
 
   /** The canonical θ=0.9 directed containment-pair table of `d`'s
-    * documents — (inner_id, outer_id, containment), loaded from the
-    * published store or derived (routed containment —
-    * [[Dedup.containmentPairsAuto]]) + published on first touch.
-    * Containment is pairwise, so sub-corpus/tighter-θ consumers are
-    * filters over this one table. */
+    * documents — (inner_id, outer_id, containment), routed containment
+    * ([[Dedup.containmentPairsAuto]]). Containment is pairwise, so
+    * sub-corpus/tighter-θ consumers are filters over this one table. */
   def docContainment(s: SparkSession, d: String): DataFrame =
     Dedup.containmentPersisted(Tables.documents(s, d), "doc_id", "text",
       containmentStorePath(d), n = 3, threshold = 0.9)
 
   /** The canonical centroid-classifier predictions of `d`'s embeddings
-    * (the q132 scoring) — loaded from the published store or derived +
-    * published on first touch. Deterministic: decimal-exact dot
-    * products, label-order tie-break
-    * ([[graft.ops.Classify.centroidPredictions]]). */
+    * (the q132 scoring, [[graft.ops.Classify.centroidPredictions]]). */
   def centroidPredictions(s: SparkSession, d: String): DataFrame =
     graft.ops.Classify.predictionsPersisted(Tables.embeddings(s, d),
       scoresStorePath(d))
 
   /** The canonical per-document LM-score table of `d`'s documents —
-    * (doc_id, n_tokens, logprob, bigram_logprob) at λ = 0.75, loaded
-    * from the published store or derived (one unigram + one bigram
-    * scoring pass) + published on first touch. Deterministic:
-    * decimal-exact per-token sums rounded to the 6-dp grid, so loaded
-    * and derived tables are bit-identical and every perplexity consumer
-    * (q71/q92/q97/q98) reads a parquet scan instead of re-scoring the
-    * corpus ([[graft.ops.Text.lmScoresPersisted]]). */
+    * (doc_id, n_tokens, logprob, bigram_logprob) at λ = 0.75, read by
+    * every perplexity consumer (q71/q92/q97/q98). */
   def lmScores(s: SparkSession, d: String): DataFrame =
     graft.ops.Text.lmScoresPersisted(Tables.documents(s, d), "doc_id",
       "text", lmStorePath(d))
 
   /** The canonical trained quality-classifier score table of `d`'s
     * documents — (doc_id, label, score, predicted) at the default
-    * hyperparameters, loaded from the published store or trained
-    * (decimal-exact batch GD on the 30% hash sample) + scored +
-    * published on first touch. Deterministic: bit-exact training makes
-    * loaded and derived tables identical, so q79 (and any future
-    * consumer of the calibrated scores) reads a parquet scan instead of
-    * re-running 30 gradient passes per session
-    * ([[graft.ops.Classify.qualityScoresPersisted]]). */
+    * hyperparameters (decimal-exact batch GD on the 30% hash sample),
+    * read by q79. */
   def qualityScores(s: SparkSession, d: String): DataFrame =
     graft.ops.Classify.qualityScoresPersisted(Tables.documents(s, d),
       "doc_id", "text", qualityStorePath(d))

@@ -38,7 +38,7 @@ object GoldSoak {
     val duration = args.lift(2).map(_.toInt).getOrElse(5000)
     val fpt = args.lift(3).map(_.toInt).getOrElse(40)
     val spark = graft.Session()
-    val (equal, _) = run(spark, work, rate, duration, fpt)
+    val equal = run(spark, work, rate, duration, fpt).equal
     spark.stop()
     // the standalone soak still fails loudly on divergence — but only
     // AFTER the artifact is written (run() itself never throws on the
@@ -48,13 +48,30 @@ object GoldSoak {
       s"gold outputs differ between state-store providers — see $work/gold_soak.json")
   }
 
-  /** The dual-provider drain + equivalence check; returns
-    * (equalOutputs, jsonDoc) and writes `<work>/gold_soak.json`.
-    * NEVER throws on divergence — the caller (StreamingGate, main)
-    * decides how to surface `equal = false`; the one failure mode the
-    * check exists to catch must still produce an artifact. */
+  /** One provider's drain: emitted gold rows and their checksum, the
+    * peak state rows across the drain, and the record's JSON. */
+  final case class ProviderRun(provider: String, goldRows: Long,
+                               goldHash: Long, peakStateRows: Long,
+                               json: String)
+
+  /** Both providers' runs. */
+  final case class Result(runs: Seq[ProviderRun]) {
+    /** Gold output is identical under every provider. */
+    def equal: Boolean =
+      runs.map(r => (r.goldRows, r.goldHash)).distinct.size == 1
+    /** The soak's JSON document (`gold_soak.json`). */
+    def json: String =
+      s"""{"soak":"gold_statestore","equal_output":$equal,""" +
+        s""""runs":[${runs.map(_.json).mkString(",")}]}"""
+  }
+
+  /** The dual-provider drain + equivalence check; writes
+    * `<work>/gold_soak.json`. NEVER throws on divergence — the caller
+    * (StreamingGate, main) decides how to surface `equal = false`; the
+    * one failure mode the check exists to catch must still produce an
+    * artifact. */
   def run(spark: SparkSession, work: String, rate: Int, duration: Int,
-          fpt: Int): (Boolean, String) = {
+          fpt: Int): Result = {
     // keep every tier's progress for the throughput and state readings
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", 4096L)
     new java.io.File(work).mkdirs()
@@ -198,20 +215,17 @@ object GoldSoak {
           s""""state_end":$opsJson,""" +
           s""""gold_out_rows":$goldRows,"gold_out_hash":$goldHash}"""
       println(s"[gold-soak] $rec")
-      (label, goldRows, goldHash, rec)
+      ProviderRun(label, goldRows, goldHash, peakRows, rec)
     } finally spark.streams.removeListener(listener)
 
-    val Seq(h, r) = records
-    val equal = h._2 == r._2 && h._3 == r._3
-    val doc =
-      s"""{"soak":"gold_statestore","equal_output":$equal,""" +
-        s""""runs":[${records.map(_._4).mkString(",")}]}"""
+    val result = Result(records)
     val w = new java.io.FileWriter(s"$work/gold_soak.json")
-    try w.write(doc + "\n") finally w.close()
-    println(doc)
-    if (!equal)
-      System.err.println("[gold-soak] PROVIDER DIVERGENCE: " +
-        s"hdfs ${h._2}/${h._3} vs rocksdb ${r._2}/${r._3} — artifact written")
-    (equal, doc)
+    try w.write(result.json + "\n") finally w.close()
+    println(result.json)
+    if (!result.equal)
+      System.err.println("[gold-soak] PROVIDER DIVERGENCE: " + records.map(r =>
+        s"${r.provider} ${r.goldRows}/${r.goldHash}").mkString(" vs ") +
+        " — artifact written")
+    result
   }
 }

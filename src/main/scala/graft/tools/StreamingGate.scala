@@ -191,16 +191,10 @@ object StreamingGate {
     val work = java.nio.file.Files.createTempDirectory("graft-streaming-gate")
       .toString
 
-    val (equal, soakDoc) = GoldSoak.run(spark, work, rate, duration, fpt = 40)
-
-    // parse back the two runs' headline numbers from the soak doc (the
-    // JSON is this repo's own single-line format; a regex pull keeps the
-    // gate free of JSON-library dependencies)
-    def longs(field: String): Seq[Long] =
-      s""""$field":(-?\\d+)""".r.findAllMatchIn(soakDoc)
-        .map(_.group(1).toLong).toSeq
-    val goldRows = longs("gold_out_rows")
-    val peakRows = longs("state_peak_rows")
+    val soak = GoldSoak.run(spark, work, rate, duration, fpt = 40)
+    val equal = soak.equal
+    val goldRows = soak.runs.map(_.goldRows)
+    val peakRows = soak.runs.map(_.peakStateRows)
     val nonzeroGold = goldRows.forall(_ > 0L)
     val boundedState = peakRows.forall(_ < maxStateRows)
 
@@ -241,7 +235,7 @@ object StreamingGate {
         s""""restart_rows_before":$before,"restart_rows_after":$after,""" +
         s""""events":${rate.toLong * duration},""" +
         s""""curation":$curationJson,""" +
-        s""""soak":$soakDoc}"""
+        s""""soak":${soak.json}}"""
     Option(new java.io.File(outJson).getParentFile).foreach(_.mkdirs())
     val w = new java.io.FileWriter(outJson)
     try w.write(doc + "\n") finally w.close()

@@ -93,7 +93,7 @@ class MediaStoreSpec extends SparkSuite {
     assert(warm == cold)
     // surface schema keeps the corpus's own label type (the round-12
     // string-cast regression this line pins against)
-    val sch = Classify.loadPredictions(spark, path).schema
+    val sch = spark.read.parquet(s"$path/predictions").schema
     assert(sch("label").dataType == emb.schema("label").dataType,
       s"store changed the label type: ${sch("label").dataType}")
   }

@@ -693,6 +693,10 @@ class OpsSpec extends SparkSuite {
     assert(reprobed == pairs(Similarity.knnIvf(q, e, k = 3, nCells = 4, nProbe = 2)))
     assert(Similarity.loadIvfIndex(spark, path).nCells == 4,
       "mismatched-cell-count probe must republish the index at the new geometry")
+    // the republish is atomic: the stale index was renamed aside, not
+    // overwritten in place under the live path
+    assert(new java.io.File(dir).list().exists(_.startsWith("index.old-")),
+      "stale index was overwritten in place instead of published atomically")
   }
 
   test("IVF cache retrains when the files behind an identical plan change") {

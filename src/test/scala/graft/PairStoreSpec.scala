@@ -164,4 +164,111 @@ class PairStoreSpec extends SparkSuite {
       "old-schema meta did not trigger re-derivation")
     assert(!got.contains((1L, 2L, 0.99)), "planted stale data was served")
   }
+
+  /** A tiny parquet-backed embedding corpus, unique per call, so the
+    * in-JVM PCA/k-means fit memos never serve a prior test's model. */
+  private def embCorpus(dir: String, tag: Double): org.apache.spark.sql.DataFrame = {
+    import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
+    (0 until 40).map(i => (i.toLong, Seq(i % 5 + tag, (i % 7) * 0.5, i % 3 - 1.0)))
+      .toDF("vec_id", "embedding").write.parquet(s"$dir/emb.parquet")
+    spark.read.parquet(s"$dir/emb.parquet")
+  }
+
+  /** One store re-keyed from its earlier meta layout: how to plant it
+    * (data + meta as that layout wrote them, under the corpus's real
+    * fingerprint and the earlier plan fingerprint), the read-through,
+    * its derivation count, and whether a result carries planted data. */
+  private case class Rekeyed(name: String, dataDir: String,
+                             corpus: String => org.apache.spark.sql.DataFrame,
+                             plantData: () => org.apache.spark.sql.DataFrame,
+                             oldMeta: Seq[(String, org.apache.spark.sql.Column)],
+                             read: (org.apache.spark.sql.DataFrame, String) => Any,
+                             derivations: () => Long,
+                             servesPlanted: Any => Boolean,
+                             oldPlanFp: org.apache.spark.sql.DataFrame => Long =
+                               StoreIO.planFingerprint(_))
+
+  private val docsOf = (_: String) => Tables.documents(spark, sf)
+  private def hasId(df: Any, c: String): Boolean =
+    df.asInstanceOf[org.apache.spark.sql.DataFrame].where(col(c) === -7L).count() > 0
+
+  private val rekeyed = Seq(
+    Rekeyed("pairs", "pairs", docsOf,
+      () => spark.range(1).select(lit(-7L).as("doc_a"), lit(-8L).as("doc_b"),
+        lit(0.99).as("jaccard")),
+      Seq("n" -> lit(3), "threshold" -> lit(0.3), "algo_version" -> lit(1),
+        "route" -> lit("prefix")),
+      (d, p) => Dedup.pairsPersisted(d, "doc_id", "text", p),
+      () => Dedup.pairComputeCount.get(), hasId(_, "doc_a")),
+    Rekeyed("clusters", "clusters", docsOf,
+      () => spark.range(1).select(lit(-7L).as("doc_id"), lit(-7L).as("component_id")),
+      Seq("n" -> lit(3), "threshold" -> lit(0.5), "algo_version" -> lit(1)),
+      (d, p) => Dedup.clustersPersisted(d, "doc_id", "text", p),
+      () => Dedup.clusterComputeCount.get(), hasId(_, "doc_id")),
+    Rekeyed("containment", "containment", docsOf,
+      () => spark.range(1).select(lit(-7L).as("inner_id"), lit(-8L).as("outer_id"),
+        lit(1.0).as("containment")),
+      Seq("n" -> lit(3), "threshold" -> lit(0.9), "algo_version" -> lit(1),
+        "route" -> lit("prefix")),
+      (d, p) => Dedup.containmentPersisted(d, "doc_id", "text", p),
+      () => Dedup.containmentComputeCount.get(), hasId(_, "inner_id")),
+    Rekeyed("PCA", "components", dir => embCorpus(dir, 0.0625),
+      () => spark.range(1).select(lit(0).as("component"),
+        typedLit(Seq(1.0, 0.0, 0.0)).as("loading"), lit(-7.0).as("eigenvalue")),
+      Seq("emb_col" -> lit("embedding"), "k" -> lit(1), "iters" -> lit(4),
+        "n" -> lit(40L), "mean" -> typedLit(Seq(0.0, 0.0, 0.0)),
+        "algo_version" -> lit(1)),
+      (d, p) => Pca.topComponentsPersisted(d, "embedding", k = 1, iters = 4, p),
+      () => Pca.fitCount.get(),
+      m => m.asInstanceOf[Pca.PcaModel].eigenvalues.contains(-7.0)),
+    Rekeyed("k-means", "centroids", dir => embCorpus(dir, 0.1875),
+      () => spark.range(1).select(lit(0).as("cluster"),
+        typedLit(Seq(0.0, 0.0, 0.0)).as("centroid"), lit(40L).as("size")),
+      Seq("emb_col" -> lit("embedding"), "id_col" -> lit("vec_id"),
+        "k" -> lit(1), "iters" -> lit(2), "seed" -> lit("kmeans"),
+        "inertia" -> lit(-7.0), "n" -> lit(40L), "algo_version" -> lit(1)),
+      (d, p) => Kmeans.fitPersisted(d, "embedding", "vec_id", k = 1, iters = 2,
+        seed = "kmeans", p),
+      () => Kmeans.fitCount.get(),
+      m => m.asInstanceOf[Kmeans.KmeansModel].inertia == -7.0),
+    Rekeyed("media", "features", docsOf,
+      () => spark.range(1).select(lit(-7L).as("doc_id"), lit("image").as("media_type")),
+      Seq("resize_w" -> lit(10), "resize_h" -> lit(10), "algo_version" -> lit(1)),
+      (d, p) => MediaStore.persisted(d, p),
+      () => MediaStore.computeCount.get(),
+      h => hasId(h.asInstanceOf[MediaStore.Handle].features, "doc_id")),
+    // already on the narrow meta layout, but its parameters were hashed
+    // as a sequence beside the plan rather than folded in by name
+    Rekeyed("embedding-pair", "pairs",
+      _ => Similarity.prepared(Tables.embeddings(spark, sf), "vec_id", "embedding"),
+      () => spark.range(1).select(lit(-7L).as("id_a"), lit(-8L).as("id_b"),
+        lit(1.0).as("cosine")),
+      Seq("algo_version" -> lit(1)),
+      (d, p) => Similarity.nearDupPairsPersisted(d, p, minCosine = 0.4,
+        targetRecall = 0.7),
+      () => Similarity.embedPairComputeCount.get(), hasId(_, "id_a"),
+      d => StoreIO.fpOrdered64(Seq(d.queryExecution.analyzed.canonicalized.toString,
+        "0.4", "0.7", "64"))))
+
+  for (st <- rekeyed)
+    test(s"${st.name} store under its earlier key re-derives once, then hits") {
+      val dir = tmpDir(s"rekey-${st.name}")
+      val path = s"$dir/store"
+      val corpus = st.corpus(dir)
+      // the earlier layout: corpus_fp and the earlier plan_fp, then (for
+      // the six wide layouts) parameters and payload as meta columns
+      spark.range(1).select(Seq(
+          lit(StoreIO.fileFingerprint(corpus)).as("corpus_fp"),
+          lit(st.oldPlanFp(corpus)).as("plan_fp")) ++
+          st.oldMeta.map { case (n, c) => c.as(n) }: _*)
+        .write.parquet(s"$path/meta")
+      st.plantData().write.parquet(s"$path/${st.dataDir}")
+      val c0 = st.derivations()
+      val first = st.read(corpus, path)
+      assert(st.derivations() == c0 + 1, "earlier-layout store was not re-derived")
+      assert(!st.servesPlanted(first), "planted data was served")
+      val second = st.read(corpus, path)
+      assert(st.derivations() == c0 + 1, "re-keyed store did not hit")
+      assert(!st.servesPlanted(second), "planted data was served on the hit")
+    }
 }
