@@ -201,11 +201,16 @@ object GraftFunctions {
       BpeEncode(exprs(0), merges)
     })
 
-  def register(spark: SparkSession): Unit =
+  /** Register every function the session does not hold yet. Operators
+    * call this on each construction; re-registering a held name would
+    * only replace it with the same builder (and log a WARN each time). */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -1504,17 +1504,6 @@ object Dedup {
   //                the pairs (prefix/direct = exact, capped = df-capped
   //                approximate semantics past the router's Σdf² budget)
 
-  /** The derivation route recorded in a published pair store's meta:
-    * Some("prefix"/"direct") = exact pairs, Some("capped") = df-capped
-    * approximate semantics (the store UNDERCOUNTS pairs whose shingles
-    * were all stop-capped), None = a pre-route-column store or no store.
-    * Exact-truth consumers treat anything but prefix/direct as "derive
-    * your own truth on your bounded slice". */
-  def loadPairsRoute(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Option[String] =
-    StoreIO.readMeta(spark, path)
-      .flatMap(m => scala.util.Try(m.getAs[String]("route")).toOption)
-
   /** The checked read-through path for the scored-pair store: load the
     * pair table published at `path` if its key (corpus files, input
     * plan with n/threshold, algorithm version) matches; else derive via
@@ -1524,7 +1513,18 @@ object Dedup {
     * consumers filter to their own tighter θ / id subset. */
   def pairsPersisted(docs: DataFrame, idCol: String, textCol: String,
                      path: String, n: Int = 3,
-                     threshold: Double = 0.3): DataFrame = {
+                     threshold: Double = 0.3): DataFrame =
+    pairsRouted(docs, idCol, textCol, path, n, threshold)._1
+
+  /** [[pairsPersisted]] plus the derivation route recorded in the meta row
+    * the read-through loaded: Some("prefix"/"direct") = exact pairs,
+    * Some("capped") = df-capped approximate semantics (the store
+    * UNDERCOUNTS pairs whose shingles were all stop-capped), None = a meta
+    * row without the route column. Exact-truth consumers treat anything
+    * but prefix/direct as "derive your own truth on your bounded slice".
+    * Rows and route come from the same store generation. */
+  def pairsRouted(docs: DataFrame, idCol: String, textCol: String,
+                  path: String, n: Int, threshold: Double): (DataFrame, Option[String]) = {
     val spark = docs.sparkSession
     StoreIO.readThrough(spark, path, "pairs",
       StoreIO.key(docs, PairsAlgoVersion, "n" -> n, "threshold" -> threshold),
@@ -1538,7 +1538,8 @@ object Dedup {
       // just paid the same decision), so exact-truth consumers can tell
       // a capped store from an exact one
       Seq(lit(jaccardAutoRoute(docs, idCol, textCol, n = n)).as("route"))
-    } { _ => spark.read.parquet(s"$path/pairs") }
+    } { meta => (spark.read.parquet(s"$path/pairs"),
+      scala.util.Try(meta.getAs[String]("route")).toOption) }
   }
 
   // ──────────────────── persisted cluster store ────────────────────

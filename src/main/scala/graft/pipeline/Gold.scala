@@ -4,38 +4,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Gold aggregation: the five-stateful-operator streaming query — three
-  * watermarked 1-minute tumbling aggregations (avg temperature, max
-  * vibration, max tilt) joined twice on (bridge_id, window), flattened to
-  * the 6-column gold schema (SURVEY.md §2 A1/A2/W1/W2/J2/J3;
-  * ref `gold_aggregation.py:52-109`).
-  *
-  * Semantics preserved from the reference: 2-minute watermark bounds both
-  * aggregation state and join state; append output mode means a window
-  * row is emitted exactly once, only after the watermark passes its end.
-  * Multiple stateful operators in one query require Spark ≥ 3.4 watermark
-  * propagation — Spark 4.x handles this natively.
+/** Gold aggregation: one watermarked 1-minute tumbling aggregation over
+  * the three unioned silver streams, pivoted per sensor on a `src` tag and
+  * flattened to the 6-column gold schema (SURVEY.md §2 A1/A2/W1/W2/J3; ref
+  * `gold_aggregation.py:52-109` runs three aggregations and two inner
+  * joins: five stateful operators where this runs one). The inner join is
+  * the filter keeping windows with rows from all three sensors. Each
+  * source sets its own watermark before the union, so the query's is the
+  * slowest sensor's, as in the reference; append mode emits each window
+  * once, after the watermark passes its end.
   */
 object Gold {
 
-  private def sensorAgg(spark: SparkSession, cfg: PipelineConfig, sensor: String,
-                        aggExpr: org.apache.spark.sql.Column): DataFrame = {
-    PipelineFs.ensureDir(spark, cfg.silverDir(sensor))
-    spark.readStream.schema(Schemas.silver)
-      .options(cfg.sourceOptions).parquet(cfg.silverDir(sensor))
-      .withWatermark("event_time_ts", cfg.watermark)
-      .groupBy(col("bridge_id"), window(col("event_time_ts"), cfg.windowLength))
-      .agg(aggExpr)
-  }
-
   /** The composed streaming DataFrame (unstarted — tests can inspect it). */
   def metrics(spark: SparkSession, cfg: PipelineConfig): DataFrame = {
-    val temp = sensorAgg(spark, cfg, "temperature", avg("value").as("avg_temperature"))
-    val vib  = sensorAgg(spark, cfg, "vibration", max("value").as("max_vibration"))
-    val tilt = sensorAgg(spark, cfg, "tilt", max("value").as("max_tilt_angle"))
-    temp
-      .join(vib, Seq("bridge_id", "window"), "inner")
-      .join(tilt, Seq("bridge_id", "window"), "inner")
+    val tagged = Schemas.sensors.map { sensor =>
+      PipelineFs.ensureDir(spark, cfg.silverDir(sensor))
+      spark.readStream.schema(Schemas.silver)
+        .options(cfg.sourceOptions).parquet(cfg.silverDir(sensor))
+        .withWatermark("event_time_ts", cfg.watermark)
+        .select(col("bridge_id"), col("event_time_ts"), lit(sensor).as("src"), col("value"))
+    }.reduce(_ unionByName _)
+    def of(sensor: String) = when(col("src") === sensor, col("value"))
+    val rows = Schemas.sensors.map(s => count(when(col("src") === s, lit(1))).as(s"n_$s"))
+    tagged
+      .groupBy(col("bridge_id"), window(col("event_time_ts"), cfg.windowLength))
+      .agg(avg(of("temperature")).as("avg_temperature"),
+        Seq(max(of("vibration")).as("max_vibration"), max(of("tilt")).as("max_tilt_angle")) ++ rows: _*)
+      .where(Schemas.sensors.map(s => col(s"n_$s") > 0).reduce(_ && _))
       .select(
         col("bridge_id"),
         col("window.start").as("window_start"),

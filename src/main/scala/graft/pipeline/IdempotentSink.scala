@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog, SinkFileStatus}
 import org.apache.hadoop.fs.Path
 
 /** Exactly-once parquet append for `foreachBatch` sinks.
@@ -21,13 +22,23 @@ import org.apache.hadoop.fs.Path
   *      same offsets, so a replayed batch re-creates the same partition
   *      indices with the same contents; publishing overwrites those
   *      exact names instead of adding new ones;
-  *   3. '''mark''': create `<sink>/_commits/<batchId>`. A replay that
+  *   3. '''log''': append the published files to `<sink>/_spark_metadata`
+  *      as one entry of the file log Spark's own file sink keeps. Once
+  *      that log exists, every Spark file reader of the sink — batch
+  *      reads and the downstream tier's file-stream source — lists the
+  *      sink through it, so a batch becomes visible in one atomic log
+  *      commit. Without it a streaming reader could list the sink midway
+  *      through step 2, see one partition dir's file and not another's,
+  *      and advance its watermark on half a batch: the rest then arrives
+  *      as late rows and a stateful consumer drops them;
+  *   4. '''mark''': create `<sink>/_commits/<batchId>`. A replay that
   *      finds the marker skips the batch entirely.
   *
-  * Crash anywhere between 1 and 3 and the replay converges to the same
+  * Crash anywhere between 1 and 4 and the replay converges to the same
   * final file set — no duplicate rows, no torn batch (readers never see a
-  * half-published batch as committed; parquet readers also ignore the
-  * dot/underscore staging and marker paths). The staging dir lives inside
+  * half-published batch; a replay of a batch the log already holds adds
+  * no entry; parquet readers also ignore the dot/underscore staging, log
+  * and marker paths). The staging dir lives inside
   * the sink so publish is a same-filesystem rename (metadata-only on
   * HDFS; on object stores use a real table format instead — this class
   * documents the boundary rather than pretending S3 rename is atomic).
@@ -85,13 +96,47 @@ private[pipeline] object IdempotentSink {
     f.exists(new Path(s"$sinkDir/_commits/$runTag$batchId"))
   }
 
-  /** Stage, publish, mark. `partitionCols` are passed through to the
+  /** The sink's file log, created BEFORE any file of the first logged
+    * batch is published: a reader that finds a data file then also finds
+    * the log, and lists through it. A sink that holds data from before
+    * the log (an upgrade) gets those files as the log's first entry, so
+    * they stay visible. */
+  private def fileLog(spark: org.apache.spark.sql.SparkSession,
+                      f: org.apache.hadoop.fs.FileSystem, sinkDir: String): FileStreamSinkLog = {
+    val dir = new Path(sinkDir, FileStreamSink.metadataDir)
+    val existing = if (f.exists(dir) || !f.exists(new Path(sinkDir))) Nil else {
+      val root = f.makeQualified(new Path(sinkDir)).toUri
+      val it = f.listFiles(new Path(sinkDir), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter { st =>
+        root.relativize(st.getPath.toUri).getPath.split('/')
+          .forall(n => !n.startsWith("_") && !n.startsWith("."))
+      }.toList
+    }
+    val log = new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark, dir.toString, None)
+    appendToLog(log, existing)
+    log
+  }
+
+  /** Log `files` as the next entry, unless the latest entry already holds
+    * them: a replay whose first run crashed between log and mark (one
+    * writer per sink, so no later batch can have been logged since). Spark's
+    * readers do not deduplicate paths across log entries. */
+  private def appendToLog(log: FileStreamSinkLog, files: Seq[org.apache.hadoop.fs.FileStatus]): Unit = {
+    val entry = files.map(SinkFileStatus(_))
+    val latest = log.getLatestBatchId()
+    val logged = latest.flatMap(log.get).toSeq.flatten.map(_.path).toSet
+    if (entry.exists(e => !logged(e.path)))
+      log.add(latest.map(_ + 1).getOrElse(0L), entry.toArray)
+  }
+
+  /** Stage, publish, log, mark. `partitionCols` are passed through to the
     * staged write so the sink keeps its Hive layout. `runTag` (see
     * [[tagFor]]) scopes the batch identity to one checkpoint lineage. */
   def write(batch: DataFrame, sinkDir: String, batchId: Long,
             partitionCols: Seq[String] = Nil, runTag: String = ""): Unit = {
     if (committed(batch, sinkDir, batchId, runTag)) return
     val f = fs(batch, sinkDir)
+    val log = fileLog(batch.sparkSession, f, sinkDir)
     val staging = s"$sinkDir/.staging/$runTag$batchId"
     val writer = batch.write.mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
@@ -109,6 +154,7 @@ private[pipeline] object IdempotentSink {
     // URIs yields clean relative paths
     val stagingPath = f.makeQualified(new Path(staging))
     val it = f.listFiles(stagingPath, true)
+    val published = scala.collection.mutable.ArrayBuffer.empty[Path]
     while (it.hasNext) {
       val s = it.next()
       val name = s.getPath.getName
@@ -121,8 +167,10 @@ private[pipeline] object IdempotentSink {
         if (f.exists(dest)) f.delete(dest, false) // replay of a partial publish
         if (!f.rename(s.getPath, dest))
           throw new java.io.IOException(s"could not publish $rel into $sinkDir")
+        published += dest
       }
     }
+    appendToLog(log, published.map(f.getFileStatus).toSeq)
     f.delete(stagingPath, true)
     f.mkdirs(new Path(s"$sinkDir/_commits"))
     val marker = f.create(new Path(s"$sinkDir/_commits/$runTag$batchId"), true)

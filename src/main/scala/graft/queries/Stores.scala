@@ -136,10 +136,12 @@ object Stores {
   def docPairsExactSlice(s: SparkSession, d: String,
                          maxDocId: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val stored = docPairs(s, d) // ensures the store exists + is fresh
-      .where(col("doc_a") < maxDocId && col("doc_b") < maxDocId)
-    Dedup.loadPairsRoute(s, pairStorePath(d)) match {
-      case Some("prefix") | Some("direct") => stored
+    // the same store as docPairs; rows and route from one meta read
+    val (pairs, route) = Dedup.pairsRouted(Tables.documents(s, d), "doc_id", "text",
+      pairStorePath(d), n = 3, threshold = 0.3)
+    route match {
+      case Some("prefix") | Some("direct") =>
+        pairs.where(col("doc_a") < maxDocId && col("doc_b") < maxDocId)
       case other =>
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"docPairsExactSlice: pair store route is $other (not exact) — " +

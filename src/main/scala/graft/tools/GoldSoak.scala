@@ -19,9 +19,9 @@ import graft.pipeline.{Bronze, Generator, Gold, PipelineConfig, Silver}
   * `spark.sql.streaming.stateStore.providerClass` changes NOTHING about
   * emitted gold rows at 1M-event scale (row count + rounded checksum
   * compared), and (b) the watermark actually bounds state during a long
-  * drain — peak state rows stay at (bridges × in-flight windows ×
-  * 5 stateful operators), orders of magnitude below input size, under
-  * both providers.
+  * drain — peak state rows stay at (bridges × in-flight windows) in
+  * gold's one stateful operator, orders of magnitude below input size,
+  * under both providers.
   *
   * Usage: `runMain graft.tools.GoldSoak <workDir> [rate=200]
   * [durationSec=5000] [filesPerTrigger=40]` — writes

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * could hide behind a green batch artifact (round-10 verdict item 4).
   *
   * One run = the full medallion DAG (3 bronze sources → quarantine/
-  * silver routing → 5-stateful-op gold join+window) drained end-to-end
+  * silver routing → one-stateful-operator windowed gold) drained end-to-end
   * TWICE, under the HDFS-backed and RocksDB state-store providers, at a
   * gate-sized corpus, plus an exactly-once restart probe. Checks
   * recorded (each a named pass/fail the driver can ingest):
@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions._
   *  - `nonzero_gold`    — the drain actually produced windows (a gate
   *                        that green-lights an empty pipeline is no gate);
   *  - `bounded_state`   — peak state rows stay at watermark scale
-  *                        (< `maxStateRows`, default 100× the ~900-row
-  *                        1M-event GoldSoak ceiling — state must track
+  *                        (< `maxStateRows` = 100,000, 100× the ~900-row
+  *                        ceiling the earlier five-operator gold reached
+  *                        in the 1M-event GoldSoak — state must track
   *                        in-flight windows, not corpus size);
   *  - `exactly_once`    — restarting the gold query on the SAME
   *                        checkpoint with no new input emits ZERO new

@@ -19,7 +19,7 @@ import graft.pipeline.QuantileMonitor.MonitorConfig
   * Topologies covered (the stateful shapes of the streaming surface):
   *  - watermarked windowed aggregation (Gold A1/A2, QuantileMonitor)
   *  - dropDuplicatesWithinWatermark (CurationStream exact stage)
-  *  - stream-stream windowed-agg join (Gold J2's shape)
+  *  - stream-stream windowed-agg join (J2: the reference gold's shape)
   */
 class StateStoreMatrixSpec extends SparkSuite {
   import spark.implicits._
@@ -107,8 +107,8 @@ class StateStoreMatrixSpec extends SparkSuite {
         val sink = tmpDir("ssm-j-sink"); val cp = tmpDir("ssm-j-cp")
         val in = MemoryStream[(java.sql.Timestamp, String, String, Double)]
         // one interleaved feed split into two streams by metric kind —
-        // Gold's J2 shape: two watermarked windowed aggs joined on
-        // (key, window)
+        // J2, the reference gold's shape: two watermarked windowed aggs
+        // joined on (key, window)
         val events = in.toDF().toDF("ts", "bridge", "kind", "v")
         def agg(kind: String, out: String) = events
           .where($"kind" === kind)

@@ -81,13 +81,17 @@ class StoreGcSpec extends SparkSuite {
     val path = tmpDir("gc-route") + "/pairs"
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     Dedup.pairsPersisted(docs, "doc_id", "text", path)
-    val route = Dedup.loadPairsRoute(spark, path)
+    val route = Dedup.pairsRouted(docs, "doc_id", "text", path, n = 3, threshold = 0.3)._2
     assert(route.exists(Set("prefix", "direct")),
       s"fixture corpus must record an exact route, got $route")
     assert(route.contains(Dedup.jaccardAutoRoute(docs, "doc_id", "text", n = 3)),
       "recorded route diverges from the router's decision")
     // a store without the route column (pre-round-12) reads as None —
     // the eval-slice guard then re-derives instead of trusting it
-    assert(Dedup.loadPairsRoute(spark, tmpDir("gc-noroute")).isEmpty)
+    val meta = spark.read.parquet(s"$path/meta").drop("route")
+    val rows = meta.collect().toSeq
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), meta.schema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    assert(Dedup.pairsRouted(docs, "doc_id", "text", path, n = 3, threshold = 0.3)._2.isEmpty)
   }
 }

@@ -52,6 +52,27 @@ class SignatureStoreSpec extends graft.SparkSuite {
     assert(spark.read.parquet(sink).count() == 2)
   }
 
+  test("IdempotentSink: readers see only logged files; a sink from before the log stays visible") {
+    val sink = tmpDir("idem-log")
+    IdempotentSink.write(Seq((1L, "a")).toDF("id", "v"), sink, batchId = 0)
+    // a sink written before the file log existed: data, no _spark_metadata
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$sink/_spark_metadata"))
+    IdempotentSink.write(Seq((2L, "b")).toDF("id", "v"), sink, batchId = 1)
+    assert(spark.read.parquet(sink).as[(Long, String)].collect().toSet
+      == Set((1L, "a"), (2L, "b")), "pre-log data lost when the log was created")
+
+    // a file renamed into the sink but not yet logged — the state a reader
+    // listing mid-publish would see — is invisible to batch and stream reads
+    val data = new java.io.File(sink).listFiles().filter(_.getName.endsWith(".parquet"))
+    java.nio.file.Files.copy(data.head.toPath, new java.io.File(sink, "b9-part-00000.parquet").toPath)
+    assert(spark.read.parquet(sink).count() == 2, "an unlogged file is visible")
+    val q = spark.readStream.schema(spark.read.parquet(sink).schema).parquet(sink)
+      .writeStream.format("memory").queryName("idem_log_stream")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    assert(spark.table("idem_log_stream").count() == 2, "a stream read an unlogged file")
+  }
+
   test("IdempotentSink keeps the Hive layout for partitioned sinks") {
     val sink = tmpDir("idem-part")
     val batch = Seq((1L, "x", "2024-01-01"), (2L, "y", "2024-01-02")).toDF("id", "v", "d")
