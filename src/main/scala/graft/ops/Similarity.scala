@@ -341,7 +341,7 @@ object Similarity {
     if (need > maxTables)
       log.warn(s"bandedParams: corpus (n=$n, pHat=$pHat) demands $need tables " +
         s"for recall $targetRecall at rows=$rows; clamped to $maxTables " +
-        f"(expected recall ${1.0 - math.pow(1.0 - pr, maxTables)}%.3f) — " +
+        f"(expected recall ${BandedLsh(rows, maxTables, pHat, n).expectedRecall(pHat)}%.3f) — " +
         "near-random embeddings are past sign-LSH's useful regime; consider IVF")
     BandedLsh(rows, math.max(1, math.min(maxTables, need)), pHat, n)
   }

@@ -56,9 +56,8 @@ object CurationStream {
             cleanPath: String, rejectedPath: String, checkpoint: String,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val fn: (Dataset[Row], Long) => Unit = (batch, batchId) =>
-      DualSink.write(batch.toDF(), col("quality") >= cfg.minQuality,
-        cleanPath, rejectedPath, partitionCols = Nil, batchId,
-        runTag = IdempotentSink.tagFor(checkpoint))
+      DualSink.cached(batch.toDF())(DualSink.route(_, col("quality") >= cfg.minQuality,
+        cleanPath, rejectedPath, Nil, batchId, IdempotentSink.tagFor(checkpoint)))
     curated(input, cfg).writeStream
       .queryName("curation_stream")
       .option("checkpointLocation", checkpoint)
@@ -96,9 +95,8 @@ object CurationStream {
                    cleanPath: String, rejectedPath: String, checkpoint: String,
                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val fn: (Dataset[Row], Long) => Unit = (batch, batchId) =>
-      DualSink.write(batch.toDF(), col("quality") >= cfg.minQuality,
-        cleanPath, rejectedPath, partitionCols = Nil, batchId,
-        runTag = IdempotentSink.tagFor(checkpoint))
+      DualSink.cached(batch.toDF())(DualSink.route(_, col("quality") >= cfg.minQuality,
+        cleanPath, rejectedPath, Nil, batchId, IdempotentSink.tagFor(checkpoint)))
     curatedTrained(input, model, cfg).writeStream
       .queryName("curation_trained_stream")
       .option("checkpointLocation", checkpoint)

@@ -13,6 +13,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * source sets its own watermark before the union, so the query's is the
   * slowest sensor's, as in the reference; append mode emits each window
   * once, after the watermark passes its end.
+  * After a restart (each `Pipelines.drainOnce`) no window closes until
+  * one batch holds rows of all three sensors: Spark checkpoints only the
+  * query's watermark, and a source without rows counts as 0 (pinned in
+  * `PipelineE2ESpec`).
   */
 object Gold {
 
@@ -51,23 +55,23 @@ object Gold {
       .start()
 }
 
-/** Whole-DAG orchestration. */
+/** Whole-DAG orchestration: three bronze queries (which also write silver)
+  * and one gold query. */
 object Pipelines {
 
-  /** Drain all currently-available data through bronze → silver → gold,
-    * tier by tier (AvailableNow within a tier, sequential across tiers so
-    * each tier sees its upstream's output). Returns when the DAG is
-    * quiescent. Call again after new landing data arrives — checkpoints
-    * make every rerun incremental, and a later call also advances the gold
-    * watermark so previously-open windows finalize. */
+  /** Drain all currently-available data through bronze (which also fills
+    * silver), then gold (AvailableNow within a tier, sequential across
+    * tiers so gold sees all of silver). Returns when the DAG is quiescent.
+    * Call again after new landing data arrives — checkpoints make every
+    * rerun incremental, and a later call also advances the gold watermark
+    * so previously-open windows finalize. */
   def drainOnce(spark: SparkSession, cfg: PipelineConfig): Unit = {
     cfg.applySessionConf(spark)
     Bronze.startAll(spark, cfg).foreach(_.awaitTermination())
-    Silver.startAll(spark, cfg).foreach(_.awaitTermination())
     Gold.start(spark, cfg).awaitTermination()
   }
 
-  /** Continuous mode: all 7 queries live at once on micro-batch triggers.
+  /** Continuous mode: all 4 queries live at once on micro-batch triggers.
     * Unlike the reference (which blocks on only its *first* query and so
     * never notices the other queries failing, `bronze_ingest.py:105`),
     * a caller blocking on `spark.streams.awaitAnyTermination()` sees the
@@ -75,8 +79,6 @@ object Pipelines {
   def startContinuous(spark: SparkSession, cfg: PipelineConfig,
                       trigger: Trigger): Seq[StreamingQuery] = {
     cfg.applySessionConf(spark)
-    Bronze.startAll(spark, cfg, trigger) ++
-      Silver.startAll(spark, cfg, trigger) :+
-      Gold.start(spark, cfg, trigger)
+    Bronze.startAll(spark, cfg, trigger) :+ Gold.start(spark, cfg, trigger)
   }
 }

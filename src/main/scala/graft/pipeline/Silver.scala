@@ -1,14 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.ops.Quality
 
-/** Silver enrichment: bronze parquet stream → per-sensor DQ range rules →
-  * stream-static broadcast left join with the bridges dimension → silver;
-  * rule violations → quarantine with the unenriched bronze schema
-  * (SURVEY.md §2 S2/K3/F3/F4/J1; ref `silver_enrichment.py`).
+/** Silver's rule and dimension (SURVEY.md §2 S5/F3; ref
+  * `silver_enrichment.py`). The silver sinks are written by [[Bronze.start]]
+  * from the same micro-batch as bronze.
   */
 object Silver {
 
@@ -17,29 +14,5 @@ object Silver {
     spark.read.option("header", "true").schema(Schemas.bridges).csv(cfg.bridgesCsv)
 
   /** F1+F3 — full silver validity rule for a sensor stream. */
-  def rule(sensor: String) = Quality.bronzeValid() && Quality.sensorRange(sensor)
-
-  def start(spark: SparkSession, cfg: PipelineConfig, sensor: String,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    PipelineFs.ensureDir(spark, cfg.bronzeDir(sensor))
-    val bronzeStream = spark.readStream.schema(Schemas.bronze)
-      .options(cfg.sourceOptions).parquet(cfg.bronzeDir(sensor))
-    // J1: 5-row dimension — broadcast, so the fact stream never shuffles
-    val dim = broadcast(bridges(spark, cfg))
-    val fn: (Dataset[Row], Long) => Unit = (batch, batchId) =>
-      DualSink.write(batch.toDF(), rule(sensor),
-        cfg.silverDir(sensor), cfg.silverRejectedDir(sensor), Seq("partition_date"), batchId,
-        transformValid = _.join(dim, Seq("bridge_id"), "left"),
-        runTag = IdempotentSink.tagFor(cfg.checkpoint(s"silver_$sensor")))
-    bronzeStream.writeStream
-      .queryName(s"silver_$sensor")
-      .option("checkpointLocation", cfg.checkpoint(s"silver_$sensor"))
-      .trigger(trigger)
-      .foreachBatch(fn)
-      .start()
-  }
-
-  def startAll(spark: SparkSession, cfg: PipelineConfig,
-               trigger: Trigger = Trigger.AvailableNow()): Seq[StreamingQuery] =
-    Schemas.sensors.map(start(spark, cfg, _, trigger))
+  def rule(sensor: String): Column = Quality.bronzeValid() && Quality.sensorRange(sensor)
 }

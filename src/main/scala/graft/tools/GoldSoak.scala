@@ -2,12 +2,12 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Bronze, Generator, Gold, PipelineConfig, Silver}
+import graft.pipeline.{Bronze, Generator, Gold, PipelineConfig}
 
 /** Scale soak for the medallion streaming DAG under BOTH state-store
   * providers: generates an sf1-scale landing corpus (1M raw events —
   * the size of `testdata/sf1/events.parquet`), drains it through
-  * Bronze → Silver → Gold in bounded micro-batches
+  * bronze (which also writes silver) → gold in bounded micro-batches
   * (`sourceMaxFilesPerTrigger`) under the default HDFS-backed store and
   * again under RocksDB, and records per-tier throughput (rows/s from
   * each query's own progress log) plus the gold query's state-operator
@@ -163,9 +163,6 @@ object GoldSoak {
       val bronzeQs = Bronze.startAll(spark, cfg)
       bronzeQs.foreach(_.awaitTermination())
       val bronze = tput(bronzeQs)
-      val silverQs = Silver.startAll(spark, cfg)
-      silverQs.foreach(_.awaitTermination())
-      val silver = tput(silverQs)
       val goldQ = Gold.start(spark, cfg)
       goldQ.awaitTermination()
       val gold = tput(Seq(goldQ))
@@ -204,9 +201,6 @@ object GoldSoak {
           s""""bronze_rows":${bronze._1},"bronze_sec":${fmtD(bronze._2)},""" +
           s""""bronze_rows_s":${fmtD(bronze._1 / math.max(bronze._2, 0.001))},""" +
           s""""bronze_phases":${bronze._4},""" +
-          s""""silver_rows":${silver._1},"silver_sec":${fmtD(silver._2)},""" +
-          s""""silver_rows_s":${fmtD(silver._1 / math.max(silver._2, 0.001))},""" +
-          s""""silver_phases":${silver._4},""" +
           s""""gold_rows_in":${gold._1},"gold_sec":${fmtD(gold._2)},""" +
           s""""gold_rows_s":${fmtD(gold._1 / math.max(gold._2, 0.001))},""" +
           s""""gold_phases":${gold._4},""" +

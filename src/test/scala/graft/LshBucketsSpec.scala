@@ -1,5 +1,10 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -42,5 +47,26 @@ class LshBucketsSpec extends SparkSuite {
       val perTable = nv.map(_.toSeq).toSeq.transpose.map(_.distinct.size)
       assert(perTable.forall(_ > 1), s"degenerate table: $perTable")
     }
+  }
+
+  test("bandedParams clamp logs the collision-model recall at the table cap") {
+    val messages = ArrayBuffer.empty[String]
+    val capture = new AbstractAppender("banded-params-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        messages.synchronized { messages += e.getMessage.getFormattedMessage; () }
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(capture)
+    val prm = try Similarity.bandedParams(1000000L, 0.55, 0.9, maxTables = 4)
+      finally { root.removeAppender(capture); capture.stop() }
+    assert(prm.tables == 4)
+    val recall = 1.0 - math.pow(1.0 - math.pow(0.55, prm.rows), 4)
+    assert(prm.expectedRecall(0.55) == recall)
+    val clamp = messages.filter(_.startsWith("bandedParams:"))
+    assert(clamp.size == 1, messages.mkString("\n"))
+    assert(clamp.head.contains(s"at rows=${prm.rows}; clamped to 4 " +
+      f"(expected recall $recall%.3f) — "), clamp.head)
   }
 }

@@ -106,4 +106,43 @@ class PipelineE2ESpec extends SparkSuite {
     assert(gold.count() == goldBefore)
     assert(gold.where(col("avg_temperature") === 39.999).count() == 0)
   }
+
+  test("after a gold restart, windows wait for a batch with rows of every sensor") {
+    val root = tmpDir("graft-stall")
+    val c = PipelineConfig.under(root, s"$root/bridges.csv")
+    Generator.writeBridgesCsv(c.bridgesCsv)
+    var fileNo = 0
+    def land(mmss: String, sensors: String*): Unit = sensors.foreach { s =>
+      val dir = new File(s"${c.landingDir(s)}/date=2024-03-01")
+      dir.mkdirs()
+      fileNo += 1
+      val w = new FileWriter(new File(dir, s"stall-$fileNo.json"))
+      try w.write(s"""{"event_time": "2024-03-01T00:$mmss.000Z", "bridge_id": 1, """ +
+        s""""sensor_type": "$s", "value": 1.0, "ingest_time": "2024-03-01T00:$mmss.000Z"}""" + "\n")
+      finally w.close()
+    }
+    def windows(): Seq[String] =
+      spark.read.schema(Schemas.gold).parquet(c.goldDir)
+        .select(date_format(col("window_start"), "HH:mm")).collect().map(_.getString(0)).toSeq.sorted
+
+    land("00:10", Schemas.sensors: _*)
+    Pipelines.drainOnce(spark, c)
+    assert(windows().isEmpty)
+    // Spark checkpoints the query's watermark, not each source's: the
+    // restarted gold query counts a source without rows in its batch at
+    // watermark 0, so rows of one sensor past every open window close
+    // nothing ...
+    land("10:00", "temperature")
+    Pipelines.drainOnce(spark, c)
+    assert(windows().isEmpty)
+    // ... and neither do rows of the other two in the next drain, which
+    // restarts gold again with temperature now the source without rows
+    land("10:00", "vibration", "tilt")
+    Pipelines.drainOnce(spark, c)
+    assert(windows().isEmpty)
+    // one batch with rows of every sensor closes both waiting windows
+    land("20:00", Schemas.sensors: _*)
+    Pipelines.drainOnce(spark, c)
+    assert(windows() == Seq("00:00", "00:10"))
+  }
 }

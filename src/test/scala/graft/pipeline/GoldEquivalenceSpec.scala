@@ -75,10 +75,8 @@ class GoldEquivalenceSpec extends SparkSuite {
       } finally w.close()
     }
 
-  private def drainUpstream(cfg: PipelineConfig): Unit = {
+  private def drainUpstream(cfg: PipelineConfig): Unit =
     Bronze.startAll(spark, cfg).foreach(_.awaitTermination())
-    Silver.startAll(spark, cfg).foreach(_.awaitTermination())
-  }
 
   private type GoldRow = (Int, java.sql.Timestamp, java.sql.Timestamp, Double, Double, Double)
   private def goldRows(dir: String): Seq[GoldRow] = {
