@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   *    of 100 holds about 15 queries' worth of whole-stage classes, so on
   *    the 365-query surface every query would evict the classes the next
   *    run of it needs and pay its Janino compile again. The cache holds
-  *    code keyed by generated source, never data or results.
+  *    code keyed by generated source, never data or results;
+  *  - the `file:` scheme served by [[LocalFs]], as `spark.hadoop.*`.
   *
   * Settings that depend on a caller's own arguments (a soak's progress
   * retention) are set with `spark.conf.set` on the returned session. */
@@ -25,13 +26,15 @@ object Session {
     .getOrElse(Runtime.getRuntime.availableProcessors())
 
   def apply(cores: Int = defaultCores): SparkSession = {
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+    val spark = LocalFs.HadoopConf
+      .foldLeft(builder) { case (b, (k, v)) => b.config(s"spark.hadoop.$k", v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -93,19 +93,17 @@ object Bronze {
     val derived = derive(raw)
     // optional streaming exact dedup: watermark-bounded state keyed on the
     // natural event identity (RAW event_time string, not the parsed
-    // timestamp). The WATERMARK column must be non-null for every row —
-    // a NULL event-time row would otherwise be discarded as late by the
-    // stateful operator once the watermark advances, silently losing the
-    // quarantine audit trail — so unparseable rows ride on ingest time
-    // (falling back to processing time when that is unparseable too).
+    // timestamp), watermarked on event time alone. Rows without a parsed
+    // event time go around the stateful operator (the quarantine takes
+    // them): a NULL event time cannot be watermarked, and a stand-in
+    // such as ingest time would let one unparseable row move the
+    // watermark and drop valid rows behind it.
     val deduped =
       if (cfg.dedupeLanding)
-        derived
-          .withColumn("wm_ts",
-            coalesce(col("event_time_ts"), col("ingest_time_ts"), current_timestamp()))
-          .withWatermark("wm_ts", cfg.watermark)
+        derived.where(col("event_time_ts").isNotNull)
+          .withWatermark("event_time_ts", cfg.watermark)
           .dropDuplicatesWithinWatermark("bridge_id", "sensor_type", "event_time")
-          .drop("wm_ts")
+          .unionByName(derived.where(col("event_time_ts").isNull))
       else derived
     // J1: 5-row dimension — broadcast, so the fact rows never shuffle
     val dim = broadcast(Silver.bridges(spark, cfg))

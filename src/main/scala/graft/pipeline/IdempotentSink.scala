@@ -113,7 +113,7 @@ private[pipeline] object IdempotentSink {
       }.toList
     }
     val log = new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark, dir.toString, None)
-    appendToLog(log, existing)
+    if (existing.nonEmpty) appendToLog(log, existing)
     log
   }
 

@@ -44,16 +44,20 @@ case class PipelineConfig(
       .map(n => Map("maxFilesPerTrigger" -> n.toString))
       .getOrElse(Map.empty)
 
-  /** Apply session-level knobs (state store) — called by the pipeline
-    * orchestrators before starting streaming queries. None leaves the
-    * session conf UNTOUCHED (an unset here would clobber a provider the
-    * operator configured at submit time, which is outside this config's
-    * authority); to explicitly return to Spark's default store after a
-    * RocksDB pipeline on the same session, pass
-    * `Some(PipelineConfig.DefaultProvider)`. */
-  def applySessionConf(spark: org.apache.spark.sql.SparkSession): Unit =
+  /** Apply session-level knobs — called by the pipeline orchestrators
+    * before starting streaming queries:
+    *  - the `file:` binding of [[graft.LocalFs]], which a session built
+    *    elsewhere (a `spark-submit` one, the benchmark's) does not carry;
+    *  - the state store. None leaves the session conf UNTOUCHED (an unset
+    *    here would clobber a provider the operator configured at submit
+    *    time, which is outside this config's authority); to explicitly
+    *    return to Spark's default store after a RocksDB pipeline on the
+    *    same session, pass `Some(PipelineConfig.DefaultProvider)`. */
+  def applySessionConf(spark: org.apache.spark.sql.SparkSession): Unit = {
+    graft.LocalFs.HadoopConf.foreach { case (k, v) => spark.conf.set(k, v) }
     stateStoreProvider.foreach(
       spark.conf.set("spark.sql.streaming.stateStore.providerClass", _))
+  }
 
   def landingDir(sensor: String): String = s"$landingRoot/bridge_$sensor"
   def bronzeDir(sensor: String): String = s"$bronzeRoot/$sensor"

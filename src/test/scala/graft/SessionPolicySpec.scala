@@ -31,4 +31,26 @@ class SessionPolicySpec extends SparkSuite {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "32768")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
+
+  test("the shared test session serves file: through graft.LocalFs for both Hadoop APIs") {
+    val conf = spark.sessionState.newHadoopConf()
+    val local = java.net.URI.create("file:///")
+    assert(org.apache.hadoop.fs.FileSystem.get(local, conf).isInstanceOf[NioLocalFileSystem])
+    assert(org.apache.hadoop.fs.FileSystem.getLocal(conf).getRaw.isInstanceOf[NioRawLocalFileSystem])
+    assert(org.apache.hadoop.fs.FileContext.getFileContext(local, conf).getDefaultFileSystem
+      .isInstanceOf[NioLocalFs])
+  }
+
+  test("applySessionConf binds file: on a session graft did not build") {
+    val other = spark.newSession()
+    LocalFs.HadoopConf.foreach { case (k, _) => assert(other.conf.getOption(k).isEmpty, k) }
+    graft.pipeline.PipelineConfig.under("/unused", "/unused/bridges.csv").applySessionConf(other)
+    val conf = other.sessionState.newHadoopConf()
+    LocalFs.HadoopConf.foreach { case (k, v) =>
+      assert(other.conf.get(k) == v, k)
+      assert(conf.get(k) == v, k)
+    }
+    assert(LocalFs.HadoopConf.map(_._1).toSet ==
+      Set("fs.file.impl", "fs.file.impl.disable.cache", "fs.AbstractFileSystem.file.impl"))
+  }
 }

@@ -225,12 +225,14 @@ class StateStoreMatrixSpec extends SparkSuite {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[Int]
       val cp = tmpDir("ssm-probe-cp")
+      // data first: AvailableNow fixes its end offset when the query
+      // starts, so rows added after start() may miss the only batch
+      input.addData(1, 2, 2)
       val q = input.toDF().toDF("v")
         .groupBy($"v").count()
         .writeStream.format("noop").outputMode("update")
         .option("checkpointLocation", cp)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      input.addData(1, 2, 2)
       try q.awaitTermination() finally q.stop()
       // the RocksDB provider reports provider-specific custom metrics
       // (rocksdbGetCount etc.) in the progress's stateOperators

@@ -25,12 +25,10 @@ object MedallionReference {
     val derived = Bronze.derive(raw)
     val deduped =
       if (cfg.dedupeLanding)
-        derived
-          .withColumn("wm_ts",
-            coalesce(col("event_time_ts"), col("ingest_time_ts"), current_timestamp()))
-          .withWatermark("wm_ts", cfg.watermark)
+        derived.where(col("event_time_ts").isNotNull)
+          .withWatermark("event_time_ts", cfg.watermark)
           .dropDuplicatesWithinWatermark("bridge_id", "sensor_type", "event_time")
-          .drop("wm_ts")
+          .unionByName(derived.where(col("event_time_ts").isNull))
       else derived
     val fn: (Dataset[Row], Long) => Unit = (batch, batchId) =>
       DualSink.cached(batch.toDF())(DualSink.route(_, Quality.bronzeValid(),
@@ -94,7 +92,7 @@ class MedallionEquivalenceSpec extends SparkSuite {
   /** One landing file per sensor: (sensor, bridge, event time, value). An
     * event time of the form "mm:ss" is a minute and second of
     * 2024-03-01T00 and is also the ingest time; any other event time is
-    * unparseable and rides on ingest time 00:00:30. */
+    * unparseable and has ingest time 00:00:30. */
   private def land(cfg: PipelineConfig, rows: (String, Int, String, String)*): Unit =
     rows.groupBy(_._1).foreach { case (sensor, rs) =>
       val dir = new File(s"${cfg.landingDir(sensor)}/date=2024-03-01")
