@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.{Derive, Quality}
+import graft.pipeline.IdempotentSink.Route
 
 private[pipeline] object PipelineFs {
   /** Create a stream-source dir if missing: a file-stream source refuses
@@ -18,44 +19,15 @@ private[pipeline] object PipelineFs {
   }
 }
 
-/** Shared dual-sink writer: one micro-batch scan feeds both the valid sink
-  * and the quarantine sink. The reference runs valid and rejected as
-  * independent streaming queries that each rescan the source
-  * (`bronze_ingest.py:64-103` — 4 queries per layer); at 100 TB that is 2×
-  * the I/O. Inside `foreachBatch` we cache the batch once and write both
-  * sides through [[IdempotentSink]], whose stage → publish → mark protocol
-  * makes each sink exactly-once under failure-replay — a crash between the
-  * clean and rejected writes replays into the same final file set instead
-  * of double-appending.
-  */
-private[pipeline] object DualSink {
-  /** Cache `batch` once for every sink `writes` fills from it. */
-  def cached(batch: DataFrame)(writes: DataFrame => Unit): Unit = {
-    val rows = batch.persist()
-    try writes(rows) finally { rows.unpersist(); () }
-  }
-
-  /** Valid rows (after `enrich`) to `validPath`, the rest to
-    * `rejectedPath`; returns the valid rows, unenriched. Quality.split owns
-    * the 3VL routing rule (NULL predicate → quarantine). */
-  def route(rows: DataFrame, valid: Column, validPath: String, rejectedPath: String,
-            partitionCols: Seq[String], batchId: Long, runTag: String,
-            enrich: DataFrame => DataFrame = identity): DataFrame = {
-    val (ok, bad) = Quality.split(rows, valid)
-    IdempotentSink.write(enrich(ok), validPath, batchId, partitionCols, runTag)
-    IdempotentSink.write(bad, rejectedPath, batchId, Nil, runTag)
-    ok
-  }
-}
-
 /** Landing → bronze → silver, one streaming query per sensor: the JSON
   * landing stream gets parsed timestamps + partition date, and each
-  * micro-batch, cached once, fills four sinks — invalid rows to the bronze
-  * quarantine, the rest to bronze; of those, rows passing [[Silver.rule]]
-  * joined with the bridges dimension to silver, the others to the silver
-  * quarantine (SURVEY.md §2 S1/K1-K3/P1/P2/F1-F4/J1; ref
-  * `bronze_ingest.py`, `silver_enrichment.py`, where silver is a second
-  * query reading the bronze sink).
+  * micro-batch fills four sinks from one Spark job — invalid rows to the
+  * bronze quarantine, the rest to bronze; of those, rows passing
+  * [[Silver.rule]] enriched with the bridges dimension to silver, the
+  * others to the silver quarantine (SURVEY.md §2 S1/K1-K3/P1/P2/F1-F4/J1;
+  * ref `bronze_ingest.py`, `silver_enrichment.py`, where silver is a
+  * second query reading the bronze sink and each sink rescans its source,
+  * `bronze_ingest.py:64-103`).
   */
 object Bronze {
 
@@ -93,29 +65,31 @@ object Bronze {
     val derived = derive(raw)
     // optional streaming exact dedup: watermark-bounded state keyed on the
     // natural event identity (RAW event_time string, not the parsed
-    // timestamp), watermarked on event time alone. Rows without a parsed
-    // event time go around the stateful operator (the quarantine takes
-    // them): a NULL event time cannot be watermarked, and a stand-in
-    // such as ingest time would let one unparseable row move the
-    // watermark and drop valid rows behind it.
+    // timestamp), watermarked on parsed event time. A row without one
+    // (the quarantine takes it) does not raise the max-based watermark and
+    // is never late, so an unparseable row cannot drop valid rows behind
+    // it; identical unparseable rows of one batch share a key and collapse.
     val deduped =
       if (cfg.dedupeLanding)
-        derived.where(col("event_time_ts").isNotNull)
-          .withWatermark("event_time_ts", cfg.watermark)
+        derived.withWatermark("event_time_ts", cfg.watermark)
           .dropDuplicatesWithinWatermark("bridge_id", "sensor_type", "event_time")
-          .unionByName(derived.where(col("event_time_ts").isNull))
       else derived
-    // J1: 5-row dimension — broadcast, so the fact rows never shuffle
-    val dim = broadcast(Silver.bridges(spark, cfg))
     val runTag = IdempotentSink.tagFor(cfg.checkpoint(s"bronze_$sensor"))
-    val fn: (Dataset[Row], Long) => Unit = (batch, batchId) =>
-      DualSink.cached(batch.toDF()) { rows =>
-        val bronze = DualSink.route(rows, Quality.bronzeValid(), cfg.bronzeDir(sensor),
-          cfg.bronzeRejectedDir(sensor), Seq("partition_date"), batchId, runTag)
-        DualSink.route(bronze, Silver.rule(sensor), cfg.silverDir(sensor),
-          cfg.silverRejectedDir(sensor), Seq("partition_date"), batchId, runTag,
-          enrich = _.join(dim, Seq("bridge_id"), "left"))
-      }
+    val valid = coalesce(Quality.bronzeValid(), lit(false))
+    val silverOk = coalesce(Silver.rule(sensor), lit(false))
+    val bronzeCols = Schemas.bronze.fieldNames.toSeq
+    val dataCols = bronzeCols.filterNot(_ == "partition_date")
+    val fn: (Dataset[Row], Long) => Unit = (batch, batchId) => {
+      // the dimension is read every batch, so an edited bridges.csv
+      // applies from the next batch on
+      val silverCols = col("bridge_id") +: dataCols.filterNot(_ == "bridge_id").map(col) ++:
+        Silver.dimensionColumns(batch.sparkSession, cfg)
+      IdempotentSink.writeAll(batch.toDF(), batchId, runTag, Seq(
+        Route(cfg.bronzeDir(sensor), valid, dataCols.map(col), Seq("partition_date")),
+        Route(cfg.bronzeRejectedDir(sensor), !valid, bronzeCols.map(col)),
+        Route(cfg.silverDir(sensor), silverOk, silverCols, Seq("partition_date")),
+        Route(cfg.silverRejectedDir(sensor), valid && !silverOk, bronzeCols.map(col))))
+    }
     deduped.writeStream
       .queryName(s"bronze_$sensor")
       .option("checkpointLocation", cfg.checkpoint(s"bronze_$sensor"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.{Classify, Dedup, Text}
+import graft.pipeline.IdempotentSink.Route
 
 /** Streaming corpus curation — the training-data analog of the medallion
   * flow, composed from the SAME operator library the batch queries use
@@ -16,9 +17,10 @@ import graft.ops.{Classify, Dedup, Text}
   * stateful operator is `dropDuplicatesWithinWatermark` whose state
   * carries one 32-char fingerprint per distinct document inside the
   * watermark horizon — bounded by arrival rate × watermark, not corpus
-  * size (cross-horizon dedup belongs to the batch pass, q20/q42). The
-  * dual sink reuses the single-scan `DualSink` writer, and rejected rows
-  * keep their quality score for the audit trail.
+  * size (cross-horizon dedup belongs to the batch pass, q20/q42). Both
+  * sinks are written by one [[IdempotentSink.writeAll]] job per
+  * micro-batch, and rejected rows keep their quality score for the audit
+  * trail.
   */
 object CurationStream {
 
@@ -55,15 +57,25 @@ object CurationStream {
   def start(spark: SparkSession, input: DataFrame, cfg: CurationConfig,
             cleanPath: String, rejectedPath: String, checkpoint: String,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val fn: (Dataset[Row], Long) => Unit = (batch, batchId) =>
-      DualSink.cached(batch.toDF())(DualSink.route(_, col("quality") >= cfg.minQuality,
-        cleanPath, rejectedPath, Nil, batchId, IdempotentSink.tagFor(checkpoint)))
     curated(input, cfg).writeStream
       .queryName("curation_stream")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch(fn)
+      .foreachBatch(qualityGate(cfg, cleanPath, rejectedPath, checkpoint))
       .start()
+  }
+
+  /** Clean and rejected sinks of one micro-batch, written in one Spark
+    * job; rejected rows (a NULL score included) keep their score. */
+  private def qualityGate(cfg: CurationConfig, cleanPath: String, rejectedPath: String,
+                          checkpoint: String): (Dataset[Row], Long) => Unit = {
+    val tag = IdempotentSink.tagFor(checkpoint)
+    val clean = coalesce(col("quality") >= cfg.minQuality, lit(false))
+    (batch, batchId) => {
+      val all = batch.columns.toSeq.map(batch.col)
+      IdempotentSink.writeAll(batch.toDF(), batchId, tag,
+        Seq(Route(cleanPath, clean, all), Route(rejectedPath, !clean, all)))
+    }
   }
 
   /** [[curated]] with the rule-based score swapped for a TRAINED
@@ -94,14 +106,11 @@ object CurationStream {
                    model: Classify.TrainedLogistic, cfg: CurationConfig,
                    cleanPath: String, rejectedPath: String, checkpoint: String,
                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val fn: (Dataset[Row], Long) => Unit = (batch, batchId) =>
-      DualSink.cached(batch.toDF())(DualSink.route(_, col("quality") >= cfg.minQuality,
-        cleanPath, rejectedPath, Nil, batchId, IdempotentSink.tagFor(checkpoint)))
     curatedTrained(input, model, cfg).writeStream
       .queryName("curation_trained_stream")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch(fn)
+      .foreachBatch(qualityGate(cfg, cleanPath, rejectedPath, checkpoint))
       .start()
   }
 
@@ -247,12 +256,14 @@ object CurationStream {
               lit(0), (a, x) => a + x) / lit(cfg.k.toDouble))
           .where($"est_jaccard" >= cfg.minEstJaccard)
           .select($"doc_id").distinct()
-          .persist() // three consumers below — probe runs once, not thrice
+          .persist() // two consumers below — probe runs once, not twice
         try {
-          IdempotentSink.write(docs.join(nearIds, Seq("doc_id"), "left_anti"),
-            cleanPath, batchId, Nil, tag)
-          IdempotentSink.write(docs.join(nearIds, Seq("doc_id"), "left_semi"),
-            nearDupPath, batchId, Nil, tag)
+          val flagged = docs.join(broadcast(nearIds.withColumn("_near_dup", lit(true))),
+            Seq("doc_id"), "left")
+          val near = $"_near_dup".isNotNull
+          val all = docs.columns.toSeq.map(c => flagged.col(s"`$c`"))
+          IdempotentSink.writeAll(flagged, batchId, tag,
+            Seq(Route(cleanPath, !near, all), Route(nearDupPath, near, all)))
           SignatureStore.appendBatch(
             buckets.join(nearIds, Seq("doc_id"), "left_anti"), storePath, seq)
         } finally { nearIds.unpersist(); buckets.unpersist(); () }

@@ -1,8 +1,21 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStreamSinkLog, SinkFileStatus}
+import org.apache.spark.sql.functions.{coalesce, concat_ws, lit, struct, udf}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
 /** Exactly-once parquet append for `foreachBatch` sinks.
   *
@@ -13,15 +26,17 @@ import org.apache.hadoop.fs.Path
   * protocol that log-structured table formats use, built only on the
   * Hadoop FS API:
   *
-  *   1. '''stage''': write the batch to `<sink>/.staging/<batchId>/` with
-  *      overwrite — a replay rewrites the same staging dir, never the sink;
-  *   2. '''publish''': move each staged file into the sink under a
-  *      DETERMINISTIC name, `b<batchId>-part-<index><ext>` (partition
-  *      subdirs preserved; the write job's random UUID is dropped from
-  *      the name). Streaming replay re-executes the same plan over the
-  *      same offsets, so a replayed batch re-creates the same partition
-  *      indices with the same contents; publishing overwrites those
-  *      exact names instead of adding new ones;
+  *   1. '''stage''': write the batch to `<sink>/.staging/<batchId>/`, which
+  *      is deleted first — a replay restages, never touching the sink;
+  *   2. '''publish''': move each staged file that a successful task
+  *      reported into the sink under a DETERMINISTIC name,
+  *      `b<batchId>-part-<split><ext>` (partition subdirs preserved; `ext`
+  *      is `.c000.snappy.parquet` in a partitioned sink, as Spark's own
+  *      writer names it, and `.snappy.parquet` otherwise).
+  *      Streaming replay re-executes the same plan over the same offsets,
+  *      so a replayed batch re-creates the same splits with the same
+  *      contents; publishing overwrites those exact names instead of
+  *      adding new ones;
   *   3. '''log''': append the published files to `<sink>/_spark_metadata`
   *      as one entry of the file log Spark's own file sink keeps. Once
   *      that log exists, every Spark file reader of the sink — batch
@@ -42,12 +57,19 @@ import org.apache.hadoop.fs.Path
   * the sink so publish is a same-filesystem rename (metadata-only on
   * HDFS; on object stores use a real table format instead — this class
   * documents the boundary rather than pretending S3 rename is atomic).
+  *
+  * [[writeAll]] stages every sink of a micro-batch from ONE Spark job:
+  * each task reads its split once and writes each row to the staging
+  * files of every sink the row is routed to. A batch of a few hundred
+  * rows costs one job's fixed overhead instead of one per sink.
   */
 private[pipeline] object IdempotentSink {
 
-  private def fs(batch: DataFrame, dir: String) =
-    new Path(dir).getFileSystem(
-      batch.sparkSession.sessionState.newHadoopConf())
+  /** One sink of a [[writeAll]] call: the frame's rows where `where` holds
+    * (NULL counts as false), projected to `columns`, appended to `dir`,
+    * Hive-partitioned by the frame columns `partitionCols`. */
+  case class Route(dir: String, where: Column, columns: Seq[Column],
+                   partitionCols: Seq[String] = Nil)
 
   /** Run scope for markers and published names, derived from the
     * streaming query's checkpoint location. Batch ids are only unique
@@ -90,12 +112,6 @@ private[pipeline] object IdempotentSink {
     h
   }
 
-  def committed(batch: DataFrame, sinkDir: String, batchId: Long,
-                runTag: String = ""): Boolean = {
-    val f = fs(batch, sinkDir)
-    f.exists(new Path(s"$sinkDir/_commits/$runTag$batchId"))
-  }
-
   /** The sink's file log, created BEFORE any file of the first logged
     * batch is published: a reader that finds a data file then also finds
     * the log, and lists through it. A sink that holds data from before
@@ -129,51 +145,172 @@ private[pipeline] object IdempotentSink {
       log.add(latest.map(_ + 1).getOrElse(0L), entry.toArray)
   }
 
-  /** Stage, publish, log, mark. `partitionCols` are passed through to the
-    * staged write so the sink keeps its Hive layout. `runTag` (see
-    * [[tagFor]]) scopes the batch identity to one checkpoint lineage. */
+  /** Stage, publish, log, mark one sink: a one-route [[writeAll]] of every
+    * row and column, `partitionCols` moved into the sink's Hive layout.
+    * `runTag` (see [[tagFor]]) scopes the batch identity to one
+    * checkpoint lineage. */
   def write(batch: DataFrame, sinkDir: String, batchId: Long,
-            partitionCols: Seq[String] = Nil, runTag: String = ""): Unit = {
-    if (committed(batch, sinkDir, batchId, runTag)) return
-    val f = fs(batch, sinkDir)
-    val log = fileLog(batch.sparkSession, f, sinkDir)
-    val staging = s"$sinkDir/.staging/$runTag$batchId"
-    val writer = batch.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(staging)
-    // publish: every data file under staging moves to the sink at a name
-    // derived only from (batchId, partition dir, partition index) —
-    // `part-00003-<uuid>-c000.snappy.parquet` publishes as
-    // `b7-part-00003.snappy.parquet`, so a replay (same offsets → same
-    // plan → same partition indices and contents) lands on identical
-    // names. The one nondeterminism caveat: a Spark upgrade changing AQE
-    // coalescing MID-REPLAY could alter the index set; the commit marker
-    // makes that window one unfinished batch wide, not the whole sink.
-    val partName = "^part-(\\d+)-.*?(\\..+)$".r
-    // qualify so relativize against the (always-qualified) listed file
-    // URIs yields clean relative paths
-    val stagingPath = f.makeQualified(new Path(staging))
-    val it = f.listFiles(stagingPath, true)
-    val published = scala.collection.mutable.ArrayBuffer.empty[Path]
-    while (it.hasNext) {
-      val s = it.next()
-      val name = s.getPath.getName
-      partName.findFirstMatchIn(name).foreach { m =>
-        val rel = stagingPath.toUri.relativize(s.getPath.toUri).getPath
-        val relDir = rel.stripSuffix(name).stripSuffix("/")
-        val destDir = if (relDir.isEmpty) new Path(sinkDir) else new Path(s"$sinkDir/$relDir")
-        f.mkdirs(destDir)
-        val dest = new Path(destDir, s"${runTag}b$batchId-part-${m.group(1)}${m.group(2)}")
-        if (f.exists(dest)) f.delete(dest, false) // replay of a partial publish
-        if (!f.rename(s.getPath, dest))
-          throw new java.io.IOException(s"could not publish $rel into $sinkDir")
-        published += dest
-      }
+            partitionCols: Seq[String] = Nil, runTag: String = ""): Unit =
+    writeAll(batch, batchId, runTag, Seq(Route(sinkDir, lit(true),
+      batch.columns.toSeq.filterNot(partitionCols.contains).map(batch.col), partitionCols)))
+
+  /** What a task needs to stage one route: its staging dir, data schema,
+    * whether it is Hive-partitioned, and the parquet writer factory with
+    * that schema. */
+  private case class Staging(dir: String, schema: StructType, schemaJson: String,
+                             partitioned: Boolean, factory: OutputWriterFactory)
+
+  /** A file a task finished: route index, partition subdir ("" when
+    * unpartitioned), staged name, and the split and extension it is
+    * published under. */
+  private case class Staged(route: Int, subdir: String, name: String, split: Int, ext: String)
+
+  /** Stage, publish, log and mark every route of one micro-batch, staging
+    * all of them from one Spark job over `frame`. Routes already marked
+    * committed for `(runTag, batchId)` are left out, so a replay after a
+    * crash between two routes' marks restages only the others.
+    *
+    * All partitioned routes share one partition column list: tasks sort
+    * their rows on it, so a task holds at most one open file per route.
+    * An unpartitioned route's file on split 0 is written even when empty
+    * (as Spark's single-directory writer does), so every batch publishes
+    * a file a schema can be read from. Only the files the successful task
+    * attempts report are published; a failed or speculative attempt's
+    * files stay under the dot-prefixed staging dir that readers ignore. */
+  def writeAll(frame: DataFrame, batchId: Long, runTag: String, routes: Seq[Route]): Unit = {
+    val spark = frame.sparkSession
+    val conf = spark.sessionState.newHadoopConf()
+    val open = routes.filterNot { r =>
+      val marker = new Path(s"${r.dir}/_commits/$runTag$batchId")
+      marker.getFileSystem(conf).exists(marker)
     }
-    appendToLog(log, published.map(f.getFileStatus).toSeq)
-    f.delete(stagingPath, true)
-    f.mkdirs(new Path(s"$sinkDir/_commits"))
-    val marker = f.create(new Path(s"$sinkDir/_commits/$runTag$batchId"), true)
-    marker.close()
+    if (open.isEmpty) return
+    val partitionCols = open.map(_.partitionCols).filter(_.nonEmpty).distinct match {
+      case Seq() => Nil
+      case Seq(cols) => cols
+      case more => throw new IllegalArgumentException(
+        s"routes of one writeAll must share their partition columns, got ${more.mkString("; ")}")
+    }
+    val sinks = open.map { r =>
+      val f = new Path(r.dir).getFileSystem(conf)
+      val log = fileLog(spark, f, r.dir)
+      val staging = f.makeQualified(new Path(s"${r.dir}/.staging/$runTag$batchId"))
+      f.delete(staging, true)
+      (f, log, staging)
+    }
+
+    // per route its flag and data struct, then the row's Hive partition
+    // dir, which tasks sort on
+    val dir = if (partitionCols.isEmpty) lit("") else concat_ws("/", partitionCols.map { p =>
+      udf((v: String) => ExternalCatalogUtils.getPartitionPathString(p, v))
+        .apply(frame.col(p).cast("string"))
+    }: _*)
+    val projected = frame.select(open.indices.flatMap { i =>
+      Seq(coalesce(open(i).where, lit(false)).as(s"w$i"), struct(open(i).columns: _*).as(s"d$i"))
+    } :+ dir.as("dir"): _*)
+    val rows = if (partitionCols.isEmpty) projected else projected.sortWithinPartitions("dir")
+
+    val job = Job.getInstance(conf)
+    val stagings = open.indices.map { i =>
+      val st = projected.schema(s"d$i").dataType.asInstanceOf[StructType]
+      val schema = StructType(st.fields.map(_.copy(nullable = true)))
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+      Staging(sinks(i)._3.toString, schema,
+        job.getConfiguration.get(ParquetWriteSupport.SPARK_ROW_SCHEMA),
+        open(i).partitionCols.nonEmpty, factory)
+    }
+    val hadoop = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
+    val qe = rows.queryExecution
+    val staged = SQLExecution.withNewExecutionId(qe, Some(s"stage batch $batchId")) {
+      val rdd = qe.toRdd
+      val input = if (rdd.partitions.nonEmpty) rdd
+        else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+      input.mapPartitionsWithIndex { (split, it) =>
+        Iterator.single(stageSplit(split, it, stagings, hadoop.value.value))
+      }.collect().flatten
+    }
+    hadoop.destroy()
+
+    open.indices.foreach { i =>
+      val (f, log, staging) = sinks(i)
+      val dir = open(i).dir
+      val published = staged.filter(_.route == i).map { s =>
+        val destDir = under(new Path(dir), s.subdir)
+        f.mkdirs(destDir)
+        val dest = new Path(destDir, f"${runTag}b$batchId-part-${s.split}%05d${s.ext}")
+        if (f.exists(dest)) f.delete(dest, false) // replay of a partial publish
+        val src = new Path(under(staging, s.subdir), s.name)
+        if (!f.rename(src, dest))
+          throw new java.io.IOException(s"could not publish $src into $dir")
+        dest
+      }
+      appendToLog(log, published.map(f.getFileStatus).toSeq)
+      f.delete(staging, true)
+      f.mkdirs(new Path(s"$dir/_commits"))
+      f.create(new Path(s"$dir/_commits/$runTag$batchId"), true).close()
+    }
+  }
+
+  private def under(base: Path, subdir: String): Path =
+    if (subdir.isEmpty) base else new Path(base, subdir)
+
+  /** One task of [[writeAll]]: route each row of the split to the staging
+    * file of every route whose flag is set, opening a route's next file
+    * when the row's partition dir changes (rows arrive sorted on it). */
+  private def stageSplit(split: Int, rows: Iterator[InternalRow], stagings: Seq[Staging],
+                         base: Configuration): Seq[Staged] = {
+    val attempt = TaskContext.get().attemptNumber()
+    val done = Seq.newBuilder[Staged]
+    val contexts = stagings.map { st =>
+      val c = new Configuration(base)
+      c.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, st.schemaJson)
+      new TaskAttemptContextImpl(c, new TaskAttemptID("graft", 0, TaskType.MAP, split, attempt))
+    }
+    // Spark's partitioned writer numbers a task's files per dir (`.c000`),
+    // its single-directory writer does not; published names keep both
+    val exts = stagings.indices.map(i => (if (stagings(i).partitioned) ".c000" else "") +
+      stagings(i).factory.getFileExtension(contexts(i)))
+    val names = exts.map(e => f"part-$split%05d-a$attempt$e")
+    val current = Array.fill[OutputWriter](stagings.size)(null)
+    val currentDir = Array.fill[String](stagings.size)(null)
+    def close(i: Int): Unit = if (current(i) != null) {
+      current(i).close()
+      current(i) = null
+      done += Staged(i, currentDir(i), names(i), split, exts(i))
+    }
+    def openAt(i: Int, subdir: String): Unit = {
+      close(i)
+      current(i) = stagings(i).factory.newInstance(
+        new Path(under(new Path(stagings(i).dir), subdir), names(i)).toString,
+        stagings(i).schema, contexts(i))
+      currentDir(i) = subdir
+    }
+    // an empty split 0 still stages the unpartitioned routes' files
+    if (split == 0) stagings.indices.filterNot(stagings(_).partitioned).foreach(openAt(_, ""))
+    val dirField = 2 * stagings.size
+    var lastDir: UTF8String = null
+    var subdir = ""
+    try {
+      while (rows.hasNext) {
+        val row = rows.next()
+        val dir = row.getUTF8String(dirField)
+        if (!dir.equals(lastDir)) { lastDir = dir.clone(); subdir = dir.toString }
+        var i = 0
+        while (i < stagings.size) {
+          if (row.getBoolean(2 * i)) {
+            val routeDir = if (stagings(i).partitioned) subdir else ""
+            if (current(i) == null || currentDir(i) != routeDir) openAt(i, routeDir)
+            current(i).write(row.getStruct(2 * i + 1, stagings(i).schema.size))
+          }
+          i += 1
+        }
+      }
+      stagings.indices.foreach(close)
+    } catch {
+      case e: Throwable =>
+        current.foreach(w => if (w != null) scala.util.Try(w.close()))
+        throw e
+    }
+    done.result()
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, element_at, lit, map}
 import graft.ops.Quality
 
 /** Silver's rule and dimension (SURVEY.md §2 S5/F3; ref
@@ -12,6 +13,26 @@ object Silver {
   /** S5 — static dimension load (ref `silver_enrichment.py:29-34`). */
   def bridges(spark: SparkSession, cfg: PipelineConfig): DataFrame =
     spark.read.option("header", "true").schema(Schemas.bridges).csv(cfg.bridgesCsv)
+
+  /** J1 — the dimension's non-key columns for each row's `bridge_id`, read
+    * now (one small job) and applied as literal lookups, so enrichment is
+    * a projection instead of a join. A `bridge_id` the dimension lacks
+    * gets NULLs, as the reference's left join gives. A repeated
+    * `bridge_id` would fan each of its fact rows out into several silver
+    * rows under a join; here it fails with the repeated ids named. */
+  def dimensionColumns(spark: SparkSession, cfg: PipelineConfig): Seq[Column] = {
+    val rows = bridges(spark, cfg).collect().filterNot(_.isNullAt(0))
+    val repeated = rows.groupBy(_.getInt(0)).collect { case (id, rs) if rs.length > 1 => id }
+    if (repeated.nonEmpty) throw new IllegalStateException(
+      s"${cfg.bridgesCsv} repeats bridge_id ${repeated.toSeq.sorted.mkString(", ")}")
+    Schemas.bridges.fields.toSeq.zipWithIndex.tail.map { case (field, i) =>
+      val lookup =
+        if (rows.isEmpty) lit(null)
+        else element_at(map(rows.toSeq.flatMap(r => Seq(lit(r.getInt(0)), lit(r.get(i)))): _*),
+          col("bridge_id"))
+      lookup.cast(field.dataType).as(field.name)
+    }
+  }
 
   /** F1+F3 — full silver validity rule for a sensor stream. */
   def rule(sensor: String): Column = Quality.bronzeValid() && Quality.sensorRange(sensor)

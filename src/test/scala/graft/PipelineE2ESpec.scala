@@ -1,7 +1,9 @@
 package graft
 
 import java.io.{File, FileWriter}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.pipeline._
 
 /** Golden end-to-end run (SURVEY.md §5): seeded generator → bronze →
@@ -144,5 +146,88 @@ class PipelineE2ESpec extends SparkSuite {
     land("20:00", Schemas.sensors: _*)
     Pipelines.drainOnce(spark, c)
     assert(windows() == Seq("00:00", "00:10"))
+  }
+
+  test("each bronze micro-batch runs at most two Spark jobs") {
+    val root = tmpDir("graft-jobs")
+    val c = PipelineConfig.under(root, s"$root/bridges.csv")
+    Generator.writeBridgesCsv(c.bridgesCsv)
+    Generator.generate(c.landingRoot, rate = 5, durationSeconds = 60, seed = 7L)
+    val bronzeIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val queries = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        if (e.name.startsWith("bronze_")) bronzeIds.add(e.id.toString)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    // jobs by (query id, batch id), from the local properties Spark sets on
+    // a micro-batch's thread; a marker job flushes the listener bus (events
+    // reach a listener in order)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String),
+      java.util.concurrent.atomic.AtomicInteger]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val markerKey = "graft.test.marker"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        if (p.getProperty(markerKey) != null) flushed.countDown()
+        Option(p.getProperty("sql.streaming.queryId")).foreach(q =>
+          jobs.computeIfAbsent((q, p.getProperty("streaming.sql.batchId")),
+            _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet())
+      }
+    }
+    spark.streams.addListener(queries)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipelines.drainOnce(spark, c)
+      spark.sparkContext.setLocalProperty(markerKey, "flush")
+      try spark.range(1).count() finally spark.sparkContext.setLocalProperty(markerKey, null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.streams.removeListener(queries)
+    }
+    import scala.jdk.CollectionConverters._
+    val perBatch = jobs.asScala.toMap.collect {
+      case (k @ (q, _), n) if bronzeIds.contains(q) => k -> n.get
+    }
+    assert(perBatch.keySet.map(_._1).size == 3, perBatch)
+    // the dimension read and the one job that stages all four sinks
+    assert(perBatch.values.forall(_ <= 2), perBatch)
+  }
+
+  test("dimension lookup: an unknown bridge gets NULLs, a repeated bridge_id fails the batch") {
+    import spark.implicits._
+    val root = tmpDir("graft-dim")
+    val c = PipelineConfig.under(root, s"$root/bridges.csv")
+    def bridges(lines: String*): Unit = {
+      val w = new FileWriter(c.bridgesCsv)
+      try w.write(("bridge_id,name,location,installation_date" +: lines).mkString("", "\n", "\n"))
+      finally w.close()
+    }
+    def landRow(name: String, bridge: Int): Unit = {
+      val dir = new File(s"${c.landingDir("tilt")}/date=2024-03-01")
+      dir.mkdirs()
+      val w = new FileWriter(new File(dir, name))
+      try w.write(s"""{"event_time": "2024-03-01T00:00:10.000Z", "bridge_id": $bridge, """ +
+        s""""sensor_type": "tilt", "value": 1.0, "ingest_time": "2024-03-01T00:00:10.000Z"}""" + "\n")
+      finally w.close()
+    }
+    bridges("1,Alpha,North,2001-01-01", "2,Beta,South,")
+    landRow("a.json", 1); landRow("b.json", 2); landRow("c.json", 3)
+    Bronze.start(spark, c, "tilt").awaitTermination()
+    val silver = spark.read.schema(Schemas.silver).parquet(c.silverDir("tilt"))
+      .select("bridge_id", "name", "location", "installation_date")
+      .as[(Int, String, String, String)].collect().sortBy(_._1).toSeq
+    assert(silver == Seq((1, "Alpha", "North", "2001-01-01"), (2, "Beta", "South", null),
+      (3, null, null, null)))
+
+    bridges("1,Alpha,North,2001-01-01", "4,Gamma,East,2004-04-04", "4,Delta,West,2005-05-05")
+    landRow("d.json", 4)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      Bronze.start(spark, c, "tilt").awaitTermination())
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(messages.contains("repeats bridge_id 4"), messages)
+    assert(spark.read.schema(Schemas.silver).parquet(c.silverDir("tilt")).count() == 3)
   }
 }

@@ -66,4 +66,26 @@ class StreamingDedupSpec extends SparkSuite {
       assert(rows.head.getAs[String]("event_time") == "2024-03-01T00:10:00.000Z", table)
     }
   }
+
+  test("identical unparseable rows of one batch collapse to one quarantine row") {
+    val root = tmpDir("graft-dedup-bad")
+    val cfg = PipelineConfig.under(root, s"$root/bridges.csv").copy(dedupeLanding = true)
+    Generator.writeBridgesCsv(cfg.bridgesCsv)
+    val dir = new File(s"${cfg.landingDir("temperature")}/date=2024-03-01")
+    dir.mkdirs()
+    def row(eventTime: String, ingest: String) =
+      s"""{"event_time": "$eventTime", "bridge_id": 1, "sensor_type": "temperature", """ +
+        s""""value": 21.0, "ingest_time": "2024-03-01T00:00:$ingest.000Z"}"""
+    // the dedupe key is the raw event time: one single-source plan keys
+    // every row, parsed or not
+    val w = new FileWriter(new File(dir, "bad.json"))
+    try w.write(Seq(row("garbage", "10"), row("garbage", "20"), row("other-garbage", "30"),
+      row("2024-03-01T00:00:05.000Z", "40")).mkString("", "\n", "\n")) finally w.close()
+    Bronze.start(spark, cfg, "temperature").awaitTermination()
+
+    val rejected = spark.read.parquet(cfg.bronzeRejectedRoot)
+    assert(rejected.select("event_time").as[String](org.apache.spark.sql.Encoders.STRING)
+      .collect().sorted.toSeq == Seq("garbage", "other-garbage"))
+    assert(spark.read.parquet(cfg.bronzeDir("temperature")).count() == 1)
+  }
 }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.io.{File, FileWriter}
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -17,6 +17,20 @@ import graft.ops.Quality
   * prefix. */
 object MedallionReference {
 
+  /** One micro-batch, cached once: valid rows (after `enrich`) to the
+    * date-partitioned `validDir`, the rest to `rejectedDir`, one sink
+    * write each. */
+  private def route(batch: DataFrame, valid: Column, validDir: String, rejectedDir: String,
+                    batchId: Long, runTag: String,
+                    enrich: DataFrame => DataFrame = identity): Unit = {
+    val rows = batch.persist()
+    try {
+      val (ok, bad) = Quality.split(rows, valid)
+      IdempotentSink.write(enrich(ok), validDir, batchId, Seq("partition_date"), runTag)
+      IdempotentSink.write(bad, rejectedDir, batchId, Nil, runTag)
+    } finally { rows.unpersist(); () }
+  }
+
   def bronze(spark: SparkSession, cfg: PipelineConfig, sensor: String): StreamingQuery = {
     PipelineFs.ensureDir(spark, cfg.landingDir(sensor))
     val raw = spark.readStream.schema(Schemas.rawLanding)
@@ -25,15 +39,13 @@ object MedallionReference {
     val derived = Bronze.derive(raw)
     val deduped =
       if (cfg.dedupeLanding)
-        derived.where(col("event_time_ts").isNotNull)
-          .withWatermark("event_time_ts", cfg.watermark)
+        derived.withWatermark("event_time_ts", cfg.watermark)
           .dropDuplicatesWithinWatermark("bridge_id", "sensor_type", "event_time")
-          .unionByName(derived.where(col("event_time_ts").isNull))
       else derived
     val fn: (Dataset[Row], Long) => Unit = (batch, batchId) =>
-      DualSink.cached(batch.toDF())(DualSink.route(_, Quality.bronzeValid(),
-        cfg.bronzeDir(sensor), cfg.bronzeRejectedDir(sensor), Seq("partition_date"), batchId,
-        IdempotentSink.tagFor(cfg.checkpoint(s"bronze_$sensor"))))
+      route(batch.toDF(), Quality.bronzeValid(), cfg.bronzeDir(sensor),
+        cfg.bronzeRejectedDir(sensor), batchId,
+        IdempotentSink.tagFor(cfg.checkpoint(s"bronze_$sensor")))
     deduped.writeStream
       .queryName(s"ref_bronze_$sensor")
       .option("checkpointLocation", cfg.checkpoint(s"bronze_$sensor"))
@@ -49,9 +61,9 @@ object MedallionReference {
     val dim = broadcast(Silver.bridges(spark, cfg))
     val runTag = IdempotentSink.tagFor(cfg.checkpoint(s"silver_$sensor"))
     val fn: (Dataset[Row], Long) => Unit = (batch, batchId) =>
-      DualSink.cached(batch.toDF())(DualSink.route(_, Silver.rule(sensor),
-        cfg.silverDir(sensor), cfg.silverRejectedDir(sensor), Seq("partition_date"), batchId,
-        runTag, enrich = _.join(dim, Seq("bridge_id"), "left")))
+      route(batch.toDF(), Silver.rule(sensor), cfg.silverDir(sensor),
+        cfg.silverRejectedDir(sensor), batchId, runTag,
+        enrich = _.join(dim, Seq("bridge_id"), "left"))
     bronzeStream.writeStream
       .queryName(s"ref_silver_$sensor")
       .option("checkpointLocation", cfg.checkpoint(s"silver_$sensor"))
