@@ -79,11 +79,13 @@ object Bronze {
     val silverOk = coalesce(Silver.rule(sensor), lit(false))
     val bronzeCols = Schemas.bronze.fieldNames.toSeq
     val dataCols = bronzeCols.filterNot(_ == "partition_date")
+    // this query's copy of the dimension: its file is compared every batch
+    // and parsed again only when it changed, so an edited bridges.csv
+    // applies from the next batch on
+    val dimension = new Silver.Dimension(cfg)
     val fn: (Dataset[Row], Long) => Unit = (batch, batchId) => {
-      // the dimension is read every batch, so an edited bridges.csv
-      // applies from the next batch on
       val silverCols = col("bridge_id") +: dataCols.filterNot(_ == "bridge_id").map(col) ++:
-        Silver.dimensionColumns(batch.sparkSession, cfg)
+        dimension.columns(batch.sparkSession)
       IdempotentSink.writeAll(batch.toDF(), batchId, runTag, Seq(
         Route(cfg.bronzeDir(sensor), valid, dataCols.map(col), Seq("partition_date")),
         Route(cfg.bronzeRejectedDir(sensor), !valid, bronzeCols.map(col)),

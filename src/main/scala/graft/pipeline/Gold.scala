@@ -17,6 +17,18 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * one batch holds rows of all three sensors: Spark checkpoints only the
   * query's watermark, and a source without rows counts as 0 (pinned in
   * `PipelineE2ESpec`).
+  *
+  * The aggregation runs on one state partition. Its key space is bridges
+  * × open windows (tens of rows at the pipeline's rates), and rows are
+  * partially aggregated per input split before the shuffle, so one task
+  * gets at most one row per key per split. Each further partition cost a
+  * task, a state-store load and commit, and an output file in every
+  * micro-batch. Spark pins the
+  * count in the checkpoint's offset log at the first batch and restores
+  * it on every restart: a checkpoint written with more partitions keeps
+  * them, and restarts unchanged. A key space far past one task's state
+  * (many thousands of bridges, or long windows) needs a checkpoint
+  * started with more partitions.
   */
 object Gold {
 
@@ -43,16 +55,26 @@ object Gold {
         col("avg_temperature"), col("max_vibration"), col("max_tilt_angle"))
   }
 
+  /** Starts gold on `spark` itself, so the query is in `spark.streams`.
+    * The query clones the session when it is created, inside `start()`:
+    * the one-partition setting is in the session conf only while
+    * `start()` runs, and a query another thread starts on this session in
+    * that moment would get it too. */
   def start(spark: SparkSession, cfg: PipelineConfig,
-            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    metrics(spark, cfg).writeStream
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val writer = metrics(spark, cfg).writeStream
       .queryName("gold_bridge_metrics")
       .format("parquet")
       .option("path", cfg.goldDir)
       .option("checkpointLocation", cfg.checkpoint("gold"))
       .outputMode("append")
       .trigger(trigger)
-      .start()
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.sessionState.conf.getAllConfs.get(key)
+    spark.conf.set(key, 1L)
+    try writer.start()
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 /** Whole-DAG orchestration: three bronze queries (which also write silver)

@@ -74,6 +74,7 @@ object StreamingGate {
       texts += t; t
     }
     new java.io.File(dir).mkdirs()
+    val firstSec = System.currentTimeMillis() / 1000 - nFiles
     var id = 0L
     for (f <- 0 until nFiles) {
       val sb = new StringBuilder
@@ -87,9 +88,14 @@ object StreamingGate {
         sb.append(s"""{"doc_id":$id,"text":"$text"}""").append('\n')
         id += 1
       }
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, f"docs-$f%04d.json"),
-        sb.toString)
+      val path = java.nio.file.Paths.get(dir, f"docs-$f%04d.json")
+      java.nio.file.Files.writeString(path, sb.toString)
+      // a file source admits files in modification-time order and ties in
+      // listing order; files written within one tick of the filesystem
+      // clock tie, so the arrival order, and with it which near-duplicate
+      // is kept, would vary from run to run. One second apart, in file order:
+      java.nio.file.Files.setLastModifiedTime(path,
+        java.nio.file.attribute.FileTime.fromMillis((firstSec + f) * 1000L))
     }
     id
   }

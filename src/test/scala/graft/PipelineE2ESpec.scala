@@ -3,7 +3,7 @@ package graft
 import java.io.{File, FileWriter}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import graft.pipeline._
 
 /** Golden end-to-end run (SURVEY.md §5): seeded generator → bronze →
@@ -193,6 +193,86 @@ class PipelineE2ESpec extends SparkSuite {
     assert(perBatch.keySet.map(_._1).size == 3, perBatch)
     // the dimension read and the one job that stages all four sinks
     assert(perBatch.values.forall(_ <= 2), perBatch)
+  }
+
+  /** Spark jobs that `body` runs, by (streaming query id, batch id), from
+    * the local properties Spark sets on a micro-batch's thread; a marker
+    * job flushes the listener bus (events reach a listener in order). */
+  private def jobsByBatch(body: => Unit): Map[(String, Long), Int] = {
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, Long),
+      java.util.concurrent.atomic.AtomicInteger]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val markerKey = "graft.test.marker"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        if (p.getProperty(markerKey) != null) flushed.countDown()
+        Option(p.getProperty("sql.streaming.queryId")).foreach(q =>
+          jobs.computeIfAbsent((q, p.getProperty("streaming.sql.batchId").toLong),
+            _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet())
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setLocalProperty(markerKey, "flush")
+      try spark.range(1).count() finally spark.sparkContext.setLocalProperty(markerKey, null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.map { case (k, n) => k -> n.get }.toMap
+  }
+
+  test("each bronze query parses bridges.csv only in its first batch and when its bytes change") {
+    import spark.implicits._
+    val root = tmpDir("graft-dim-parse")
+    val c = PipelineConfig.under(root, s"$root/bridges.csv").copy(sourceMaxFilesPerTrigger = Some(2))
+    Generator.writeBridgesCsv(c.bridgesCsv)
+    Generator.generate(c.landingRoot, rate = 5, durationSeconds = 60, seed = 7L)
+    var drained = Seq.empty[StreamingQuery]
+    val jobs = jobsByBatch { drained = Bronze.startAll(spark, c); drained.foreach(_.awaitTermination()) }
+    // six landing files per sensor, two per batch: the parse and the
+    // staging job in the first batch, the staging job alone after it
+    drained.foreach { q =>
+      val batches = jobs.collect { case ((id, b), n) if id == q.id.toString => b -> n }
+      assert(batches.toSeq.sorted.map(_._2) == Seq(2, 1, 1), s"${q.name}: $batches")
+    }
+
+    // same length and modification time, different bytes
+    val csv = new File(c.bridgesCsv)
+    val mtime = csv.lastModified()
+    val text = new String(java.nio.file.Files.readAllBytes(csv.toPath), "UTF-8")
+    val edited = text.replace("Bridge A", "Bridge Q")
+    assert(edited != text && edited.length == text.length)
+    // written under a hidden name and renamed in: the running query must
+    // not list a half-written file
+    def landTilt(name: String, mm: String): Unit = {
+      val dir = new File(s"${c.landingDir("tilt")}/date=2024-03-01")
+      val tmp = new File(dir, s".$name")
+      val w = new FileWriter(tmp)
+      try w.write(s"""{"event_time": "2024-03-01T00:$mm:00.000Z", "bridge_id": 1, """ +
+        s""""sensor_type": "tilt", "value": 1.0, "ingest_time": "2024-03-01T00:$mm:00.000Z"}""" + "\n")
+      finally w.close()
+      assert(tmp.renameTo(new File(dir, name)))
+    }
+    val q = Bronze.start(spark, c, "tilt", Trigger.ProcessingTime(100))
+    def step(body: => Unit): Seq[Int] =
+      jobsByBatch { body; q.processAllAvailable() }
+        .collect { case ((id, _), n) if id == q.id.toString => n }.toSeq
+    try {
+      assert(step(landTilt("x1.json", "05")) == Seq(2)) // a new query parses in its first batch
+      assert(step(landTilt("x2.json", "06")) == Seq(1))
+      assert(step {
+        java.nio.file.Files.write(csv.toPath, edited.getBytes("UTF-8"))
+        assert(csv.setLastModified(mtime) && csv.length == text.length)
+        landTilt("x3.json", "07")
+      } == Seq(2))
+      assert(step(landTilt("x4.json", "08")) == Seq(1))
+    } finally q.stop()
+    val names = spark.read.schema(Schemas.silver).parquet(c.silverDir("tilt"))
+      .where(col("event_time_ts") >= lit("2024-03-01 00:05:00").cast("timestamp"))
+      .select(date_format(col("event_time_ts"), "mm"), col("name"))
+      .as[(String, String)].collect().sorted.toSeq
+    assert(names == Seq("05" -> "Bridge A", "06" -> "Bridge A", "07" -> "Bridge Q", "08" -> "Bridge Q"))
   }
 
   test("dimension lookup: an unknown bridge gets NULLs, a repeated bridge_id fails the batch") {

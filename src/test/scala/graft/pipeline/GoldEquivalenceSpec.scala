@@ -160,6 +160,46 @@ class GoldEquivalenceSpec extends SparkSuite {
     assert(lastRef.lastProgress.stateOperators.length == 5)
   }
 
+  test("gold runs on one state partition, and a checkpoint started with more keeps them") {
+    val cfg = setup("gold-partitions")
+    val fresh = cfg.copy(goldRoot = s"${cfg.goldRoot}/fresh", checkpointRoot = s"${cfg.checkpointRoot}/fresh")
+    val pinned = cfg.copy(goldRoot = s"${cfg.goldRoot}/pinned", checkpointRoot = s"${cfg.checkpointRoot}/pinned")
+    def run(q: StreamingQuery): Long = {
+      q.awaitTermination()
+      q.lastProgress.stateOperators.head.numShufflePartitions
+    }
+    val sessionPartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(sessionPartitions == SparkSuite.Cores.toString)
+
+    land(cfg,
+      ("temperature", 1, "00:10", 20.0), ("vibration", 1, "00:20", 1.0), ("tilt", 1, "00:30", 2.0),
+      ("temperature", 2, "00:40", 25.0), ("vibration", 2, "00:45", 1.5), ("tilt", 2, "00:50", 3.0),
+      ("temperature", 2, "01:10", 26.0), ("vibration", 2, "01:20", 1.7), ("tilt", 2, "01:30", 3.3))
+    drainUpstream(cfg)
+    // a checkpoint as the session's partition count would start it
+    assert(run(Gold.metrics(spark, pinned).writeStream
+      .format("parquet")
+      .option("path", pinned.goldDir)
+      .option("checkpointLocation", pinned.checkpoint("gold"))
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()) == SparkSuite.Cores)
+    assert(run(Gold.start(spark, fresh)) == 1)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == sessionPartitions)
+
+    land(cfg,
+      ("temperature", 1, "10:00", 21.0), ("vibration", 1, "10:00", 2.0), ("tilt", 1, "10:00", 3.0),
+      ("temperature", 2, "10:05", 22.0), ("vibration", 2, "10:05", 2.5), ("tilt", 2, "10:05", 4.0))
+    drainUpstream(cfg)
+    assert(run(Gold.start(spark, pinned)) == SparkSuite.Cores)
+    assert(run(Gold.start(spark, fresh)) == 1)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == sessionPartitions)
+    val emitted = goldRows(fresh.goldDir)
+    assert(emitted.map(r => (r._1, r._2)) ==
+      Seq(1 -> ts("00:00"), 2 -> ts("00:00"), 2 -> ts("01:00")))
+    assertSame(goldRows(pinned.goldDir), emitted, "pinned checkpoint")
+  }
+
   test("Gold.start refuses a checkpoint written by the three-aggregation, two-join shape") {
     val cfg = setup("gold-upgrade")
     land(cfg,
