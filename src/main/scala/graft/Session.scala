@@ -16,8 +16,9 @@ import org.apache.spark.sql.SparkSession
   *    code keyed by generated source, never data or results;
   *  - the `file:` scheme served by [[LocalFs]], as `spark.hadoop.*`.
   *
-  * Settings that depend on a caller's own arguments (a soak's progress
-  * retention) are set with `spark.conf.set` on the returned session. */
+  * Settings that depend on a caller's own arguments (a pipeline's
+  * state-store provider) are set with `spark.conf.set` on the returned
+  * session. */
 object Session {
   val CodegenCacheEntries = 32768
 
