@@ -6,10 +6,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (see TESTDATA.md). All engine operators take DataFrames, so these are
   * the only places that know about physical paths.
   *
-  * Scale posture: plain `spark.read.parquet` gives Spark's vectorized
-  * Parquet reader with predicate pushdown, column pruning and (for
-  * partitioned layouts) partition pruning for free — on a cluster the same
-  * call scans 100 TB split by `spark.sql.files.maxPartitionBytes`.
+  * Scale posture: [[Parquet.read]] is `spark.read.parquet` with the schema
+  * taken from one driver-side footer read, so loading a table runs no
+  * Spark job. The scan is Spark's vectorized Parquet reader with
+  * predicate pushdown, column pruning and (for partitioned layouts)
+  * partition pruning — on a cluster the same call scans 100 TB split by
+  * `spark.sql.files.maxPartitionBytes`.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -30,7 +32,7 @@ object Tables {
     // functions are always registered regardless of query-map iteration
     // order (idempotent, cheap)
     graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    Parquet.read(spark, s"$sfDir/$name.parquet")
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
@@ -46,7 +48,7 @@ object Tables {
     * epoch-nanos (the ScaleGen sf1 corpus), and TIMESTAMP(MICROS) with or
     * without isAdjustedToUTC. Hardcoding any one of them is brittle by
     * design — round 7 lost 32 queries to exactly that — so the loader
-    * inspects the schema Spark actually inferred and branches:
+    * inspects the schema the file's footer gives and branches:
     *
     *   - LongType          → epoch nanos; truncate to micros (the same
     *                         truncation DuckDB applies implicitly)

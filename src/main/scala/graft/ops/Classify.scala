@@ -456,7 +456,7 @@ object Classify {
     * return a READ of the published parquet. */
   def predictionsPersisted(emb: DataFrame, path: String): DataFrame = {
     val spark = emb.sparkSession
-    StoreIO.readThrough(spark, path, "predictions",
+    StoreIO.readThrough(spark, path,
       StoreIO.key(emb, PredictionsAlgoVersion), "predictionsPersisted") { tmp =>
       predictionsComputeCount.incrementAndGet()
       // label/predicted keep the corpus's own label type (int for the
@@ -466,7 +466,7 @@ object Classify {
         .select($"vec_id".cast("long"), $"label", $"predicted")
         .write.mode("overwrite").parquet(s"$tmp/predictions")
       Nil
-    } { _ => spark.read.parquet(s"$path/predictions") }
+    } { _ => graft.Parquet.read(spark, s"$path/predictions") }
   }
 
   // ---- persisted quality-classifier score store (q79) -----------------
@@ -497,7 +497,7 @@ object Classify {
                              path: String, samplePermille: Int = 300,
                              iters: Int = 30, lr: Double = 2.0): DataFrame = {
     val spark = df.sparkSession
-    StoreIO.readThrough(spark, path, "scores",
+    StoreIO.readThrough(spark, path,
       StoreIO.key(df, QualityScoresAlgoVersion, "sample" -> samplePermille,
         "iters" -> iters, "lr" -> lr, "idCol" -> idCol, "textCol" -> textCol),
       "qualityScoresPersisted") { tmp =>
@@ -511,6 +511,6 @@ object Classify {
           col("predicted"))
         .write.mode("overwrite").parquet(s"$tmp/scores")
       Nil
-    } { _ => spark.read.parquet(s"$path/scores") }
+    } { _ => graft.Parquet.read(spark, s"$path/scores") }
   }
 }

@@ -608,7 +608,7 @@ object Dedup {
                            path: String, n: Int = 3,
                            threshold: Double = 0.9): DataFrame = {
     val spark = docs.sparkSession
-    StoreIO.readThrough(spark, path, "containment",
+    StoreIO.readThrough(spark, path,
       StoreIO.key(docs, ContainmentAlgoVersion, "n" -> n, "threshold" -> threshold),
       "containmentPersisted") { tmp =>
       containmentComputeCount.incrementAndGet()
@@ -617,7 +617,7 @@ object Dedup {
           $"containment".cast("double"))
         .write.mode("overwrite").parquet(s"$tmp/containment")
       Seq(lit(jaccardAutoRoute(docs, idCol, textCol, n = n)).as("route"))
-    } { _ => spark.read.parquet(s"$path/containment") }
+    } { _ => graft.Parquet.read(spark, s"$path/containment") }
   }
 
   /** MinHash signatures: k independent hash functions simulated by seeding
@@ -1526,7 +1526,7 @@ object Dedup {
   def pairsRouted(docs: DataFrame, idCol: String, textCol: String,
                   path: String, n: Int, threshold: Double): (DataFrame, Option[String]) = {
     val spark = docs.sparkSession
-    StoreIO.readThrough(spark, path, "pairs",
+    StoreIO.readThrough(spark, path,
       StoreIO.key(docs, PairsAlgoVersion, "n" -> n, "threshold" -> threshold),
       "pairsPersisted") { tmp =>
       pairComputeCount.incrementAndGet()
@@ -1538,7 +1538,7 @@ object Dedup {
       // just paid the same decision), so exact-truth consumers can tell
       // a capped store from an exact one
       Seq(lit(jaccardAutoRoute(docs, idCol, textCol, n = n)).as("route"))
-    } { meta => (spark.read.parquet(s"$path/pairs"),
+    } { meta => (graft.Parquet.read(spark, s"$path/pairs"),
       scala.util.Try(meta.getAs[String]("route")).toOption) }
   }
 
@@ -1581,7 +1581,7 @@ object Dedup {
                         threshold: Double = 0.5,
                         pairSource: Option[() => DataFrame] = None): DataFrame = {
     val spark = docs.sparkSession
-    StoreIO.readThrough(spark, path, "clusters",
+    StoreIO.readThrough(spark, path,
       StoreIO.key(docs, ClustersAlgoVersion, "n" -> n, "threshold" -> threshold),
       "clustersPersisted") { tmp =>
       clusterComputeCount.incrementAndGet()
@@ -1593,6 +1593,6 @@ object Dedup {
         .select($"doc_id".cast("long"), $"component_id".cast("long"))
         .write.mode("overwrite").parquet(s"$tmp/clusters")
       Nil
-    } { _ => spark.read.parquet(s"$path/clusters") }
+    } { _ => graft.Parquet.read(spark, s"$path/clusters") }
   }
 }

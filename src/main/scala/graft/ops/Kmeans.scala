@@ -160,7 +160,7 @@ object Kmeans {
                    iters: Int, seed: String, path: String): KmeansModel = {
     val spark = df.sparkSession
     import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    StoreIO.readThrough(spark, path, "centroids",
+    StoreIO.readThrough(spark, path,
       StoreIO.key(df, KmeansAlgoVersion, "embCol" -> embCol, "idCol" -> idCol,
         "k" -> k, "iters" -> iters, "seed" -> seed),
       "fitPersisted") { tmp =>
@@ -171,7 +171,7 @@ object Kmeans {
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
       Seq(lit(m.inertia).as("inertia"), lit(m.n).as("n"))
     } { meta =>
-      val rows = spark.read.parquet(s"$path/centroids")
+      val rows = graft.Parquet.read(spark, s"$path/centroids")
         .select(col("cluster").cast("int"), col("centroid"),
           col("size").cast("long"))
         .as[(Int, Seq[Double], Long)].collect().sortBy(_._1)

@@ -62,12 +62,12 @@ object MediaStore {
   /** Read handle over a PUBLISHED store (no staleness check — the
     * caller owns provenance; [[persisted]] is the checked path). */
   final case class Handle(spark: SparkSession, path: String) {
-    def features: DataFrame        = spark.read.parquet(s"$path/features")
-    def imageDhash: DataFrame      = spark.read.parquet(s"$path/image_dhash")
-    def audioFp: DataFrame         = spark.read.parquet(s"$path/audio_fp")
-    def frameHashes: DataFrame     = spark.read.parquet(s"$path/frame_hashes")
-    def resizedFeatures: DataFrame = spark.read.parquet(s"$path/resized_features")
-    def frameFeatures: DataFrame   = spark.read.parquet(s"$path/frame_features")
+    def features: DataFrame        = graft.Parquet.read(spark, s"$path/features")
+    def imageDhash: DataFrame      = graft.Parquet.read(spark, s"$path/image_dhash")
+    def audioFp: DataFrame         = graft.Parquet.read(spark, s"$path/audio_fp")
+    def frameHashes: DataFrame     = graft.Parquet.read(spark, s"$path/frame_hashes")
+    def resizedFeatures: DataFrame = graft.Parquet.read(spark, s"$path/resized_features")
+    def frameFeatures: DataFrame   = graft.Parquet.read(spark, s"$path/frame_features")
   }
 
   /** The checked read-through: return a [[Handle]] over the store at
@@ -79,7 +79,7 @@ object MediaStore {
   def persisted(docs: DataFrame, path: String,
                 resizeW: Int = 10, resizeH: Int = 10): Handle = {
     val spark = docs.sparkSession
-    StoreIO.readThrough(spark, path, "features",
+    StoreIO.readThrough(spark, path,
       StoreIO.key(docs, AlgoVersion, "resizeW" -> resizeW, "resizeH" -> resizeH),
       "MediaStore") { tmp =>
       computeCount.incrementAndGet()

@@ -207,7 +207,7 @@ object Pca {
                              iters: Int, path: String): PcaModel = {
     val spark = df.sparkSession
     import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    StoreIO.readThrough(spark, path, "components",
+    StoreIO.readThrough(spark, path,
       StoreIO.key(df, PcaAlgoVersion, "embCol" -> embCol, "k" -> k, "iters" -> iters),
       "topComponentsPersisted") { tmp =>
       val m = topComponents(df, embCol, k, iters)
@@ -217,7 +217,7 @@ object Pca {
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/components")
       Seq(lit(m.n).as("n"), typedLit(m.mean.toSeq).as("mean"))
     } { meta =>
-      val rows = spark.read.parquet(s"$path/components")
+      val rows = graft.Parquet.read(spark, s"$path/components")
         .select(col("component").cast("int"), col("loading"),
           col("eigenvalue").cast("double"))
         .as[(Int, Seq[Double], Double)].collect().sortBy(_._1)

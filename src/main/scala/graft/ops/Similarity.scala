@@ -524,7 +524,7 @@ object Similarity {
     * `corpusFp = None` — valid, but not staleness-checkable. */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
     import spark.implicits.{newProductEncoder, localSeqToDatasetHolder}
-    val raw = spark.read.parquet(path)
+    val raw = graft.Parquet.read(spark, path)
     val withFp =
       if (raw.columns.contains("corpus_fp")) raw
       else raw.withColumn("corpus_fp", lit(null).cast("bigint"))
@@ -937,7 +937,7 @@ object Similarity {
                             targetRecall: Double = 0.7,
                             maxTables: Int = 64): DataFrame = {
     val spark = vecs.sparkSession
-    StoreIO.readThrough(spark, path, "pairs",
+    StoreIO.readThrough(spark, path,
       StoreIO.key(vecs, EmbedPairsAlgoVersion, "minCosine" -> minCosine,
         "targetRecall" -> targetRecall, "maxTables" -> maxTables),
       "nearDupPairsPersisted") { tmp =>
@@ -947,7 +947,7 @@ object Similarity {
         .write.mode("overwrite").parquet(s"$tmp/pairs")
       Nil
     } { _ =>
-      spark.read.parquet(s"$path/pairs")
+      graft.Parquet.read(spark, s"$path/pairs")
         .select($"id_a", $"id_b", $"cosine")
     }
   }

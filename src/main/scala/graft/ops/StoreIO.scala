@@ -20,7 +20,10 @@ import org.apache.spark.sql.functions.lit
   *    temp directory and a loader.
   *  - META. `path/meta` is one row: the key, then the store's non-key
   *    payload (e.g. the pair store's route, the PCA mean). Only this
-  *    module reads or writes it.
+  *    module reads or writes it. [[readMeta]] keeps the row per meta
+  *    part file (path, length, mtime), so a hit lists `path/meta` and
+  *    runs no Spark job; data and meta are read with [[graft.Parquet]],
+  *    whose schema comes from one driver-side footer read.
   *
   * Two defects this module exists to close (round-10 advice):
   *
@@ -211,38 +214,53 @@ object StoreIO {
       params.map { case (k, v) => s" $k=$v" }.mkString)
 
   /** The one-row meta of the store at `path`; None when it is missing or
-    * unreadable. */
+    * unreadable. One listing of `path/meta` decides whether the row read
+    * last time still holds: it is kept with the (path, length, mtime) of
+    * the meta part files it came from. A part file's name carries its
+    * write's UUID and [[publish]] swaps whole directories, so a
+    * republished store never matches and is read again. */
   def readMeta(spark: SparkSession, path: String): Option[Row] = {
     val meta = new Path(s"$path/meta")
-    if (!meta.getFileSystem(spark.sessionState.newHadoopConf()).exists(meta)) None
-    else scala.util.Try(spark.read.parquet(meta.toString).head()).toOption
+    val parts =
+      try meta.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(meta).toSeq
+        .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+        .map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).sorted
+      catch { case _: java.io.FileNotFoundException => return None }
+    Option(metaRows.get(path)).collect { case (`parts`, row) => row }.orElse {
+      val row = scala.util.Try(graft.Parquet.read(spark, meta.toString).head()).toOption
+      row.foreach(r => metaRows.put(path, (parts, r)))
+      row
+    }
   }
+
+  /** [[readMeta]]'s last row per store path, with the part files it was
+    * read from. */
+  private val metaRows =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], Row)]()
 
   private def keyOf(meta: Row): Option[StoreKey] = scala.util.Try(StoreKey(
     meta.getAs[Number]("corpus_fp").longValue,
     meta.getAs[Number]("plan_fp").longValue,
     meta.getAs[Number]("algo_version").intValue)).toOption
 
-  /** The checked read-through of every store: when `path/dataDir` exists
-    * and the meta row's key equals `key`, return `load(meta)`. Otherwise
-    * derive: [[publish]] a temp directory that `write` fills with the
-    * store's data and whose meta row this method writes (the key, then
-    * the payload columns `write` returns — literals, each aliased), then
-    * re-read the live meta, fail loudly if it is not this key (a
-    * concurrent writer with different inputs), and return `load(meta)`.
-    * A hit reads the meta once.
+  /** The checked read-through of every store: when the meta row's key
+    * equals `key`, return `load(meta)`. Otherwise derive: [[publish]] a
+    * temp directory that `write` fills with the store's data and whose
+    * meta row this method writes (the key, then the payload columns
+    * `write` returns — literals, each aliased), then re-read the live
+    * meta, fail loudly if it is not this key (a concurrent writer with
+    * different inputs), and return `load(meta)`.
+    * A hit lists `path/meta` once, and runs no Spark job once
+    * [[readMeta]] holds the row: [[publish]] renames a store's data into
+    * place with its meta, so a live meta row vouches for the data.
     *
     * Cold-vs-stale decides the publish's `replaceExisting`: a truly cold
     * slot publishes with strict no-replace semantics (a cold-race loser
     * must defer to the winner, not swap it out), while an occupied store
     * — stale key, or no readable meta — is replaced, with a log line. */
-  def readThrough[T](spark: SparkSession, path: String, dataDir: String,
-                     key: StoreKey, label: String)
+  def readThrough[T](spark: SparkSession, path: String, key: StoreKey, label: String)
                     (write: String => Seq[Column])
                     (load: Row => T): T = {
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    def live(): Option[Row] =
-      if (!fs.exists(new Path(s"$path/$dataDir"))) None else readMeta(spark, path)
     def derive(replaceStale: Boolean): T = {
       publish(spark, path, replaceStale) { tmp =>
         val payload = write(tmp)
@@ -253,11 +271,11 @@ object StoreIO {
       }
       // whether this writer won or lost the publish race, the live store
       // must now hold the same pure function of the same inputs
-      live().filter(keyOf(_).contains(key)).map(load).getOrElse(sys.error(
+      readMeta(spark, path).filter(keyOf(_).contains(key)).map(load).getOrElse(sys.error(
         s"$label: store at $path does not match its own publish " +
           s"(want $key) — concurrent writer with different inputs?"))
     }
-    live() match {
+    readMeta(spark, path) match {
       case Some(meta) if keyOf(meta).contains(key) =>
         log.info(s"$label: loading published store at $path")
         load(meta)
@@ -265,8 +283,9 @@ object StoreIO {
         log.warn(s"$label: store at $path is stale (have " +
           s"${keyOf(meta).getOrElse(meta)}, want $key) — re-deriving and republishing")
         derive(replaceStale = true)
-      case None if fs.exists(new Path(path)) =>
-        log.warn(s"$label: store at $path has no readable meta or data — " +
+      case None if new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+          .exists(new Path(path)) =>
+        log.warn(s"$label: store at $path has no readable meta — " +
           "re-deriving and replacing it")
         derive(replaceStale = true)
       case None => derive(replaceStale = false)

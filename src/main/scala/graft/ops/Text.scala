@@ -681,7 +681,7 @@ object Text {
   def lmScoresPersisted(df: DataFrame, idCol: String, textCol: String,
                         path: String, lambda: Double = 0.75): DataFrame = {
     val spark = df.sparkSession
-    StoreIO.readThrough(spark, path, "scores",
+    StoreIO.readThrough(spark, path,
       StoreIO.key(df, LmScoresAlgoVersion, "lambda" -> lambda),
       "lmScoresPersisted") { tmp =>
       lmScoresComputeCount.incrementAndGet()
@@ -691,6 +691,6 @@ object Text {
           col("logprob").cast("double"), col("bigram_logprob").cast("double"))
         .write.mode("overwrite").parquet(s"$tmp/scores")
       Nil
-    } { _ => spark.read.parquet(s"$path/scores") }
+    } { _ => graft.Parquet.read(spark, s"$path/scores") }
   }
 }

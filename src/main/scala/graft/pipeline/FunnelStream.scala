@@ -27,9 +27,9 @@ case class FunnelProgress(user_id: Long, step_reached: Int, ts_micros: Long)
   * Semantics = the batch operator's greedy strictly-after chain, applied
   * in event-time order: step i completes at the first event of type
   * steps(i) with ts strictly after step i−1's completion. For an
-  * IN-ORDER stream (event time monotone per user across batches —
-  * [[graft.tools.CardSoak]]'s replay discipline) this equals the batch
-  * result exactly (FunnelStreamSpec pins cross-batch parity). An
+  * IN-ORDER stream (event time monotone per user across batches, as the
+  * `cardinality` scenario of [[graft.tools.Soak]] replays it) this equals
+  * the batch result exactly (FunnelStreamSpec pins cross-batch parity). An
   * out-of-order event that arrives AFTER its step window was passed
   * cannot retroactively improve the chain — the state keeps completion
   * times only (k longs per user), not the event history an exact

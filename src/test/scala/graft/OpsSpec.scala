@@ -636,7 +636,7 @@ class OpsSpec extends SparkSuite {
   test("IVF index save/load round-trips bit-exactly and probes identically") {
     val e = Similarity.prepared(Tables.embeddings(spark, sf), "vec_id", "embedding")
     val trained = Similarity.buildIvfIndex(e, nCells = 8)
-    val path = java.nio.file.Files.createTempDirectory("ivf_idx").toString + "/index"
+    val path = tmpDir("ivf_idx") + "/index"
     Similarity.saveIvfIndex(trained, spark, path)
     val loaded = Similarity.loadIvfIndex(spark, path)
     assert(loaded.centroids.length == trained.centroids.length)
@@ -650,7 +650,7 @@ class OpsSpec extends SparkSuite {
   }
 
   test("knnIvfPersisted: first call trains + publishes, fresh session loads") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_persist").toString
+    val dir = tmpDir("ivf_persist")
     val path = s"$dir/index"
     val e = Similarity.prepared(Tables.embeddings(spark, sf), "vec_id", "embedding")
     val q = e.where(col("id") < 5)
@@ -700,7 +700,7 @@ class OpsSpec extends SparkSuite {
   }
 
   test("IVF cache retrains when the files behind an identical plan change") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_stale").toString
+    val dir = tmpDir("ivf_stale")
     def writeCorpus(shift: Double): Unit =
       Tables.embeddings(spark, sf)
         .withColumn("embedding",
@@ -724,7 +724,7 @@ class OpsSpec extends SparkSuite {
   }
 
   test("persisted IVF index detects a rewritten corpus and retrains in place") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_fp").toString
+    val dir = tmpDir("ivf_fp")
     val idx = s"$dir/index"
     def writeCorpus(shift: Double): Unit =
       Tables.embeddings(spark, sf)
@@ -902,7 +902,7 @@ class OpsSpec extends SparkSuite {
   }
 
   test("nearDupPairsPersisted: derives once, store read-back identical, stale θ re-derives") {
-    val dir = java.nio.file.Files.createTempDirectory("embpairs").toString
+    val dir = tmpDir("embpairs")
     val e = Similarity.prepared(Tables.embeddings(spark, sf), "vec_id", "embedding")
     val before = Similarity.embedPairComputeCount.get()
     val first = Similarity.nearDupPairsPersisted(e, s"$dir/p", minCosine = 0.4)

@@ -50,7 +50,7 @@ class ShardSpec extends SparkSuite {
 
   test("writeShards round-trip: membership matches, within-file order is the shuffle order") {
     val docs = Tables.documents(spark, sf).select($"doc_id")
-    val out = java.nio.file.Files.createTempDirectory("shards").toString
+    val out = tmpDir("shards")
     Shard.writeShards(docs, "doc_id", nShards = 4, seed = "s", out)
     val back = spark.read.parquet(out)
     assert(back.count() == docs.count())

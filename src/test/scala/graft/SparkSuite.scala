@@ -7,10 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = Session(cores = SparkSuite.Cores)
 
+  /** A fresh work dir, deleted with everything in it when the JVM exits. */
   def tmpDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    SparkSuite.workDirs.add(d)
+    d.toString
   }
 }
 
@@ -18,4 +19,13 @@ object SparkSuite {
   /** The tests' core count: fixed, so plan shapes and partition-dependent
     * outputs do not vary with the host. */
   val Cores = 4
+
+  private val workDirs = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+    // Hadoop's hook manager runs hooks by priority, highest first; Spark
+    // stops its contexts at 50, so the work dirs go after every session
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)), 10)
+    dirs
+  }
 }
