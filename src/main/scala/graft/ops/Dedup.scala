@@ -522,6 +522,8 @@ object Dedup {
                                             textCol: String, n: Int,
                                             threshold: Double): DataFrame = {
     val (sh0, sizes) = shingleIndex(df, idCol, textCol, n)
+    // staged: both sides of the candidate self-join read the shingle
+    // index; unstaged, the scan + shingle explode runs once per side
     val sh = Staged(sh0)
     sh.select($"sh", $"doc".as("inner_id"))
       .join(sh.select($"sh", $"doc".as("outer_id")), Seq("sh"))
@@ -544,6 +546,8 @@ object Dedup {
                              n: Int, threshold: Double, maxDf: Int): DataFrame = {
     require(maxDf >= 2, s"maxDf must be >= 2 (got $maxDf)")
     val (sh0, _) = shingleIndex(df, idCol, textCol, n)
+    // staged: the sizes aggregate and the postings read the capped
+    // index; unstaged, the df-cap join and its shuffles run twice
     val kept = Staged(sh0.join(
       sh0.groupBy($"sh").agg(count(lit(1)).as("df"))
         .where($"df" <= maxDf).select($"sh"),
@@ -673,12 +677,15 @@ object Dedup {
     // duplicate multiplicity m otherwise costs m²× in every band bucket.
     // The signature identity `sid` is md5 of the JSON-encoded signature
     // (orderable, injective up to md5).
+    // staged: unstaged, q25 and q207 re-scan the corpus and write 23–47%
+    // more shuffle bytes at sf0.01 and sf0.1
     val members = minhashSignatures(df, idCol, textCol, k)
       .withColumn("sid", md5(to_json($"sig")))
       .transform(Staged(_))
     // distinct signatures are consumed four times (banded self-join both
     // sides + two re-attach joins); exchange reuse across separate join
-    // subtrees is not guaranteed, so stage the tiny frame
+    // subtrees is not guaranteed, so stage the tiny frame (unstaged,
+    // q25, q207 and q240 write 3–9× the shuffle bytes at both scales)
     val sigs = members.select($"sid", $"sig").distinct()
       .transform(Staged(_))
     val bandStructs = (0 until bands).map { j =>
@@ -773,6 +780,7 @@ object Dedup {
     // staged: the bloom build (an action, below) materializes this
     // frame, and the exact verify join reads it again — without the
     // persist the benchmark scan + shingle explode + distinct runs twice
+    // (q59 at sf0.1: 5% more shuffle bytes, one more file scan)
     val benchSh = FanOut.perRowCompute(benchmark, idCol)
       .select(explode(array_distinct(Text.shingles(col(textCol), n))).as("sh"))
       .distinct()
@@ -831,26 +839,12 @@ object Dedup {
     * trap.
     *
     * Fault-tolerance caveat: the distributed path truncates lineage with
-    * `localCheckpoint`, whose blocks live only in executor storage — NOT
-    * recoverable. Losing any executor mid-loop (task failure storm,
-    * dynamic-allocation decommission, spot preemption) fails the job,
-    * which must then be rerun from the pair frame. On local[*] and on
-    * static clusters with `spark.decommission.enabled=false` this is
-    * moot; for long cluster runs under dynamic allocation pass
-    * `reliableCheckpoints = true` (after `sc.setCheckpointDir`) to use
-    * HDFS/object-store-backed `checkpoint()` instead — each round then
-    * survives executor loss at the cost of a write per round. */
+    * eager `localCheckpoint`s, whose blocks live only in executor storage,
+    * so losing an executor mid-loop fails the job and it must be rerun
+    * from the pair frame. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          driverLimit: Long = 1L << 20,
-                          reliableCheckpoints: Boolean = false): DataFrame = {
+                          driverLimit: Long = 1L << 20): DataFrame = {
     val jumpFrom = 3
-    if (reliableCheckpoints)
-      require(pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoints=true requires sc.setCheckpointDir(...) first")
-    // both variants are EAGER: the plan-truncation reasoning below needs
-    // the frame rebased on materialized blocks before the next round
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoints) df.checkpoint() else df.localCheckpoint()
     val aCol = pairs.columns(0)
     val bCol = pairs.columns(1)
     // integral ids are normalized to long so the driver union-find and
@@ -899,8 +893,8 @@ object Dedup {
     // rebases the frame on the materialized RDD (constant-size plan per
     // round); dropped rounds are freed by the ContextCleaner once
     // unreferenced.
-    var labels = ckpt(edges.select($"src".as("node")).distinct()
-      .withColumn("label", $"node"))
+    var labels = edges.select($"src".as("node")).distinct()
+      .withColumn("label", $"node").localCheckpoint()
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -924,10 +918,11 @@ object Dedup {
       // stay single-join: the dense-cluster common case converges there
       // and never pays the second shuffle. `prev` still tracks the
       // pre-round label, so the convergence scan is unchanged.
-      val next = ckpt(if (i < jumpFrom) minned
+      val next = (if (i < jumpFrom) minned
         else minned.join(
             minned.select($"node".as("label"), $"label".as("__jump")), Seq("label"))
           .select($"node", least($"label", $"__jump").as("label"), $"prev"))
+        .localCheckpoint()
       converged = next.where($"label" < $"prev").isEmpty
       labels = next.select($"node", $"label")
       i += 1
@@ -1043,10 +1038,13 @@ object Dedup {
     // signatures and expands afterwards. With duplicate multiplicity m
     // the chunk-bucket self-join would otherwise cost m²× (measured
     // 41–69 s vs ~4 s on a 10×-duplicated corpus at sf0.1×10).
+    // staged: unstaged, q26 scans the corpus three times and writes
+    // 2.9× the shuffle bytes at sf0.01 and sf0.1
     val members = sigFrame
       .transform(Staged(_))
     // distinct signatures feed the chunk self-join (both sides); stage
     // the tiny frame rather than rely on cross-subtree exchange reuse
+    // (unstaged, q26 writes 5–6% more shuffle bytes in 4–5 more jobs)
     val sigs = members.select($"sig").distinct()
       .transform(Staged(_))
     val chunkStructs = (0 until chunks).map { j =>

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * delta never cross-joins the base, and at 100 TB the two digest frames
   * are the only state the admission check touches (they are exactly what
   * an incremental pipeline would persist between drops — see
-  * [[graft.ops.Layout]] for keeping them sorted/bucketed on disk).
+  * [[graft.ops.Layout]] for clustering them on disk).
   * Tile keys default to xxhash64 (8-byte shuffle rows at scale); the
   * oracle surface passes md5 (engine-portable, q86's precedent).
   */

@@ -1,37 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** Physical-layout operators — the storage-side levers that decide whether
-  * a 100 TB join shuffles or not.
-  *
-  *  - bucketed tables (hash-clustered by join key, sorted within buckets)
-  *    → repeated equi-joins and aggregations on the bucket key plan with
-  *    NO Exchange at all: both sides arrive pre-partitioned, so the join
-  *    is a per-bucket sort-merge. Bucketing pays one write-time shuffle
-  *    and amortizes it over every subsequent join — the single biggest
-  *    lever for a fact table joined daily on the same key.
-  */
+/** Physical-layout operators: Z-order clustering, the storage-side lever
+  * that lets parquet row-group statistics skip scans filtered on either
+  * of two dimensions. */
 object Layout {
-
-  /** Bucketed + sorted table registered in the session catalog (bucketing
-    * metadata lives in the metastore, so this is saveAsTable, not a bare
-    * path write). */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String, buckets: Int,
-                    mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** True when the executed plan of `df` contains no shuffle exchange —
-    * the check that a bucketed join actually co-located. */
-  def isShuffleFree(df: DataFrame): Boolean =
-    !df.queryExecution.executedPlan.toString.contains("Exchange")
-
-  def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
   // ---- Z-order clustering: multi-dimensional data skipping ----------------
   //

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** One media record: an opaque binary payload plus typed metadata. */
@@ -195,11 +195,6 @@ object Multimodal {
     val parts = math.max(1, (totalBytes / budgetBytes).toInt)
     media.repartition(parts, col("doc_id"))
   }
-
-  /** End-to-end: documents → real encoded media → partition-wise decoded
-    * features. */
-  def featuresOf(spark: SparkSession, docs: DataFrame): Dataset[MediaFeatures] =
-    extractFeatures(attachMedia(docs))
 
   /** Perceptual hash of every decodable image record
     * ([[Codecs.dHash]]: real decode → 9×8 grayscale → gradient bits).

@@ -5,16 +5,24 @@ import org.apache.spark.storage.StorageLevel
 
 /** Caller-scoped release for operator-staged frames.
   *
-  * Several operators persist an intermediate frame that has multiple
-  * downstream consumers (posting lists, signature sets, survivor
-  * corpora): the persist is the scale-correct trade — without it the
-  * scan + shingle + shuffle subtree executes once per consumer — but the
-  * operator RETURNS a lazy frame, so it cannot unpersist before the
-  * caller's action without forfeiting the staging. Fire-and-forget
-  * persists are fine under a batch driver that clears the cache between
-  * queries, but a long-lived interactive session running these operators
-  * repeatedly accumulates storage-memory pressure until eviction
-  * thrashes.
+  * The rule for a `Staged(...)` site: it stays only while a measurement
+  * shows that it saves work. Without it, for some query that reaches it,
+  * a shuffle must re-run (more than 1% more shuffle bytes written), more
+  * parquet files must be scanned without a matching speed-up, or the
+  * query must get slower at sf0.01 or sf0.1. Having several consumers
+  * is not by itself a reason: within one query, Spark's exchange reuse
+  * already runs a subtree shared up to a shuffle only once, while a lazy
+  * persist adds a job and a task pass of its own. Every site names what
+  * it saves in a comment, and no answer may depend on a staged frame:
+  * `StagedAnswersSpec` releases every one before the action and expects
+  * the same rows.
+  *
+  * A staged frame stays cached until released, and the operator RETURNS
+  * a lazy frame, so it cannot unpersist before the caller's action
+  * without forfeiting the staging. Fire-and-forget persists are fine
+  * under a batch driver that clears the cache between queries, but a
+  * long-lived interactive session running these operators repeatedly
+  * accumulates storage-memory pressure until eviction thrashes.
   *
   * `Staged(df)` persists AND registers the frame; the caller releases
   * every frame staged since the last release with [[releaseAll]], or

@@ -38,7 +38,8 @@ object Wave23Queries extends QuerySet {
     // round-15: staged — the edge list feeds BOTH the label propagation
     // (which eagerly checkpoints its own projection of it) and the
     // modularity join below; un-staged, the whole tile-pair derivation
-    // (tokenize + postings + df-cap + pair join) runs twice
+    // (tokenize + postings + df-cap + pair join) runs twice: 2× the
+    // shuffle bytes at sf0.01 and sf0.1
     val edges = graft.ops.Staged(
       Dedup.rareTilePairs(docs, "doc_id", "text", k = 8,
         maxDf = 64, minShared = 2, tileKey = c => md5(c)))

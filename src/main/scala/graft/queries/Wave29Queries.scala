@@ -174,6 +174,8 @@ object Wave29Queries extends QuerySet {
         explode(array_distinct(Text.shingles($"text", 3))).as("sh"))
     val perPair = sh.groupBy($"sh", $"source")
       .agg(min($"doc_id").as("min_doc"))
+      // staged: unstaged, the shingle shuffle runs again (+28% shuffle
+      // bytes at sf0.01, +57% at sf0.1)
       .transform(graft.ops.Staged(_))
     val perSource = perPair.groupBy($"source")
       .agg(count(lit(1)).cast("long").as("n_distinct_shingles"))
@@ -232,6 +234,7 @@ object Wave29Queries extends QuerySet {
       .select(explode(array($"doc_a", $"doc_b")).as("doc_id")).distinct()
     // staged: BOTH signature joins (sig_a, sig_b) read this frame — an
     // unstaged subtree would tokenize + hash the endpoint docs twice
+    // (q228 at sf0.1: 0.410 → 0.646 s)
     val sigs = Dedup.minhashSignatures(
       Tables.documents(s, d).join(endpoints, Seq("doc_id"), "left_semi"),
       "doc_id", "text", k = 64).transform(graft.ops.Staged(_))

@@ -125,18 +125,14 @@ object Wave31Queries extends QuerySet {
     * Golden-pinned: seeded xxhash64. */
   private val q240: Q = (s, d) => {
     import s.implicits._
-    // round-15: fan out BEFORE staging — the persisted slice otherwise
-    // holds the fixture scan's single partition and all three banded
-    // signature passes run on one core (the operator-level fan-out
-    // cannot see through an InMemoryRelation)
+    // fan out the slice: the fixture scan is one partition, and all
+    // three banded signature passes would otherwise run on one core
     val docs = graft.ops.FanOut.perRowCompute(
         Tables.documents(s, d).where($"doc_id" < 2000), "doc_id")
-      .transform(graft.ops.Staged(_))
     // guaranteed-exact slice truth (capped-store guard) — see q207
     val exact = Stores.docPairsExactSlice(s, d, maxDocId = 2000)
       .where($"jaccard" >= 0.5)
       .select($"doc_a", $"doc_b", lit(1L).as("__e"))
-      .transform(graft.ops.Staged(_))
     Seq(8, 16, 32).map { bands =>
       val cand = Dedup.minhashCandidates(docs, "doc_id", "text",
           k = 64, bands = bands, minEstJaccard = 0.0)

@@ -26,13 +26,10 @@ object Wave34Queries extends QuerySet {
     * (inner, outer, containment); sizes are one map-side projection. */
   private val q253: Q = (s, d) => {
     import s.implicits._
-    // round-16: fan out BEFORE staging (a persisted frame inherits its
-    // partitioning — the q346 lesson) — the shingle+distinct per row ran
-    // single-core at sf1 (2.5x)
+    // fan out: the shingle+distinct per row ran single-core at sf1 (2.5x)
     val sizes = graft.ops.FanOut.perRowCompute(Tables.documents(s, d), "doc_id")
       .select($"doc_id", size(array_distinct(Text.shingles($"text", 3)))
         .cast("long").as("n_sh"))
-      .transform(graft.ops.Staged(_))
     val victims = Stores.docContainment(s, d)
       .join(sizes.select($"doc_id".as("inner_id"), $"n_sh".as("n_inner")),
         Seq("inner_id"))
@@ -89,6 +86,8 @@ object Wave34Queries extends QuerySet {
     import s.implicits._
     val e = Stores.docPairs(s, d).where($"jaccard" >= 0.5)
       .select($"doc_a", $"doc_b")
+      // staged: unstaged, the pair store is read six times (5 → 30 file
+      // scans at sf0.1) and q255 is slower at sf0.01
       .transform(graft.ops.Staged(_))
     val und = e.unionByName(
       e.select($"doc_b".as("doc_a"), $"doc_a".as("doc_b")))

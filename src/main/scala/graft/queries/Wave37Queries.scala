@@ -35,10 +35,8 @@ object Wave37Queries extends QuerySet {
     * exactly. */
   private val q270: Q = (s, d) => {
     import s.implicits._
-    // staged: ONE corpus aggregate feeds all three α branches
     val counts = Tables.documents(s, d).select($"lang")
       .groupBy($"lang").agg(count(lit(1)).as("n"))
-      .transform(graft.ops.Staged(_))
     def at(alpha: Double): DataFrame =
       Sampling.temperatureRatesFromCounts(counts, "lang", alpha,
           targetFraction = 0.5)

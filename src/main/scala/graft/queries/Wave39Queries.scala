@@ -43,7 +43,7 @@ object Wave39Queries extends QuerySet {
     * 24 h says conversions are slow, not absent). ONE user-keyed
     * bookend aggregate (first view, first purchase — q168's shape)
     * feeds all three deadline rows; each row is a 1-row scalar
-    * aggregate over the staged per-user frame. */
+    * aggregate over the per-user frame. */
   private val q281: Q = (s, d) => {
     import s.implicits._
     val u = Tables.events(s, d).groupBy($"user_id").agg(
@@ -52,7 +52,6 @@ object Wave39Queries extends QuerySet {
       .where($"fv".isNotNull)
       .select($"fv", $"fp",
         (unix_micros($"fp") - unix_micros($"fv")).as("delta_us"))
-      .transform(graft.ops.Staged(_))
     def at(label: String, hours: Long): DataFrame =
       u.agg(count(lit(1)).cast("long").as("n_viewers"),
         sum(when($"fp".isNotNull && $"delta_us" > 0 &&

@@ -38,6 +38,8 @@ object Wave45Queries extends QuerySet {
     val pairs = Stores.docPairs(s, d).select($"doc_a", $"doc_b")
     val dir = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
       .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
+      // staged: unstaged, the pair store is read twice (10 → 20 file
+      // scans at sf0.1) and q304 is no faster at sf0.01
       .transform(graft.ops.Staged(_))
     val deg = dir.groupBy($"src").agg(count(lit(1)).cast("long").as("deg"))
     dir
@@ -126,6 +128,8 @@ object Wave45Queries extends QuerySet {
       .select(substring_index($"bg", " ", 1).as("w1"),
         substring_index($"bg", " ", -1).as("w2"))
       .groupBy($"w1", $"w2").agg(count(lit(1)).cast("long").as("k"))
+      // staged: unstaged, the bigram shuffle runs again (2.3× the
+      // shuffle bytes at sf0.01, +22% at sf0.1)
       .transform(graft.ops.Staged(_))
     val m1 = pc.groupBy($"w1").agg(sum($"k").as("c1"))
     val m2 = pc.groupBy($"w2").agg(sum($"k").as("c2"))

@@ -25,12 +25,11 @@ object Wave47Queries extends QuerySet {
     * this table is how the generalization is CHOSEN — each row is one
     * ladder rung: cells, singleton cells, and the share of documents
     * in cells of size ≤ 2 (the journalist-risk convention). One
-    * staged base projection; per rung one dim×bucket-bounded
+    * base projection; per rung one dim×bucket-bounded
     * aggregate. */
   private val q314: Q = (s, d) => {
     import s.implicits._
     val base = Tables.documents(s, d).select($"lang", $"source", $"n_chars")
-      .transform(graft.ops.Staged(_))
     def rung(g: Int): DataFrame = {
       val cells = base
         .groupBy($"lang", $"source",
@@ -86,7 +85,6 @@ object Wave47Queries extends QuerySet {
     import s.implicits._
     val ev = Tables.events(s, d)
       .select($"event_type", $"user_id", $"props")
-      .transform(graft.ops.Staged(_))
     def audit(colName: String): DataFrame =
       ev.agg(lit(colName).as("column_name"),
           count(lit(1)).cast("long").as("n_rows"),

@@ -44,11 +44,9 @@ object Wave49Queries extends QuerySet {
     }
     val dc = Tables.documents(s, d).groupBy($"lang", $"source")
       .agg(count(lit(1)).cast("long").as("cnt"))
-      .transform(graft.ops.Staged(_))
     val oc = Tables.orders(s, d)
       .groupBy($"o_orderpriority", $"o_orderstatus")
       .agg(count(lit(1)).cast("long").as("cnt"))
-      .transform(graft.ops.Staged(_))
     fd(dc, "documents", "lang", "source")
       .unionByName(fd(dc, "documents", "source", "lang"))
       .unionByName(fd(oc, "orders", "o_orderpriority", "o_orderstatus"))
@@ -67,7 +65,6 @@ object Wave49Queries extends QuerySet {
     val v = Tables.documents(s, d)
       .select($"source", explode(graft.ops.Text.tokens($"text")).as("tok"))
       .distinct()
-      .transform(graft.ops.Staged(_))
     val sz = v.groupBy($"source").agg(count(lit(1)).cast("long").as("vs"))
     val inter = v.as("a").join(v.as("b"),
         $"a.tok" === $"b.tok" && $"a.source" < $"b.source")

@@ -84,7 +84,6 @@ object Wave50Queries extends QuerySet {
   private val q324: Q = (s, d) => {
     import s.implicits._
     val ev = Tables.events(s, d).select($"event_type", $"value")
-      .transform(graft.ops.Staged(_))
     val hist = ev.groupBy($"value")
       .agg(count(lit(1)).cast("long").as("nv"))
       .withColumn("cb", coalesce(
@@ -136,7 +135,6 @@ object Wave50Queries extends QuerySet {
       .groupBy(to_date($"o_orderdate").as("day"))
       .agg(sum(round($"o_totalprice" * 100, 0).cast("long")).as("rev"),
         count(lit(1)).cast("long").as("cnt"))
-      .transform(graft.ops.Staged(_))
     day.as("a").join(day.as("b"), $"a.day" < $"b.day")
       .agg(
         count(lit(1)).cast("long").as("n_pairs"),

@@ -83,6 +83,8 @@ object Wave51Queries extends QuerySet {
       .where($"source".isin("src0", "src1"))
       .select($"doc_id", ($"source" === "src1").cast("long").as("g"),
         $"n_chars")
+      // staged: unstaged, the documents scan runs twice and q329 is
+      // slower (0.081 → 0.104 s at sf0.1)
       .transform(graft.ops.Staged(_))
     val obs = docs.agg(
         sum(when($"g" === 1L, $"n_chars")).as("s1"),
@@ -124,7 +126,6 @@ object Wave51Queries extends QuerySet {
       .groupBy(date_format($"o_orderdate", "yyyy-MM").as("month"))
       .agg(sum(round($"o_totalprice" * 100, 0).cast("long")).as("rev"),
         count(lit(1)).cast("long").as("cnt"))
-      .transform(graft.ops.Staged(_))
     val tot = m.agg(sum($"rev").as("trev"), sum($"cnt").as("tcnt"),
       count(lit(1)).cast("long").as("k"))
     val pseudo = m.crossJoin(broadcast(tot))
@@ -160,10 +161,13 @@ object Wave51Queries extends QuerySet {
     val members = Tables.orders(s, d)
       .where(year($"o_orderdate") === 1995)
       .select($"o_custkey".as("key")).distinct()
+      // staged: unstaged, the distinct's shuffle runs again (+35% shuffle
+      // bytes at sf0.01, +51% at sf0.1)
       .transform(graft.ops.Staged(_))
     // round-16: staged — the probe set feeds BOTH the false-positive
     // count and the n_probes denominator; unstaged, the customer scan
-    // and the anti join against the member set ran twice
+    // and the anti join against the member set ran twice (q331 at
+    // sf0.1: 0.210 → 0.253 s)
     val probes = Tables.customer(s, d).select($"c_custkey".as("key"))
       .join(members, Seq("key"), "left_anti")
       .transform(graft.ops.Staged(_))
@@ -176,6 +180,8 @@ object Wave51Queries extends QuerySet {
       }.reduce(_ unionByName _)
     }
     val bits = positions(members).select($"pos").distinct()
+      // staged: unstaged, the bit-position shuffle runs again (+74%
+      // shuffle bytes at sf0.01, +73% at sf0.1)
       .transform(graft.ops.Staged(_))
     // a probe contributes k=3 position rows; it false-positives iff all
     // 3 survive the semi-join — count probes whose surviving-row count
@@ -220,7 +226,6 @@ object Wave51Queries extends QuerySet {
         date_format($"o_orderdate", "yyyy-MM").as("month"),
         round($"o_totalprice" * 100, 0).cast("long").as("cents"),
         ($"o_orderdate" < lit("1997-01-01").cast("date")).as("old"))
-      .transform(graft.ops.Staged(_))
     val direct = o.groupBy($"month")
       .agg(sum($"cents").as("rc_direct"),
         count(lit(1)).cast("long").as("n_direct"))

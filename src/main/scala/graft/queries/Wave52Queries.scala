@@ -48,7 +48,6 @@ object Wave52Queries extends QuerySet {
         $"l_returnflag".as("stratum"),
         round($"l_discount" * 100, 0).cast("long").as("x"),
         $"l_quantity".cast("long").as("y"))
-      .transform(graft.ops.Staged(_))
     def cov(g: org.apache.spark.sql.RelationalGroupedDataset): DataFrame = g
       .agg(count(lit(1)).cast("long").as("n"), sum($"x").as("sx"),
         sum($"y").as("sy"), sum($"x" * $"y").as("sxy"))
@@ -78,7 +77,6 @@ object Wave52Queries extends QuerySet {
     val day = Tables.orders(s, d)
       .groupBy(to_date($"o_orderdate").as("day"))
       .agg(sum(round($"o_totalprice" * 100, 0).cast("long")).as("r"))
-      .transform(graft.ops.Staged(_))
     val w = Window.orderBy($"day").rowsBetween(Window.unboundedPreceding, 0)
     val pre = day.select($"day", $"r",
       count(lit(1)).over(w).as("nl"),
@@ -118,7 +116,6 @@ object Wave52Queries extends QuerySet {
     val ev = Tables.events(s, d).select($"user_id", $"event_type")
       .withColumn("arm",
         (md5($"user_id".cast("string")) < lit("8")).cast("long"))
-      .transform(graft.ops.Staged(_))
     val users = ev.select($"user_id", $"arm").distinct()
       .agg(sum($"arm").as("ua"),
         (count(lit(1)) - sum($"arm")).as("ub"))
@@ -154,7 +151,6 @@ object Wave52Queries extends QuerySet {
       .groupBy($"token").agg(count(lit(1)).cast("long").as("cnt"))
       .select($"token", $"cnt",
         floor(sqrt($"cnt" * sqrt($"cnt")) * 1e6).cast("long").as("wq"))
-      .transform(graft.ops.Staged(_))
     val z = vocab.agg(sum($"wq").as("z"),
       count(lit(1)).cast("long").as("vocab_size"))
     val top = vocab.orderBy($"cnt".desc, $"token").limit(50)
@@ -184,7 +180,6 @@ object Wave52Queries extends QuerySet {
     val hours = Tables.events(s, d)
       .groupBy($"event_type", date_trunc("hour", $"ts").as("h"))
       .agg(count(lit(1)).cast("long").as("c"))
-      .transform(graft.ops.Staged(_))
     val span = hours.agg(((unix_timestamp(max($"h")) -
         unix_timestamp(min($"h"))) / lit(3600L) + 1L).cast("long")
         .as("n_windows"))

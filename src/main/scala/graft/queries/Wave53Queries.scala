@@ -45,6 +45,8 @@ object Wave53Queries extends QuerySet {
       .groupBy(to_date($"o_orderdate").as("day"))
       .agg(sum(round($"o_totalprice" * 100, 0).cast("long")).as("r"))
       .withColumn("dow", dayofweek($"day") - 1)
+      // staged: unstaged, the daily aggregate's shuffle runs again (1.9×
+      // the shuffle bytes at both scales)
       .transform(graft.ops.Staged(_))
     val dow = day.groupBy($"dow")
       .agg(sum($"r").as("sd"), count(lit(1)).cast("long").as("nd"))
@@ -79,7 +81,6 @@ object Wave53Queries extends QuerySet {
       .select($"source", explode(graft.ops.Text.tokens($"text")).as("tok"))
       .groupBy($"source", $"tok")
       .agg(count(lit(1)).cast("long").as("c"))
-      .transform(graft.ops.Staged(_))
     val per = counts.groupBy($"source")
       .agg(sum($"c").as("nt"), sum($"c" * $"c").as("s2"))
     val cross = counts.as("a").join(counts.as("b"),
@@ -134,7 +135,6 @@ object Wave53Queries extends QuerySet {
   private val q341: Q = (s, d) => {
     import s.implicits._
     val docs = Tables.documents(s, d).select($"source", $"n_chars")
-      .transform(graft.ops.Staged(_))
     val per = docs.groupBy($"source")
       .agg(count(lit(1)).cast("long").as("ns"), sum($"n_chars").as("ss"),
         sum(($"n_chars".cast("double") * $"n_chars")
@@ -186,7 +186,6 @@ object Wave53Queries extends QuerySet {
       .groupBy($"tok")
       .agg(max(when($"even", 1L).otherwise(0L)).as("in_a"),
         max(when(!$"even", 1L).otherwise(0L)).as("in_b"))
-      .transform(graft.ops.Staged(_))
     tok.agg(sum($"in_a").as("n_cap_a"), sum($"in_b").as("n_cap_b"),
         sum($"in_a" * $"in_b").as("n_both"),
         count(lit(1)).cast("long").as("true_vocab"))

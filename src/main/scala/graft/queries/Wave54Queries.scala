@@ -47,7 +47,6 @@ object Wave54Queries extends QuerySet {
     val counts = graft.ops.FanOut.perRowCompute(Tables.documents(s, d), "doc_id")
       .select(explode(graft.ops.Text.shingles($"text", 3)).as("tok"))
       .groupBy($"tok").agg(count(lit(1)).cast("long").as("c"))
-      .transform(graft.ops.Staged(_))
     val fof = counts.groupBy($"c")
       .agg(count(lit(1)).cast("long").as("nc"))
     val tot = counts.agg(sum($"c").as("n"))
@@ -80,6 +79,8 @@ object Wave54Queries extends QuerySet {
       .select($"source", explode(graft.ops.Text.tokens($"text")).as("tok"))
       .groupBy($"source", $"tok")
       .agg(count(lit(1)).cast("long").as("cnt"))
+      // staged: unstaged, the token-count shuffle runs again (+23%
+      // shuffle bytes at sf0.01, +20% at sf0.1)
       .transform(graft.ops.Staged(_))
     val top = st.groupBy($"tok").agg(sum($"cnt").as("g"))
       .orderBy($"g".desc, $"tok").limit(20).select($"tok")
@@ -89,6 +90,8 @@ object Wave54Queries extends QuerySet {
       .select($"source", $"tok",
         floor(coalesce($"cnt", lit(0L)) / $"nt".cast("double") * 1e12)
           .cast("long").as("fq"))
+      // staged: unstaged, q344 runs 20 → 40 jobs and writes 2× the
+      // shuffle bytes at both scales
       .transform(graft.ops.Staged(_))
     val stats = cells.groupBy($"tok")
       .agg(count(lit(1)).cast("long").as("k"), sum($"fq").as("sf"),
@@ -176,7 +179,8 @@ object Wave54Queries extends QuerySet {
     }
     // round-15 guarded fan-out BEFORE the stage/persist: the staged
     // frame inherits its partitioning, so an un-fanned single-row-group
-    // scan pins BOTH bands() passes to one core
+    // scan pins BOTH bands() passes to one core. Unstaged, the fan-out
+    // shuffle runs again (+19% shuffle bytes at sf0.01 and sf0.1).
     val o = graft.ops.FanOut.perRowCompute(
         Tables.orders(s, d).select(
           date_format($"o_orderdate", "yyyy-MM").as("month"),
@@ -205,6 +209,8 @@ object Wave54Queries extends QuerySet {
     val tok = Tables.documents(s, d)
       .select($"doc_id", $"source",
         explode(graft.ops.Text.shingles($"text", 3)).as("tok"))
+      // staged: unstaged, the shingling scan runs three times and q347 is
+      // slower (0.521 → 0.585 s at sf0.1)
       .transform(graft.ops.Staged(_))
     val hapax = tok.groupBy($"tok")
       .agg(count(lit(1)).cast("long").as("c"))

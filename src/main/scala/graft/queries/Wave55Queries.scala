@@ -52,7 +52,6 @@ object Wave55Queries extends QuerySet {
         (dayofweek($"o_orderdate") - 1).as("dow"))
       .agg((sum(round($"o_totalprice" * 100, 0).cast("long")) /
         count(lit(1))).as("v"))
-      .transform(graft.ops.Staged(_))
     // keep only complete blocks (all 7 dows present): a partial month
     // would shift that block's rank scale
     val full = cell.groupBy($"m").agg(count(lit(1)).as("k7"))
@@ -134,7 +133,6 @@ object Wave55Queries extends QuerySet {
   private val q350: Q = (s, d) => {
     import s.implicits._
     val docs = Tables.documents(s, d).select($"source", $"n_chars")
-      .transform(graft.ops.Staged(_))
     val g = docs.groupBy($"source")
       .agg(count(lit(1)).cast("long").as("ng"), sum($"n_chars").as("xg"))
     val tot = g.agg(sum($"ng").as("n"), sum($"xg").as("x"))
@@ -182,7 +180,6 @@ object Wave55Queries extends QuerySet {
         Window.partitionBy($"user_id").orderBy($"ts", $"event_id")))
       .where($"next".isNotNull)
       .withColumn("train", pmod($"user_id", lit(2L)) === 0L)
-      .transform(graft.ops.Staged(_))
     val counts = tr.where($"train")
       .groupBy($"event_type", $"next")
       .agg(count(lit(1)).cast("long").as("c"))
@@ -213,7 +210,6 @@ object Wave55Queries extends QuerySet {
     val docs = Tables.documents(s, d)
       .select($"doc_id", graft.ops.Text.tokenCount($"text")
         .cast("long").as("toks"))
-      .transform(graft.ops.Staged(_))
     Seq(8L, 32L, 128L).map { sN =>
       docs.groupBy(pmod($"doc_id", lit(sN)).as("shard"))
         .agg(sum($"toks").as("mass"))

@@ -73,7 +73,6 @@ object Wave56Queries extends QuerySet {
     val day = Tables.orders(s, d)
       .groupBy(to_date($"o_orderdate").as("day"))
       .agg(sum(round($"o_totalprice" * 100, 0).cast("long")).as("r"))
-      .transform(graft.ops.Staged(_))
     val w = Window.orderBy($"day")
     val scored = day.select($"day", $"r",
         lag($"r", 1).over(w).as("p1"), lag($"r", 7).over(w).as("p7"))
@@ -105,7 +104,6 @@ object Wave56Queries extends QuerySet {
       .select($"source", $"nh",
         floor(sqrt(($"sxx" - $"sx".cast("double") * $"sx" / $"nh") /
           ($"nh" - 1L)) * 1e6).cast("long").as("sdq"))
-      .transform(graft.ops.Staged(_))
     val tot = g.agg(sum($"nh").as("n"), sum($"nh" * $"sdq").as("z"))
     g.crossJoin(broadcast(tot))
       .select($"source", $"nh".as("stratum_size"),

@@ -89,7 +89,7 @@ class MultimodalSpec extends SparkSuite {
 
   test("attachMedia payloads are real media; decoded metadata matches the formulas") {
     val docs = Tables.documents(spark, sf)
-    val feats = Multimodal.featuresOf(spark, docs).cache()
+    val feats = Multimodal.extractFeatures(Multimodal.attachMedia(docs)).cache()
     assert(feats.count() == docs.count())
     // nothing failed to decode
     assert(feats.where(col("width").isNull || col("n_frames").isNull ||
@@ -107,7 +107,7 @@ class MultimodalSpec extends SparkSuite {
     assert(bad.count() == 0)
     // determinism: same checksums on recompute
     val a = feats.select("doc_id", "checksum").as[(Long, Long)].collect().toMap
-    val b = Multimodal.featuresOf(spark, docs)
+    val b = Multimodal.extractFeatures(Multimodal.attachMedia(docs))
       .select("doc_id", "checksum").as[(Long, Long)].collect().toMap
     assert(a == b)
     feats.unpersist()
