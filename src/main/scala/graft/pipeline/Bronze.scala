@@ -19,14 +19,16 @@ private[pipeline] object PipelineFs {
   }
 }
 
-/** Landing → bronze → silver, one streaming query per sensor: the JSON
-  * landing stream gets parsed timestamps + partition date, and each
-  * micro-batch fills four sinks from one Spark job — invalid rows to the
-  * bronze quarantine, the rest to bronze; of those, rows passing
-  * [[Silver.rule]] enriched with the bridges dimension to silver, the
-  * others to the silver quarantine (SURVEY.md §2 S1/K1-K3/P1/P2/F1-F4/J1;
-  * ref `bronze_ingest.py`, `silver_enrichment.py`, where silver is a
-  * second query reading the bronze sink and each sink rescans its source,
+/** Landing → bronze → silver, one streaming query for all three sensors:
+  * the three landing dirs are JSON sources tagged with their sensor and
+  * unioned, and each micro-batch fills twelve sinks from one Spark job —
+  * per sensor, invalid rows to the bronze quarantine, the rest to bronze;
+  * of those, rows passing [[Silver.rule]] enriched with the bridges
+  * dimension to silver, the others to the silver quarantine. Rows route by
+  * landing dir, not `sensor_type`, and one unreadable landing file fails
+  * the batch of every sensor (SURVEY.md §2 S1/K1-K3/P1/P2/F1-F4/J1; ref
+  * `bronze_ingest.py`, one query per sensor, and `silver_enrichment.py`, a
+  * second query over the bronze sink; each sink rescans its source,
   * `bronze_ingest.py:64-103`).
   */
 object Bronze {
@@ -39,68 +41,66 @@ object Bronze {
         "ingest_time", "ingest_time_ts"),
       "event_time_ts")
 
-  /** The bronze rows a separate silver query (an earlier version) had
-    * not read when it stopped would never reach silver. */
-  private def requireNoSilverCheckpoint(spark: SparkSession, cfg: PipelineConfig): Unit = {
-    val left = Schemas.sensors.map(s => new org.apache.hadoop.fs.Path(cfg.checkpoint(s"silver_$s")))
+  /** Rows an earlier version's per-sensor silver query had not read would
+    * never reach silver, and a `bronze` checkpoint beside per-sensor ones
+    * would read every landing file again into bronze and silver. */
+  private def requireNoPerSensorCheckpoint(spark: SparkSession, cfg: PipelineConfig): Unit = {
+    val left = Seq("silver", "bronze").flatMap(t => Schemas.sensors.map(s =>
+      new org.apache.hadoop.fs.Path(cfg.checkpoint(s"${t}_$s"))))
       .filter(p => p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-    if (left.nonEmpty) throw new IllegalStateException(s"silver checkpoints left: " +
-      s"${left.mkString(", ")}. Drain once with the previous version, then remove " +
-      "them (README: Upgrading silver checkpoints).")
+    if (left.nonEmpty) throw new IllegalStateException(s"per-sensor checkpoints left: " +
+      s"${left.mkString(", ")}. Drain once with the previous version, move the drained " +
+      "landing files out, then remove them (README: Upgrading bronze checkpoints).")
   }
 
-  /** One streaming query per sensor landing zone. The bronze and silver
-    * sinks are date-partitioned (scale improvement: partition pruning for
-    * all downstream batch reads; the reference writes a flat dir). */
-  def start(spark: SparkSession, cfg: PipelineConfig, sensor: String,
+  /** The bronze and silver sinks are date-partitioned (scale improvement:
+    * partition pruning for all downstream batch reads; the reference
+    * writes a flat dir). */
+  def start(spark: SparkSession, cfg: PipelineConfig,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    requireNoSilverCheckpoint(spark, cfg)
-    PipelineFs.ensureDir(spark, cfg.landingDir(sensor))
-    // schema includes the date partition column (see Schemas.rawLanding),
-    // then drops it — keeping the plan schema stable whether or not
-    // date= subdirs exist at stream start
-    val raw = spark.readStream.schema(Schemas.rawLanding)
-      .options(cfg.sourceOptions).json(cfg.landingDir(sensor))
-      .select(Schemas.raw.fieldNames.map(col).toIndexedSeq: _*)
-    val derived = derive(raw)
+    requireNoPerSensorCheckpoint(spark, cfg)
     // optional streaming exact dedup: watermark-bounded state keyed on the
-    // natural event identity (RAW event_time string, not the parsed
-    // timestamp), watermarked on parsed event time. A row without one
+    // landing dir and the natural event identity (RAW event_time string),
+    // watermarked per source on parsed event time, so the query's
+    // watermark is the slowest sensor's. A row without a parsed event time
     // (the quarantine takes it) does not raise the max-based watermark and
-    // is never late, so an unparseable row cannot drop valid rows behind
-    // it; identical unparseable rows of one batch share a key and collapse.
-    val deduped =
-      if (cfg.dedupeLanding)
-        derived.withWatermark("event_time_ts", cfg.watermark)
-          .dropDuplicatesWithinWatermark("bridge_id", "sensor_type", "event_time")
-      else derived
-    val runTag = IdempotentSink.tagFor(cfg.checkpoint(s"bronze_$sensor"))
+    // is never late; identical unparseable rows of one batch collapse.
+    val landed = Schemas.sensors.map { sensor =>
+      PipelineFs.ensureDir(spark, cfg.landingDir(sensor))
+      // schema includes the date partition column (see Schemas.rawLanding),
+      // then drops it — keeping the plan schema stable whether or not
+      // date= subdirs exist at stream start
+      val raw = spark.readStream.schema(Schemas.rawLanding)
+        .options(cfg.sourceOptions).json(cfg.landingDir(sensor))
+        .select(Schemas.raw.fieldNames.map(col).toIndexedSeq: _*)
+      val tagged = derive(raw).withColumn("src", lit(sensor))
+      if (cfg.dedupeLanding) tagged.withWatermark("event_time_ts", cfg.watermark) else tagged
+    }.reduce(_ unionByName _)
+    val deduped = if (!cfg.dedupeLanding) landed
+      else landed.dropDuplicatesWithinWatermark("src", "bridge_id", "sensor_type", "event_time")
+    val runTag = IdempotentSink.tagFor(cfg.checkpoint("bronze"))
     val valid = coalesce(Quality.bronzeValid(), lit(false))
-    val silverOk = coalesce(Silver.rule(sensor), lit(false))
     val bronzeCols = Schemas.bronze.fieldNames.toSeq
     val dataCols = bronzeCols.filterNot(_ == "partition_date")
-    // this query's copy of the dimension: its file is compared every batch
-    // and parsed again only when it changed, so an edited bridges.csv
-    // applies from the next batch on
     val dimension = new Silver.Dimension(cfg)
     val fn: (Dataset[Row], Long) => Unit = (batch, batchId) => {
       val silverCols = col("bridge_id") +: dataCols.filterNot(_ == "bridge_id").map(col) ++:
         dimension.columns(batch.sparkSession)
-      IdempotentSink.writeAll(batch.toDF(), batchId, runTag, Seq(
-        Route(cfg.bronzeDir(sensor), valid, dataCols.map(col), Seq("partition_date")),
-        Route(cfg.bronzeRejectedDir(sensor), !valid, bronzeCols.map(col)),
-        Route(cfg.silverDir(sensor), silverOk, silverCols, Seq("partition_date")),
-        Route(cfg.silverRejectedDir(sensor), valid && !silverOk, bronzeCols.map(col))))
+      IdempotentSink.writeAll(batch.toDF(), batchId, runTag, Schemas.sensors.flatMap { sensor =>
+        val from = col("src") === sensor
+        val silverOk = coalesce(Silver.rule(sensor), lit(false))
+        Seq(
+          Route(cfg.bronzeDir(sensor), from && valid, dataCols.map(col), Seq("partition_date")),
+          Route(cfg.bronzeRejectedDir(sensor), from && !valid, bronzeCols.map(col)),
+          Route(cfg.silverDir(sensor), from && silverOk, silverCols, Seq("partition_date")),
+          Route(cfg.silverRejectedDir(sensor), from && valid && !silverOk, bronzeCols.map(col)))
+      })
     }
     deduped.writeStream
-      .queryName(s"bronze_$sensor")
-      .option("checkpointLocation", cfg.checkpoint(s"bronze_$sensor"))
+      .queryName("bronze")
+      .option("checkpointLocation", cfg.checkpoint("bronze"))
       .trigger(trigger)
       .foreachBatch(fn)
       .start()
   }
-
-  def startAll(spark: SparkSession, cfg: PipelineConfig,
-               trigger: Trigger = Trigger.AvailableNow()): Seq[StreamingQuery] =
-    Schemas.sensors.map(start(spark, cfg, _, trigger))
 }

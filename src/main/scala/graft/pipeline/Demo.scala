@@ -3,8 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end demo of the medallion pipeline: seeded generator →
-  * one query per sensor writing bronze and silver → gold, under a work dir
-  * (default: a temp dir).
+  * one bronze query for all three sensors, which also writes silver →
+  * gold, under a work dir (default: a temp dir).
   *
   *   sbt "runMain graft.pipeline.Demo [workDir]"
   *

@@ -14,9 +14,9 @@ case class PipelineConfig(
     bridgesCsv: String,
     watermark: String = "2 minutes",
     windowLength: String = "1 minute",
-    /** Streaming exact dedup of landing events by (bridge_id, sensor_type,
-      * event_time) with watermark-bounded state — guards against at-least-
-      * once upstream delivery. Off by default (reference parity). */
+    /** Streaming exact dedup of landing events by (landing dir, bridge_id,
+      * sensor_type, event_time) with watermark-bounded state — guards
+      * against at-least-once upstream delivery. Off by default (reference parity). */
     dedupeLanding: Boolean = false,
     /** Fully-qualified state-store provider class, applied to the session
       * before any stateful query starts. None = Spark's default HDFS-
@@ -27,15 +27,15 @@ case class PipelineConfig(
       * embedded RocksDB with incremental checkpointing, so state size is
       * bounded by local disk, not heap. */
     stateStoreProvider: Option[String] = None,
-    /** Per-trigger file admission cap for every file-stream source in the
-      * DAG (`maxFilesPerTrigger`; also honored by AvailableNow, which
-      * then drains in MANY micro-batches instead of one). None = Spark's
-      * default (one batch per available set). Operationally this is the
-      * backlog-catch-up knob: a restart after downtime replays the
-      * backlog in bounded batches — bounded shuffle, bounded state delta,
-      * steady watermark advancement (windows finalize DURING the drain
-      * instead of all state accumulating to the end) — rather than one
-      * giant batch sized by the outage. */
+    /** Per-trigger file admission cap (`maxFilesPerTrigger`) for each
+      * file-stream source in the DAG: bronze reads three landing dirs and
+      * gold three silver dirs, so one micro-batch admits up to 3×N files.
+      * AvailableNow honors it too and drains in MANY micro-batches. None =
+      * Spark's default (one batch per available set). This is the
+      * backlog-catch-up knob: a restart after downtime replays the backlog
+      * in bounded batches (bounded shuffle and state delta, windows
+      * finalizing DURING the drain) rather than one batch sized by the
+      * outage. */
     sourceMaxFilesPerTrigger: Option[Int] = None) {
 
   /** Source options shared by every file-stream read in the DAG. */
@@ -61,12 +61,10 @@ case class PipelineConfig(
 
   def landingDir(sensor: String): String = s"$landingRoot/bridge_$sensor"
   def bronzeDir(sensor: String): String = s"$bronzeRoot/$sensor"
-  /** Quarantine is one logical table but one *physical* subdir per writing
-    * query (`src=<sensor>` Hive partition): three concurrent streaming
-    * queries appending to a single dir race on the shared
-    * FileOutputCommitter `_temporary` staging dir and corrupt each other's
-    * commits. A batch read of [[bronzeRejectedRoot]] reassembles the table
-    * with `src` as a partition column. */
+  /** Quarantine is one logical table with one subdir per sensor
+    * (`src=<sensor>` Hive partition): one query writes all three, in the
+    * layout earlier versions' per-sensor queries wrote. A batch read of
+    * [[bronzeRejectedRoot]] reassembles it with `src` as a column. */
   def bronzeRejectedDir(sensor: String): String = s"$bronzeRoot/rejected/src=$sensor"
   def bronzeRejectedRoot: String = s"$bronzeRoot/rejected"
   def silverDir(sensor: String): String = s"$silverRoot/$sensor"

@@ -22,7 +22,7 @@ object Silver {
     * of its fact rows out into several silver rows under a join; here the
     * batch fails with the repeated ids named.
     *
-    * One per streaming query, called once per micro-batch. Each call reads
+    * The bronze query holds one, called once per micro-batch. Each call reads
     * the file's bytes through the Hadoop FS API (one small read, no Spark
     * job) and parses them with [[bridges]] (one small job) only in the
     * first call and when they differ from the bytes its rows came from, so

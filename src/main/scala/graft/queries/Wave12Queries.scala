@@ -76,14 +76,13 @@ object Wave12Queries extends QuerySet {
     * relative deviation |n/baseline − 1|, top 30 reported — the
     * load-spike / outage detector that a flat global threshold misses
     * when traffic has a daily cycle. The hourly frame is types×hours
-    * small, materialized once and read twice (baseline + join); exact
-    * integer counts, one division at the end. */
+    * small and read twice (baseline + join); exact integer counts, one
+    * division at the end. */
   private val q174: Q = (s, d) => {
     import s.implicits._
     val hourly = Tables.events(s, d)
       .groupBy($"event_type", date_trunc("hour", $"ts").as("hour_ts"))
       .agg(count(lit(1)).cast("long").as("n"))
-      .localCheckpoint(true)
     val base = hourly.groupBy($"event_type", hour($"hour_ts").as("__hod"))
       .agg((sum($"n").cast("double") / count(lit(1))).as("__baseline"))
     hourly.withColumn("__hod", hour($"hour_ts"))

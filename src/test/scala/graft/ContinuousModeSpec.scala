@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.streaming.Trigger
 import graft.pipeline._
 
-/** Continuous mode: all 4 queries live concurrently on micro-batch
+/** Continuous mode: both queries live concurrently on micro-batch
   * triggers, data flowing landing → bronze and silver → gold while
   * running. */
 class ContinuousModeSpec extends SparkSuite {
@@ -16,7 +16,7 @@ class ContinuousModeSpec extends SparkSuite {
 
     val queries = Pipelines.startContinuous(spark, cfg, Trigger.ProcessingTime("500 milliseconds"))
     try {
-      assert(queries.size == 4) // 3 bronze (each also writes silver) + 1 gold
+      assert(queries.map(_.name) == Seq("bronze", "gold_bridge_metrics")) // bronze also writes silver
       // wait until silver has absorbed everything bronze saw (bounded)
       val deadline = System.currentTimeMillis() + 60000
       def silverCount(): Long =
@@ -29,7 +29,7 @@ class ContinuousModeSpec extends SparkSuite {
     } finally queries.foreach(_.stop())
   }
 
-  test("the 4-query drain stays green on the RocksDB state store") {
+  test("the 2-query drain stays green on the RocksDB state store") {
     val root = tmpDir("graft-rocks")
     val cfg = PipelineConfig.under(root, s"$root/bridges.csv")
       .copy(stateStoreProvider = Some(PipelineConfig.RocksDbProvider))
@@ -38,7 +38,7 @@ class ContinuousModeSpec extends SparkSuite {
 
     val queries = Pipelines.startContinuous(spark, cfg, Trigger.ProcessingTime("500 milliseconds"))
     try {
-      assert(queries.size == 4)
+      assert(queries.size == 2)
       assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
         == PipelineConfig.RocksDbProvider)
       val deadline = System.currentTimeMillis() + 60000

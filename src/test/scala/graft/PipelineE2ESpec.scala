@@ -156,7 +156,7 @@ class PipelineE2ESpec extends SparkSuite {
     val bronzeIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val queries = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        if (e.name.startsWith("bronze_")) bronzeIds.add(e.id.toString)
+        if (e.name == "bronze") bronzeIds.add(e.id.toString)
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
@@ -190,8 +190,8 @@ class PipelineE2ESpec extends SparkSuite {
     val perBatch = jobs.asScala.toMap.collect {
       case (k @ (q, _), n) if bronzeIds.contains(q) => k -> n.get
     }
-    assert(perBatch.keySet.map(_._1).size == 3, perBatch)
-    // the dimension read and the one job that stages all four sinks
+    assert(perBatch.keySet.map(_._1).size == 1, perBatch)
+    // the dimension read and the one job that stages all twelve sinks
     assert(perBatch.values.forall(_ <= 2), perBatch)
   }
 
@@ -228,14 +228,12 @@ class PipelineE2ESpec extends SparkSuite {
     val c = PipelineConfig.under(root, s"$root/bridges.csv").copy(sourceMaxFilesPerTrigger = Some(2))
     Generator.writeBridgesCsv(c.bridgesCsv)
     Generator.generate(c.landingRoot, rate = 5, durationSeconds = 60, seed = 7L)
-    var drained = Seq.empty[StreamingQuery]
-    val jobs = jobsByBatch { drained = Bronze.startAll(spark, c); drained.foreach(_.awaitTermination()) }
-    // six landing files per sensor, two per batch: the parse and the
-    // staging job in the first batch, the staging job alone after it
-    drained.foreach { q =>
-      val batches = jobs.collect { case ((id, b), n) if id == q.id.toString => b -> n }
-      assert(batches.toSeq.sorted.map(_._2) == Seq(2, 1, 1), s"${q.name}: $batches")
-    }
+    var drained: StreamingQuery = null
+    val jobs = jobsByBatch { drained = Bronze.start(spark, c); drained.awaitTermination() }
+    // six landing files per sensor, two per source per batch: the parse
+    // and the staging job in the first batch, the staging job alone after it
+    val batches = jobs.collect { case ((id, b), n) if id == drained.id.toString => b -> n }
+    assert(batches.toSeq.sorted.map(_._2) == Seq(2, 1, 1), batches)
 
     // same length and modification time, different bytes
     val csv = new File(c.bridgesCsv)
@@ -254,7 +252,7 @@ class PipelineE2ESpec extends SparkSuite {
       finally w.close()
       assert(tmp.renameTo(new File(dir, name)))
     }
-    val q = Bronze.start(spark, c, "tilt", Trigger.ProcessingTime(100))
+    val q = Bronze.start(spark, c, Trigger.ProcessingTime(100))
     def step(body: => Unit): Seq[Int] =
       jobsByBatch { body; q.processAllAvailable() }
         .collect { case ((id, _), n) if id == q.id.toString => n }.toSeq
@@ -294,7 +292,7 @@ class PipelineE2ESpec extends SparkSuite {
     }
     bridges("1,Alpha,North,2001-01-01", "2,Beta,South,")
     landRow("a.json", 1); landRow("b.json", 2); landRow("c.json", 3)
-    Bronze.start(spark, c, "tilt").awaitTermination()
+    Bronze.start(spark, c).awaitTermination()
     val silver = spark.read.schema(Schemas.silver).parquet(c.silverDir("tilt"))
       .select("bridge_id", "name", "location", "installation_date")
       .as[(Int, String, String, String)].collect().sortBy(_._1).toSeq
@@ -304,10 +302,49 @@ class PipelineE2ESpec extends SparkSuite {
     bridges("1,Alpha,North,2001-01-01", "4,Gamma,East,2004-04-04", "4,Delta,West,2005-05-05")
     landRow("d.json", 4)
     val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-      Bronze.start(spark, c, "tilt").awaitTermination())
+      Bronze.start(spark, c).awaitTermination())
     val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
       .map(_.getMessage).mkString("\n")
     assert(messages.contains("repeats bridge_id 4"), messages)
     assert(spark.read.schema(Schemas.silver).parquet(c.silverDir("tilt")).count() == 3)
+  }
+
+  test("rows route by landing dir; a one-sensor drain leaves the other sensors' rows unchanged") {
+    val root = tmpDir("graft-route")
+    val c = PipelineConfig.under(root, s"$root/bridges.csv")
+    Generator.writeBridgesCsv(c.bridgesCsv)
+    var fileNo = 0
+    /** One file of (second, sensor_type, value) rows, bridge 1, under `sensor`'s landing dir. */
+    def land(sensor: String, rows: (Int, String, Double)*): Unit = {
+      val dir = new File(s"${c.landingDir(sensor)}/date=2024-03-01")
+      dir.mkdirs()
+      fileNo += 1
+      val w = new FileWriter(new File(dir, s"route-$fileNo.json"))
+      try rows.foreach { case (sec, sensorType, v) =>
+        val t = f"2024-03-01T00:00:$sec%02d.000Z"
+        w.write(s"""{"event_time": "$t", "bridge_id": 1, "sensor_type": "$sensorType", """ +
+          s""""value": $v, "ingest_time": "$t"}""" + "\n")
+      } finally w.close()
+    }
+    def values(path: String): Seq[Double] =
+      spark.read.schema(Schemas.bronze).parquet(path).select("value").collect()
+        .map(_.getDouble(0)).toSeq.sorted
+    def tables(sensor: String): Seq[Seq[Double]] =
+      Seq(c.bronzeDir(sensor), c.silverDir(sensor), c.silverRejectedDir(sensor)).map(values)
+
+    // landed under tilt, labelled temperature: 85.0 is a valid tilt and an
+    // out-of-range temperature, -5.0 the other way round
+    land("tilt", (10, "temperature", 85.0), (11, "temperature", -5.0))
+    land("temperature", (10, "temperature", 20.0))
+    land("vibration", (10, "vibration", 1.0))
+    Pipelines.drainOnce(spark, c)
+    assert(tables("tilt") == Seq(Seq(-5.0, 85.0), Seq(85.0), Seq(-5.0)))
+    assert(tables("temperature") == Seq(Seq(20.0), Seq(20.0), Nil))
+
+    val before = Schemas.sensors.map(s => s -> tables(s)).toMap
+    land("vibration", (20, "vibration", 2.0))
+    Pipelines.drainOnce(spark, c)
+    Seq("temperature", "tilt").foreach(s => assert(tables(s) == before(s), s))
+    assert(tables("vibration") == Seq(Seq(1.0, 2.0), Seq(1.0, 2.0), Nil))
   }
 }

@@ -76,7 +76,7 @@ class GoldEquivalenceSpec extends SparkSuite {
     }
 
   private def drainUpstream(cfg: PipelineConfig): Unit =
-    Bronze.startAll(spark, cfg).foreach(_.awaitTermination())
+    Bronze.start(spark, cfg).awaitTermination()
 
   private type GoldRow = (Int, java.sql.Timestamp, java.sql.Timestamp, Double, Double, Double)
   private def goldRows(dir: String): Seq[GoldRow] = {

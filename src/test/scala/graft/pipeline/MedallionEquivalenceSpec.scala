@@ -12,9 +12,9 @@ import graft.ops.Quality
   * query writes bronze and its quarantine, then a silver query lists the
   * bronze sink as a parquet file stream and writes silver and its
   * quarantine, each under its own checkpoint. Kept here only as the oracle
-  * the one-query shape is checked against, and to leave a silver
-  * checkpoint behind for the upgrade test. Query names carry a `ref_`
-  * prefix. */
+  * the one-query shape is checked against, and to leave per-sensor bronze
+  * and silver checkpoints behind for the upgrade test. Query names carry a
+  * `ref_` prefix. */
 object MedallionReference {
 
   /** One micro-batch, cached once: valid rows (after `enrich`) to the
@@ -83,10 +83,13 @@ object MedallionReference {
   }
 }
 
-/** One query per sensor from landing to silver writes the same bronze,
-  * silver, both quarantines and gold as the two-query reference, drain
-  * step by drain step, and refuses to start over a silver checkpoint the
-  * reference left behind. */
+/** One bronze query for all three sensors from landing to silver writes
+  * the same bronze, silver, both quarantines and gold as the two-query-
+  * per-sensor reference, drain step by drain step, and refuses to start
+  * over a per-sensor checkpoint the reference left behind. With
+  * `dedupeLanding` its dedupe watermark is the slowest sensor's where the
+  * reference's is each sensor's own; these drains land no row between the
+  * two, and `StreamingDedupSpec` pins a row that is. */
 class MedallionEquivalenceSpec extends SparkSuite {
 
   /** The one-query DAG under `<root>`, the reference under `<root>/ref`,
@@ -219,20 +222,18 @@ class MedallionEquivalenceSpec extends SparkSuite {
     step("third drain")
     assert(gold(fused).size == 3)
 
-    assert(fusedQueries.map(_.name).toSet ==
-      Set("bronze_temperature", "bronze_vibration", "bronze_tilt", "gold_bridge_metrics"))
+    assert(fusedQueries.map(_.name).toSet == Set("bronze", "gold_bridge_metrics"))
     val read = fusedQueries.flatMap(_.recentProgress.toSeq.flatMap(_.sources.toSeq.map(_.description)))
     assert(read.exists(_.contains(fused.landingRoot)) && read.exists(_.contains(fused.silverRoot)))
     assert(!read.exists(_.contains(fused.bronzeRoot)), read.distinct.mkString("\n"))
-    assert(new File(fused.checkpointRoot).list().toSet ==
-      Set("bronze_temperature", "bronze_vibration", "bronze_tilt", "gold"))
+    assert(new File(fused.checkpointRoot).list().toSet == Set("bronze", "gold"))
   }
 
-  test("one query per sensor writes what bronze plus silver queries write, dedupe off") {
+  test("one bronze query equals the reference DAG, dedupe off") {
     equivalence(dedupe = false)
   }
 
-  test("one query per sensor writes what bronze plus silver queries write, dedupe on") {
+  test("one bronze query equals the reference DAG, dedupe on") {
     equivalence(dedupe = true)
   }
 
@@ -251,13 +252,37 @@ class MedallionEquivalenceSpec extends SparkSuite {
       Seq(cfg.bronzeRoot, cfg.silverRoot, cfg.goldRoot)
         .flatMap(r => walk(new File(r))).map(_.getPath).toSet
     }
-    val before = files()
-    assert(before.nonEmpty)
     land(cfg, ("tilt", 1, "00:30", "3.0"))
-    val err = intercept[IllegalStateException](Pipelines.drainOnce(spark, cfg))
-    assert(err.getMessage.contains(cfg.checkpoint("silver_temperature")), err.getMessage)
-    assert(err.getMessage.contains("Drain once with the previous version"), err.getMessage)
-    assert(spark.streams.active.isEmpty)
-    assert(files() == before, "a sink changed while a silver checkpoint was left")
+    def refused(checkpoint: String): Unit = {
+      val before = files()
+      assert(before.nonEmpty)
+      val err = intercept[IllegalStateException](Pipelines.drainOnce(spark, cfg))
+      assert(err.getMessage.contains(cfg.checkpoint(checkpoint)), err.getMessage)
+      assert(err.getMessage.contains("Drain once with the previous version"), err.getMessage)
+      assert(spark.streams.active.isEmpty)
+      assert(files() == before, s"a sink changed while $checkpoint was left")
+    }
+    refused("silver_temperature")
+
+    // the README's upgrade: drain once with the previous version, move the
+    // drained landing files out, remove the per-sensor checkpoints. The
+    // per-sensor bronze checkpoints alone still refuse: a new `bronze`
+    // checkpoint would read every landing file into bronze and silver again
+    MedallionReference.drainOnce(spark, cfg)
+    def remove(prefix: String): Unit = Schemas.sensors.foreach(s =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(cfg.checkpoint(s"$prefix$s"))))
+    remove("silver_")
+    refused("bronze_temperature")
+    org.apache.commons.io.FileUtils.moveDirectory(new File(cfg.landingRoot),
+      new File(s"${cfg.landingRoot}-drained"))
+    remove("bronze_")
+    land(cfg, ("temperature", 1, "00:40", "21.0"))
+    Pipelines.drainOnce(spark, cfg)
+    def times(dir: String): Seq[String] = spark.read.schema(Schemas.bronze).parquet(dir)
+      .select(date_format(col("event_time_ts"), "mm:ss")).collect().map(_.getString(0)).toSeq.sorted
+    for (s <- Schemas.sensors; dir <- Seq(cfg.bronzeDir(s), cfg.silverDir(s))) assert(times(dir) ==
+      Map("temperature" -> Seq("00:10", "00:40"), "vibration" -> Seq("00:10", "00:20"),
+        "tilt" -> Seq("00:10", "00:30"))(s), dir)
+    assert(new File(cfg.checkpointRoot).list().toSet == Set("bronze", "gold"))
   }
 }
